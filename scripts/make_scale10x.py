@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Synthesize a ~sf1 dataset by replicating the sf0.1 tables REP times
 with key remapping — the local[32] stand-in for a 10× scale-up run of
-the whole HEADLINE suite (SCALE.md's full-suite rehearsal row).
+the whole headline query set (SCALE.md, "Full-suite 10× rehearsal").
 
 Replication is NOT naive file copying: copying the same parquet 10×
 duplicates every key, which fans joins out quadratically (each customer
@@ -19,8 +19,9 @@ scan+rank; identical vectors across replicas don't change the work per
 row).
 
 Usage: python scripts/make_scale10x.py [out_dir] [replicas]
-Default out: /dev/shm/sparkgraft-sf1.0 (dir name must end in the SF so
-bench.py parses it). DuckDB does the rewrite — no Spark session needed.
+Default out: /dev/shm/sparkgraft-sf1.0 (the sf1 dir scale_sweep.py and
+certify.py read by default). DuckDB does the rewrite — no Spark session
+needed.
 """
 
 from __future__ import annotations

@@ -67,7 +67,8 @@ def main() -> None:
     sc = spark.sparkContext
 
     def total_task_ms() -> int:
-        # cumulative executorRunTime over all stages (bench.py protocol)
+        # cumulative executorRunTime over all stages (the round bench's
+        # protocol, BASELINE.md)
         store = sc._jsc.sc().statusStore()
         seq = store.stageList(
             sc._jvm.java.util.ArrayList(),

@@ -4,11 +4,11 @@ entry at sf0.1 and at the synthesized ~sf1 dataset
 (``scripts/make_scale10x.py``) in one session and flag super-linear
 outliers.
 
-The HEADLINE-only 10× rehearsal caught a real scale bug (the shuffled
-multi-query sort-merge join); this sweep applies the same test to all
-208 entries — anything whose wall grows much faster than the data is
-either genuinely super-linear work (the documented O(n²) baselines) or
-a plan bug worth reading.
+The headline-only 10× rehearsal (SCALE.md, "Full-suite 10× rehearsal")
+caught a real scale bug (the shuffled multi-query sort-merge join); this
+sweep applies the same test to all 208 entries — anything whose wall
+grows much faster than the data is either genuinely super-linear work
+(the documented O(n²) baselines) or a plan bug worth reading.
 
 Entries documented as exact-quadratic correctness baselines are skipped
 at sf1 with the reason printed (their cost IS the point — the scaled
@@ -85,27 +85,10 @@ QUADRATIC_WITH_CAPPED_TWIN = {
 def main() -> int:
     if not os.path.isdir(SF1):
         raise SystemExit(f"{SF1} missing — run scripts/make_scale10x.py")
-    from pyspark.sql import SparkSession
-
     from similarity_search_with_hadoop_mapreduce_spark.registry import QUERIES
+    from similarity_search_with_hadoop_mapreduce_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        )
-        .config("spark.driver.memory", "10g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.local.dir", "/dev/shm/spark-local")
-        .config("spark.locality.wait", "0")
-        .config("spark.scheduler.revive.interval", "1ms")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_session("scale-sweep", master="local[32]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     def run_once(fn, sf_dir) -> float | None:

@@ -261,8 +261,8 @@ def gapfill_locf(
     at-scale-enormous event table) broadcast into the plan; the literal
     path removes that subquery, its broadcast-nested-loop join, two
     scheduling barriers, and the two extra columns riding through the
-    window exchange — measured 0.485 → 0.288 s solo at sf0.1
-    (scripts/ab_gapfill.py, r10), result-identical.
+    window exchange — measured 0.485 → 0.288 s solo at sf0.1 (r10 A/B,
+    recorded in SCALE.md's gap-fill row), result-identical.
 
     Skew note (100 TB): a long gap after one observed row explodes in
     that row's task, and the window partitions by key alone — both are
@@ -539,7 +539,7 @@ def gapfill_locf_auto(
     plan, :func:`_is_bare_scan`; 1:1 projections cannot drop rows).
     When exact, the span doubles as :func:`gapfill_locf`'s ``bounds``
     literals, deleting the bounds subquery + broadcast join from the
-    global plan (measured -41% solo, scripts/ab_gapfill.py).
+    global plan (measured -41% solo, r10; OPTIMIZATION_r12.md §5).
     """
     memo = _span_cache.setdefault(events, {})
     if ts_col in memo:

@@ -374,9 +374,9 @@ def ngram_frequencies_arrow(
     flush_vocab: int = 1_000_000,
 ) -> DataFrame:
     """PRODUCTION twin of :func:`ngram_frequencies` — same contract as
-    the hash families' xxhash64 twins (bench ``production_queries``;
-    the native entry stays the oracle-gated surface, result-equality is
-    pytest-pinned).
+    the hash families' xxhash64 twins (timed as the round bench's
+    ``production_queries`` series, BASELINE.md; the native entry stays
+    the oracle-gated surface, result-equality is pytest-pinned).
 
     The per-document trigram work (tokenize → trigram → distinct) runs
     as a ``mapInPandas`` partial-count pass: each Arrow batch folds its
@@ -787,7 +787,7 @@ def dup_span_stats(
     near-duplicates in the fixture corpus light up at any w).
 
     Plan (unique-span attribution, single tokenize, join-free — the r9
-    measured A/B winner, ``scripts/ab_dup_spans.py``): spans are
+    measured A/B winner, recorded in SCALE.md's dup-span row): spans are
     distinct per doc, so a span with global document frequency 1 belongs
     to exactly ONE doc — ``min(doc_id)`` in the same partial-aggregated
     ``groupBy`` pass names it, and ``dup_spans = n_spans - n_uniq``.

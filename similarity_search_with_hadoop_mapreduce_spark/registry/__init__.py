@@ -6,7 +6,7 @@ the same parquet tables.
 Two surfaces are exported:
 
 - ``QUERIES`` / ``ORACLES`` — the FULL fine-grained registry (every
-  operator individually), used by tests, the bench, and local debugging.
+  operator individually), used by tests, scripts, and local debugging.
 - ``CURATED_QUERIES`` / ``CURATED_ORACLES`` — the ordered ≤50-entry
   surface ``__spark_entry__`` hands the driver. The driver's correctness
   artifact records at most ~50 rows per round (r1 stopped at exactly the

@@ -233,14 +233,10 @@ _ASSIGNED_CTE = f"""assigned AS MATERIALIZED (
 )"""
 
 
-def _ivf_topk_sql(cents_cte: str) -> str:
-    """The ann_ivf_topk oracle with a pluggable ``cents`` source: the
-    registered oracle replays Lloyd training inline; the bench variant
-    reads a pre-materialized codebook table so DuckDB's timed run matches
-    what the Spark side times (a build-time-trained cached codebook)."""
-    return f"""
+# The ann_ivf_topk oracle: replays Lloyd training inline, then probes.
+_IVF_TOPK_ORACLE = f"""
 WITH n AS (SELECT vec_id, embedding, {_NORM} AS nrm FROM embeddings),
-{cents_cte},
+{_kmeans_cents_cte()},
 {_ASSIGNED_CTE},
 q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM n WHERE vec_id = 0),
 probed AS (
@@ -251,64 +247,6 @@ probed AS (
 SELECT a.vec_id, a.centroid_id,
        round({_DOT_AQ} / (a.nrm * q.q_nrm), 6) AS cosine
 FROM assigned a JOIN probed USING (centroid_id), q
-WHERE a.vec_id != 0
-ORDER BY cosine DESC, a.vec_id
-LIMIT {_K}
-"""
-
-
-def ivf_cents_materialize_sql() -> str:
-    """SELECT that computes the trained codebook (the oracle's Lloyd
-    replay) — run once, untimed, into a temp table by the DuckDB bench,
-    mirroring the Spark side's build-time-trained cached codebook."""
-    return (
-        f"WITH n AS (SELECT vec_id, embedding, {_NORM} AS nrm FROM embeddings),\n"
-        + _kmeans_cents_cte()
-        + "\nSELECT centroid_id, c_emb, c_nrm FROM cents"
-    )
-
-
-def ivf_topk_oracle_materialized(cents_table: str = "cents_mat") -> str:
-    """ann_ivf_topk oracle reading the codebook from ``cents_table``
-    (created via :func:`ivf_cents_materialize_sql`). Result-equal to the
-    registered oracle — pinned by tests/test_bench_symmetry.py."""
-    return _ivf_topk_sql(
-        f"cents AS (SELECT centroid_id, c_emb, c_nrm FROM {cents_table})"
-    )
-
-
-def ivf_assigned_materialize_sql() -> str:
-    """SELECT that computes the full IVF assignment (every vector mapped
-    to its trained centroid) — the inverted-list index itself. Run once,
-    untimed, by the DuckDB bench, mirroring the Spark side's persisted
-    index build (:func:`_ivf_index`)."""
-    return (
-        f"WITH n AS (SELECT vec_id, embedding, {_NORM} AS nrm FROM embeddings),\n"
-        + _kmeans_cents_cte()
-        + ",\n"
-        + _ASSIGNED_CTE
-        + "\nSELECT vec_id, embedding, nrm, centroid_id FROM assigned"
-    )
-
-
-def ivf_topk_oracle_prebuilt(
-    assigned_table: str = "assigned_mat", cents_table: str = "cents_mat"
-) -> str:
-    """ann_ivf_topk oracle serving from prebuilt index tables (assignment
-    + codebook): probe selection and scoring only, matching what the Spark
-    side times against its persisted index. Result-equal to the
-    registered oracle — pinned by tests/test_bench_symmetry.py."""
-    return f"""
-WITH q AS (SELECT embedding AS q_emb, nrm AS q_nrm
-           FROM {assigned_table} WHERE vec_id = 0),
-probed AS (
-  SELECT c.centroid_id FROM {cents_table} c, q
-  ORDER BY round({_DOT_CQ} / (c.c_nrm * q.q_nrm), 6) DESC, c.centroid_id
-  LIMIT {_NPROBE}
-)
-SELECT a.vec_id, a.centroid_id,
-       round({_DOT_AQ} / (a.nrm * q.q_nrm), 6) AS cosine
-FROM {assigned_table} a JOIN probed USING (centroid_id), q
 WHERE a.vec_id != 0
 ORDER BY cosine DESC, a.vec_id
 LIMIT {_K}
@@ -385,7 +323,7 @@ def _ivf_probe(spark: SparkSession, sf_dir: str, qid) -> tuple:
     return d[key]
 
 
-@register("ann_ivf_topk", oracle=_ivf_topk_sql(_kmeans_cents_cte()))
+@register("ann_ivf_topk", oracle=_IVF_TOPK_ORACLE)
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-10 against the Lloyd-trained codebook
     (:func:`operators.ann.kmeans_codebook`, 2 deterministic iterations —

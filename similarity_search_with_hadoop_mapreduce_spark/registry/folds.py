@@ -22,7 +22,7 @@ verified engine-identical (VARCHAR, BIGINT→VARCHAR, BOOLEAN→VARCHAR,
 midnight-safe TIMESTAMP→VARCHAR).
 
 The full fine-grained registry stays importable (``registry.QUERIES``) for
-tests and the bench; ``registry.CURATED_QUERIES`` is what
+tests and scripts; ``registry.CURATED_QUERIES`` is what
 ``__spark_entry__.queries()`` hands the driver. COVERAGE.md maps every
 folded member to its fold.
 """

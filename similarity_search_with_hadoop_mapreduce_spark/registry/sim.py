@@ -481,7 +481,7 @@ def q_flagship_multi_query_shuffled(spark: SparkSession, sf_dir: str) -> DataFra
     terms — the path the broadcast guard takes when the query battery's
     term volume exceeds the driver budget. Result-identical to
     flagship_multi_query (same oracle); registered so the above-threshold
-    path has its own latency record in the bench (VERDICT r3 item 6)."""
+    path has its own entry and plan test (VERDICT r3 item 6)."""
     return similarity_multi_query(
         _docs(spark, sf_dir), [0, 1, 2, 3, 4], broadcast_term_limit=0
     )

@@ -127,42 +127,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# fan_out memo: input DataFrame -> {min_partitions: fanned-out DataFrame}.
-# load_table returns the cached object per (session, table), so repeated
+# fan_out memo: input DataFrame -> fanned-out DataFrame. load_table
+# returns the cached object per (session, table), so repeated
 # fan_out(corpus) calls hit this and skip the plan-stats probe. Keyed
 # weakly on the input df object (DataFrame doesn't override
 # __eq__/__hash__, so this is identity).
-_fan_cache: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
+_fan_cache: "weakref.WeakKeyDictionary[DataFrame, DataFrame]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def _size_bytes(value: str) -> int:
-    """Parse a Spark byte-size conf string ('128MB', '134217728b', '1g').
-    Fallback for when the JVM parser (JavaUtils.byteStringAsBytes — the
-    authority on what Spark accepts, used first by fan_out) is not
-    reachable."""
-    v = value.strip().lower()
-    for suffix, mult in (
-        ("tb", 2**40), ("gb", 2**30), ("mb", 2**20), ("kb", 2**10),
-        ("t", 2**40), ("g", 2**30), ("m", 2**20), ("k", 2**10), ("b", 1),
-    ):
-        if v.endswith(suffix):
-            return int(float(v[: -len(suffix)]) * mult)
-    return int(v)
-
-
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition a *narrow* scan up to the cluster's parallelism before
     expression-heavy map work (shingling, hashing, decoding).
 
@@ -174,9 +149,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 
     The under-split decision reads the *logical plan's* size statistics
     (for file sources: the already-listed file sizes) against
-    ``min_partitions × maxPartitionBytes`` — an input smaller than that
-    cannot yield ``min_partitions`` splits. This is driver-side metadata
-    only: no ``df.rdd`` conversion, no physical planning, no job.
+    ``defaultParallelism × spark.sql.files.maxPartitionBytes`` — an input
+    smaller than that cannot yield that many splits. This is driver-side
+    metadata only: no ``df.rdd`` conversion, no physical planning, no job.
 
     The byte heuristic assumes a byte-range-splittable source (parquet,
     ORC, plain CSV/JSON/text). Non-splittable scans — ``wholetext``
@@ -186,25 +161,17 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     time (``load_corpus_dir`` does: it repartitions when the listing has
     fewer files than the cluster has cores).
     """
-    memo = _fan_cache.setdefault(df, {})
-    if min_partitions in memo:
-        return memo[min_partitions]
+    out = _fan_cache.get(df)
+    if out is not None:
+        return out
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    conf_val = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    try:
-        max_pb = int(
-            spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(conf_val)
-        )
-    except Exception:
-        try:
-            max_pb = _size_bytes(conf_val)
-        except ValueError:
-            max_pb = 128 * 2**20
+    target = spark.sparkContext.defaultParallelism
+    # typed SQLConf getter: Spark validates the byte string at conf.set
+    # time, so this is always a parsed, legal value
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     out = df if plan_bytes >= target * max_pb else df.repartition(target)
-    memo[min_partitions] = out
+    _fan_cache[df] = out
     return out
 
 

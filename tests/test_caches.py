@@ -160,3 +160,29 @@ def test_adc_rejects_book_geometry_mismatch():
     wide_book = [(0, [1.0, 2.0, 3.0], 1.0)]
     with pytest.raises(ValueError, match="books/geometry mismatch"):
         _adc_exprs([wide_book, wide_book], [1.0, 2.0, 3.0, 4.0], 1.0, 2, 1)
+
+
+def test_fan_out_follows_max_partition_bytes(spark):
+    """fan_out repartitions only an input smaller than
+    ``defaultParallelism × spark.sql.files.maxPartitionBytes``: the 64 KB
+    sf0.001 documents file is under-split at the 128 MB default, and
+    stops being so once the split size drops below file size ÷ cores."""
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import (
+        fan_out,
+    )
+
+    path = f"{SF}/documents.parquet"
+    parallelism = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(path)
+    fanned = fan_out(docs)
+    assert fanned is not docs
+    assert "Repartition" in fanned._jdf.queryExecution().optimizedPlan().toString()
+
+    split = os.path.getsize(path) // parallelism // 2
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        # a fresh frame: fan_out memoizes per DataFrame object
+        fresh = spark.read.parquet(path)
+        assert fan_out(fresh) is fresh
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")

@@ -273,7 +273,7 @@ def test_dup_span_stats_no_window_skew(spark):
     every occurrence of a hot boilerplate span in one task's sort run
     and window skew is not AQE-splittable) and NO join anywhere (the r8
     plan's broadcast spine join was redundant coverage — every doc rides
-    its own sentinel — and measurably slower, scripts/ab_dup_spans.py).
+    its own sentinel — and measurably slower: the r9 A/B in SCALE.md).
     Map-side combine collapses a universally-common span to one row per
     task before the exchange."""
     from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
@@ -351,13 +351,40 @@ def test_scale_audit_detects_killers(spark):
     assert_scalable(theta, allow=("nested_loop_join",))
 
 
-def test_bench_headline_queries_pass_scale_audit(spark):
-    """Every headline bench query is free of fatal plan shapes — no
-    cartesian products, no nested-loop joins, no row-at-a-time Python
-    UDFs anywhere in the suite that represents this engine's perf story.
-    (Warn-level findings are asserted empty too: the suite's top-k
-    queries use TakeOrderedAndProject, never a global sort.)"""
-    from bench import HEADLINE
+# The headline entries: the flagship similarity queries plus representative
+# relational, window, dedup, ANN, text and temporal entries.
+HEADLINE = (
+    "flagship_containment_parity",
+    "flagship_topk",
+    "flagship_multi_query",
+    "flagship_multi_query_shuffled",
+    "events_gapfill_locf",
+    "q1_pricing_summary",
+    "q1_pricing_summary_production",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "q6_forecast_revenue",
+    "q18_large_volume_customer",
+    "join_theta_range",
+    "window_row_number_topn",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "ann_cosine_topk",
+    "ann_ivf_topk",
+    "text_quality",
+    "text_top_ngrams",
+    "text_dup_spans",
+    "events_sliding_window",
+)
+
+
+def test_headline_queries_pass_scale_audit(spark):
+    """Every headline query is free of fatal plan shapes — no cartesian
+    products, no nested-loop joins, no row-at-a-time Python UDFs anywhere
+    in the set that represents this engine's perf story. (Warn-level
+    findings are asserted empty too: the top-k queries use
+    TakeOrderedAndProject, never a global sort.)"""
     from similarity_search_with_hadoop_mapreduce_spark.plans import scale_audit
     from similarity_search_with_hadoop_mapreduce_spark.registry import QUERIES
 

@@ -247,24 +247,6 @@ def test_full_registry_oracles_still_complete():
     assert missing == [], missing
 
 
-def test_bench_headline_names_resolve_with_oracles():
-    # the perf gate compares bench.py (Spark) against the same names'
-    # oracle SQL in scripts/bench_duckdb.py — every headline name must
-    # exist in the full registry with an oracle
-    from bench import HEADLINE, _production_impls
-
-    for name in HEADLINE:
-        assert name in QUERIES, name
-        assert name in ORACLES, name
-    # production-mode variants report under real registry-entry names;
-    # all but q1 are twins of a HEADLINE entry (q1's roles inverted in
-    # r12 — the twin IS the headline entry and the side series keeps the
-    # decimal certification entry visible, see BASELINE.md)
-    for name in _production_impls():
-        assert name in QUERIES and name in ORACLES, name
-        assert name in HEADLINE or name == "q1_pricing_summary", name
-
-
 def test_curated_schemas_are_driver_representable(spark):
     """Every curated entry must expose SCALAR columns only: the driver's
     correctness harness canonicalizes results through a pandas sort,
