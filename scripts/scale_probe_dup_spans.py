@@ -45,8 +45,8 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from similarity_search_with_hadoop_mapreduce_spark.functions.text import stage_tokens
 from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
-    _stage_tokens,
     dup_span_stats,
     remove_dup_spans,
 )
@@ -76,7 +76,7 @@ def corpus(spark: SparkSession, n: int):
 
 def window_formulation(documents):
     """The pre-r7 plan, kept here only as the probe's contrast arm."""
-    base = _stage_tokens(documents, "text", "doc_id")
+    base = stage_tokens(documents, "text", "doc_id")
     span = "concat_ws(' ', " + ", ".join(
         f"element_at(_toks, i + {j})" for j in range(W)
     ) + ")"

@@ -33,7 +33,9 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import shingles
+    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
+        staged_shingles_frame,
+    )
     from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
         similarity_multi_query,
     )
@@ -58,9 +60,8 @@ def main() -> int:
     # the battery's term volume crosses the default broadcast budget
     BUDGET = 2_000_000
     counts = (
-        docs.select(
-            "doc_id", F.size(F.array_distinct(shingles(F.col("text")))).alias("n")
-        )
+        staged_shingles_frame(docs, "text", alias="s")
+        .select("doc_id", F.size("s").alias("n"))
         .orderBy("doc_id")
         .collect()
     )

@@ -139,22 +139,22 @@ def main() -> None:
         bloom_build,
         bloom_probe,
     )
-    from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
-        _ngrams_attr_sql,
-        _stage_tokens,
+    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
+        ngrams_attr_sql,
+        stage_tokens,
     )
 
     corpus = zd.filter("doc_id % 17 <> 0")
     bench = zd.filter("doc_id % 17 = 0")
     bg = (
-        _stage_tokens(bench, "text", "doc_id")
+        stage_tokens(bench, "text", "doc_id")
         .select(F.explode(F.array_distinct(
-            F.expr(_ngrams_attr_sql("_toks", 3)))).alias("gram"))
+            F.expr(ngrams_attr_sql("_toks", 3)))).alias("gram"))
         .distinct()
     )
-    stream = _stage_tokens(corpus, "text", "doc_id").select(
+    stream = stage_tokens(corpus, "text", "doc_id").select(
         F.explode(F.array_distinct(
-            F.expr(_ngrams_attr_sql("_toks", 3)))).alias("gram")
+            F.expr(ngrams_attr_sql("_toks", 3)))).alias("gram")
     )
     total = stream.count()
     out["decon_gram_stream"] = total

@@ -1,7 +1,6 @@
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     java_split_tokens,
-    shingles,
-    trigrams,
+    staged_shingles_frame,
 )
 from similarity_search_with_hadoop_mapreduce_spark.functions.vector import (
     cosine_similarity,
@@ -11,8 +10,7 @@ from similarity_search_with_hadoop_mapreduce_spark.functions.vector import (
 
 __all__ = [
     "java_split_tokens",
-    "trigrams",
-    "shingles",
+    "staged_shingles_frame",
     "cosine_similarity",
     "dot",
     "l2_norm",

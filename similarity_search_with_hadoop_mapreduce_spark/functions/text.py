@@ -1,16 +1,21 @@
-"""Text operators as native column expressions (no Python UDFs).
+"""The one tokenizer and the one n-gram construction (no Python UDFs).
 
-Everything here stays inside whole-stage codegen: ``split`` /
+Every text operator runs the same staged path: :func:`stage_tokens`
+projects the Java-split token array into its own column ``_toks``, and
+:func:`ngrams_attr_sql` builds word n-grams over that attribute
+(:func:`staged_shingles_frame` is the trigram-set case). ``split`` /
 ``transform`` / ``sequence`` / ``array_distinct`` are JVM expressions, so
 shingling a 100 TB corpus is a map-only stage with no Python boundary.
+Expressions are rendered as SQL text and parsed once: building them node
+by node as ``Column`` objects costs a Py4J round trip per operator.
 
 Reference parity notes (SURVEY.md §2.3):
 
 - Q6: tokenization is case-sensitive ``\\W+`` with **Java**
   ``String.split`` (limit=0) semantics — leading empty token preserved,
-  trailing empty tokens removed.  Spark's ``F.split`` uses the same Java
-  regex engine but with limit=-1 semantics (trailing empties kept), so
-  :func:`java_split_tokens` trims them explicitly.
+  trailing empty tokens removed.  Spark's ``split`` uses the same Java
+  regex engine (ASCII ``\\W``) but with limit=-1 semantics (trailing
+  empties kept), so :func:`java_split_tokens_sql` trims them explicitly.
 - T3: shingles are word trigrams ``w[i] w[i+1] w[i+2]``; <3 tokens ⇒
   empty set (``BookQuery.java:37-40,66-70``).
 - T4: shingle sets are distinct per document (``HashSet``,
@@ -21,10 +26,10 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_PATTERN = r"\W+"
+from similarity_search_with_hadoop_mapreduce_spark.sources.tables import fan_out
 
 _PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
@@ -32,33 +37,22 @@ _PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 def _ident_sql(c: str) -> str:
     """Backtick-quote a plain identifier so reserved words (``from``,
     ``select``) resolve as column names; anything else (dotted paths,
-    function calls, full expressions) is passed through verbatim — names
-    that need quoting beyond this (spaces, backticks) must come in as
-    ``Column`` objects."""
+    function calls, full expressions) is passed through verbatim."""
     return f"`{c}`" if _PLAIN_IDENT.match(c) else c
 
 
-def _pattern_lit(pattern: str) -> str:
-    """Render a regex as a Spark SQL string literal: backslashes doubled
-    (SQL-literal unescape restores them) and single quotes escaped so a
-    quote inside the pattern cannot terminate the literal."""
-    return "'" + pattern.replace("\\", "\\\\").replace("'", "\\'") + "'"
+def java_split_tokens_sql(c: str) -> str:
+    """``c.split("\\\\W+")`` with Java ``String.split`` semantics, as SQL.
 
-# ---------------------------------------------------------------------------
-# SQL-text twins: the same expression trees rendered as SQL strings.
-#
-# Passing a *string* (column name or SQL expression) to the public
-# functions routes through these and builds the whole pipeline with ONE
-# sql parse. The per-node Column construction below costs a Py4J round
-# trip per operator (~0.1-0.3 s of driver time per query for the fused
-# shingle pipeline, measured); the parsed trees are identical —
-# tests/test_text_functions.py pins SQL == Column on edge cases, and every
-# oracle-checked entry runs the SQL path.
-# ---------------------------------------------------------------------------
-
-
-def java_split_tokens_sql(c: str, pattern: str = TOKEN_PATTERN) -> str:
-    t = f"split({_ident_sql(c)}, {_pattern_lit(pattern)}, -1)"
+    Java (limit=0) removes *trailing* empty strings but keeps a leading
+    one (``BookQuery.java:35,64,126``).  With ``\\W+``, empty tokens can
+    only appear at the ends, so after Spark's limit=-1 split we drop: 2
+    trailing empties when the whole string was delimiters (Java:
+    ``"!!!".split("\\\\W+") == []``), 1 when the string merely ends with
+    a delimiter.  A no-match input (e.g. ``""``) keeps Java's
+    single-element ``[""]`` result.  ``c`` is a column name or a SQL
+    expression."""
+    t = f"split({_ident_sql(c)}, '\\\\W+', -1)"
     n = f"size({t})"
     drop = (
         f"CASE WHEN {n} <= 1 THEN 0 "
@@ -69,134 +63,57 @@ def java_split_tokens_sql(c: str, pattern: str = TOKEN_PATTERN) -> str:
     return f"slice({t}, 1, CAST({n} - ({drop}) AS INT))"
 
 
-def trigrams_sql(tok: str) -> str:
-    n = f"size({tok})"
-    z = (
-        f"arrays_zip(slice({tok}, 1, {n} - 2), "
-        f"slice({tok}, 2, {n} - 2), slice({tok}, 3, {n} - 2))"
+def java_split_tokens(c: str) -> Column:
+    """:func:`java_split_tokens_sql` as a Column (one sql parse)."""
+    return F.expr(java_split_tokens_sql(c))
+
+
+def stage_tokens(documents: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    """Projection-stage the token array: ``(*keep, text_col, _toks)``.
+
+    Consumers of the token array reference it many times (size, stopword
+    filter, length fold, the n-gram lambda ...). Interpreted higher-order
+    functions get no whole-stage-codegen subexpression elimination, so
+    inlining the split into every reference re-tokenizes the document per
+    metric — measured 2.1× the CPU of this staged form on the sf0.1
+    corpus. The explicit projection is a real barrier: CollapseProject
+    declines to inline a non-cheap alias that is referenced more than
+    once, so ``_toks`` is computed exactly once per row and reused.
+    ``fan_out`` spreads an under-split scan before the CPU-heavy
+    projections (no-op at real scale)."""
+    return fan_out(documents).select(
+        *keep, text_col, java_split_tokens(text_col).alias("_toks")
     )
-    make = f"transform({z}, x -> concat_ws(' ', x['0'], x['1'], x['2']))"
+
+
+def ngrams_attr_sql(col: str, n: int) -> str:
+    """Word ``n``-grams over a STAGED token attribute ``col`` via
+    ``sequence + element_at``; ``< n`` tokens ⇒ ``[]``.
+
+    ONLY valid when ``col`` is a materialized attribute (see
+    :func:`stage_tokens`): with an inline expression, the interpreted
+    lambda would re-evaluate the split per index — O(n²) per document."""
+    parts = ", ".join(
+        [f"element_at({col}, i)"]
+        + [f"element_at({col}, i + {j})" for j in range(1, n)]
+    )
     return (
-        f"CASE WHEN {n} >= 3 THEN {make} "
+        f"CASE WHEN size({col}) >= {n} THEN "
+        f"transform(sequence(1, size({col}) - {n - 1}), "
+        f"i -> concat_ws(' ', {parts})) "
         f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-
-
-def trigrams_attr_sql(col: str) -> str:
-    """Trigrams over a BARE COLUMN of tokens via sequence + element_at —
-    cheaper than the zip formulation (no slice/struct-array allocation)
-    but ONLY valid when ``col`` is a materialized attribute: with an
-    inline expression, the interpreted lambda would re-evaluate it per
-    index (O(n²) per document — see :func:`trigrams`). Used by
-    :func:`staged_shingles_frame`, which guarantees the staging;
-    result-equal to :func:`trigrams_sql` (pinned in
-    tests/test_text_functions.py). A chained-``zip_with`` variant was
-    A/B'd at sf0.1 (r5): equal min, differences inside the suite's
-    noise band — this form is kept as the simpler one."""
-    return (
-        f"CASE WHEN size({col}) >= 3 THEN "
-        f"transform(sequence(1, size({col}) - 2), "
-        f"i -> concat_ws(' ', element_at({col}, i), "
-        f"element_at({col}, i + 1), element_at({col}, i + 2))) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
-
-
-def shingles_sql(c: str, pattern: str = TOKEN_PATTERN) -> str:
-    return f"array_distinct({trigrams_sql(java_split_tokens_sql(c, pattern))})"
-
-
-def java_split_tokens(text: Column | str, pattern: str = TOKEN_PATTERN) -> Column:
-    """``text.split(pattern)`` with Java ``String.split(regex)`` semantics.
-
-    Java (limit=0) removes *trailing* empty strings but keeps a leading
-    one (``BookQuery.java:35,64,126``).  With a ``\\W+``-style pattern,
-    empty tokens can only appear at the ends, so after Spark's limit=-1
-    split we drop: 2 trailing empties when the whole string was
-    delimiters (Java: ``"!!!".split("\\\\W+") == []``), 1 when the string
-    merely ends with a delimiter.  A no-match input (e.g. ``""``) keeps
-    Java's single-element ``[""]`` result.
-
-    A *string* argument (column name / SQL expression) builds the whole
-    expression with one sql parse (see the SQL-text twins above).
-    """
-    if isinstance(text, str):
-        return F.expr(java_split_tokens_sql(text, pattern))
-    t = F.split(text, pattern, -1)
-    n = F.size(t)
-    drop = (
-        F.when(n <= 1, F.lit(0))  # no-match case: Java returns [original]
-        .when(
-            (F.element_at(t, -1) == "") & (F.element_at(t, n - 1) == ""),
-            F.lit(2),
-        )
-        .when(F.element_at(t, -1) == "", F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    return F.slice(t, 1, (n - drop).cast("int"))
-
-
-def trigrams(tokens: Column) -> Column:
-    """All word trigrams ``tokens[i] + " " + tokens[i+1] + " " + tokens[i+2]``
-    for ``i in [0, len-3]`` (``BookQuery.java:37-40``); <3 tokens ⇒ ``[]``.
-
-    Zips the token array with its two shifted slices and concatenates each
-    triple.  NOT ``transform(sequence(...), i -> element_at(tokens, i)...)``:
-    higher-order lambdas are interpreted (no codegen / no CSE), so an
-    ``element_at(tokens, i)`` body re-evaluates the whole upstream token
-    expression per index — O(n²) per document, ~15× slower end-to-end.
-    Here each slice evaluates ``tokens`` once and the lambda only touches
-    its bound struct argument.
-    """
-    n = F.size(tokens)
-    z = F.arrays_zip(
-        F.slice(tokens, 1, n - 2),
-        F.slice(tokens, 2, n - 2),
-        F.slice(tokens, 3, n - 2),
-    )
-    make = F.transform(
-        z, lambda x: F.concat_ws(" ", x["0"], x["1"], x["2"])
-    )
-    return F.when(n >= 3, make).otherwise(F.array().cast("array<string>"))
 
 
 def staged_shingles_frame(
     documents, text_col: str = "text", alias: str = "s",
-    keep: tuple = ("doc_id",), pattern: str = TOKEN_PATTERN,
+    keep: tuple = ("doc_id",),
 ):
-    """``documents`` → ``(*keep, <alias>=shingle set)`` with the token
-    array STAGED in its own projection.
-
-    The fused :func:`shingles` expression inlines the tokenizer, which
-    :func:`trigrams_sql` references ~7 times (sizes, three slices, the
-    guard) — and interpreted HOF projections do no common-subexpression
-    elimination, so every document tokenizes that many times (the r3
-    verdict measured 9 cpu-s on top-ngrams from exactly this).
-    Materializing the token array first makes those references cheap
-    attribute reads; CollapseProject keeps the stage because the split
-    is non-cheap and multi-referenced (the pq_encode staging rule).
-    ~2.4x CPU cut measured at sf0.1. ``fan_out`` spreads an under-split
-    scan before the CPU-heavy projections (no-op at real scale)."""
-    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import (
-        fan_out,
-    )
-
-    toks = fan_out(documents).select(
-        *keep, F.expr(java_split_tokens_sql(text_col, pattern)).alias("_tok")
-    )
-    return toks.select(
+    """``documents`` → ``(*keep, <alias>=distinct trigram set)`` — the map
+    side of the reference's Mapper1 (``BookQuery.java:64-70``), over the
+    token array staged by :func:`stage_tokens` (~2.4x less CPU than an
+    inline tokenizer at sf0.1)."""
+    return stage_tokens(documents, text_col, *keep).select(
         *keep,
-        F.expr(f"array_distinct({trigrams_attr_sql('_tok')})").alias(alias),
+        F.expr(f"array_distinct({ngrams_attr_sql('_toks', 3)})").alias(alias),
     )
-
-
-def shingles(text: Column | str, pattern: str = TOKEN_PATTERN) -> Column:
-    """Distinct trigram shingle set of a document (T2+T3+T4 fused).
-
-    One projection, fully JVM-side; this is the map-side of the
-    reference's Mapper1 (``BookQuery.java:64-70``). A *string* argument
-    builds the fused pipeline with one sql parse.
-    """
-    if isinstance(text, str):
-        return F.expr(shingles_sql(text, pattern))
-    return F.array_distinct(trigrams(java_split_tokens(text, pattern)))

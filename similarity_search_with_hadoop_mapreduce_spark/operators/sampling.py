@@ -278,7 +278,7 @@ def pack_sequences(
         shard,
         F.size(
             F.filter(
-                java_split_tokens(F.col(text_col)),
+                java_split_tokens(text_col),
                 lambda t: F.length(t) > 0,
             )
         ).alias("n_tokens"),

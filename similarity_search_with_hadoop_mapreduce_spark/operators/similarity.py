@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     staged_shingles_frame,
 )
-from similarity_search_with_hadoop_mapreduce_spark.sources.tables import fan_out
 
 # Memo for similarity_multi_query's broadcast-guard probe: corpus
 # DataFrame identity -> {(query_ids, text_col): n_terms}. The probe is a
@@ -63,18 +62,6 @@ _qterms_cache: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
 )
 
 
-def corpus_shingles(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """``(doc_id, shingle_set)`` — distinct trigram set per document (T2-T4).
-
-    ``fan_out`` spreads an under-split scan across the cluster before the
-    CPU-heavy shingle projection (no-op when the scan already parallelizes);
-    point lookups like the query side still push their filter below it.
-    """
-    return staged_shingles_frame(
-        documents, text_col, alias="shingle_set"
-    )
-
-
 def _query_side(documents: DataFrame, query_doc_id) -> DataFrame:
     """One-row broadcast DataFrame ``(q_set, q_len)`` for the query document.
 
@@ -84,7 +71,7 @@ def _query_side(documents: DataFrame, query_doc_id) -> DataFrame:
     shingle set once is the Spark-native equivalent (O3 in SURVEY §4.1).
     """
     q = (
-        corpus_shingles(documents)
+        staged_shingles_frame(documents, alias="shingle_set")
         .filter(F.col("doc_id") == F.lit(query_doc_id))
         .select(
             F.col("shingle_set").alias("q_set"),
@@ -115,7 +102,7 @@ def similarity_to_query(
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
 
-    docs = corpus_shingles(documents)
+    docs = staged_shingles_frame(documents, alias="shingle_set")
     qside = _query_side(documents, query_doc_id)
 
     if mode == "jaccard":
@@ -234,7 +221,7 @@ def similarity_multi_query(
     Result-identical to the broadcast plan (pytest-pinned with a forced
     threshold); ``stats['multi_query_plan']`` records the choice.
     """
-    docs = corpus_shingles(documents, text_col)
+    docs = staged_shingles_frame(documents, text_col, alias="shingle_set")
     query_ids = list(query_ids)  # materialize: consumed twice (filter + memo key)
     qset = docs.filter(F.col("doc_id").isin(query_ids)).select(
         F.col("doc_id").alias("qid"),

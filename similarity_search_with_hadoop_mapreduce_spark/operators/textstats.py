@@ -14,17 +14,14 @@ driver-side loop.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-    java_split_tokens_sql,
-    trigrams_sql,
-)
-from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     java_split_tokens,
+    ngrams_attr_sql,
+    stage_tokens,
+    staged_shingles_frame,
 )
 from similarity_search_with_hadoop_mapreduce_spark.session import (
     table_location,
@@ -42,32 +39,13 @@ EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
 BPE_TOKEN_PATTERN = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 
 
-_JAVA_W_RE = re.compile(r"\W+", re.ASCII)
-
-
-def _java_split_py(text: str) -> list[str]:
-    """CPython reproduction of Java ``String.split("\\W+")`` — the
-    shared tokenizer of the Arrow production twins
-    (:func:`ngram_frequencies_arrow`, :func:`quality_score_arrow`):
-    ``re.ASCII`` (Java's ``\\W`` is ASCII), trailing empties dropped,
-    all-delimiter input → leading empty kept, no-match input returned
-    verbatim — matching :func:`functions.text.java_split_tokens`
-    edge-for-edge (pytest on punctuation-only / short / empty docs)."""
-    parts = _JAVA_W_RE.split(text)
-    if len(parts) == 1:  # no match: Java returns [original]
-        return parts
-    while parts and parts[-1] == "":
-        parts.pop()
-    return parts
-
-
 def token_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, n_bpe_tokens, n_chars): whitespace/regex token
     statistics, the unit economics of a training corpus."""
     t = F.col(text_col)
     return fan_out(documents).select(
         "doc_id",
-        F.size(java_split_tokens(t)).alias("n_tokens"),
+        F.size(java_split_tokens(text_col)).alias("n_tokens"),
         F.size(F.regexp_extract_all(t, F.lit(BPE_TOKEN_PATTERN), 0)).alias(
             "n_bpe_tokens"
         ),
@@ -111,24 +89,6 @@ def _stop_ratio(tokens: Column) -> Column:
     return F.when(n > 0, occ.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def _stage_tokens(
-    documents: DataFrame, text_col: str, *keep: str
-) -> DataFrame:
-    """Projection-stage the token array: ``(*keep, text_col, _toks)``.
-
-    Consumers of the token array reference it many times (size, stopword
-    filter, length fold, ...). Interpreted higher-order functions get no
-    whole-stage-codegen subexpression elimination, so inlining the split
-    into every reference re-tokenizes the document per metric — measured
-    2.1× the CPU of this staged form on the sf0.1 corpus. The explicit
-    projection is a real barrier: CollapseProject declines to inline a
-    non-cheap alias that is referenced more than once, so ``_toks`` is
-    computed exactly once per row and reused."""
-    return fan_out(documents).select(
-        *keep, text_col, java_split_tokens(F.col(text_col)).alias("_toks")
-    )
-
-
 def language_id(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-ratio language heuristic: predict ``en`` when >= 5% of
     tokens are English function words, else ``und`` (undetermined).
@@ -137,7 +97,7 @@ def language_id(documents: DataFrame, text_col: str = "text") -> DataFrame:
     synthetic text — this operator demonstrates the *computed* signal.
     """
     ratio = F.round(_stop_ratio(F.col("_toks")), 6)
-    return _stage_tokens(documents, text_col, "doc_id").select(
+    return stage_tokens(documents, text_col, "doc_id").select(
         "doc_id",
         ratio.alias("stop_ratio"),
         F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("und")).alias(
@@ -149,7 +109,7 @@ def language_id(documents: DataFrame, text_col: str = "text") -> DataFrame:
 def _quality_exprs(t: Column, toks: Column) -> dict[str, Column]:
     """The shared per-document quality signals (see :func:`quality_score`
     for the formula), computed from a STAGED token column (see
-    :func:`_stage_tokens`); returned unrounded."""
+    :func:`stage_tokens`); returned unrounded."""
     n_tok = F.size(toks)
     n_chars = F.length(t)
     punct = F.size(F.regexp_extract_all(t, F.lit(r"[^A-Za-z0-9_\s]"), 0))
@@ -181,106 +141,13 @@ def quality_score(documents: DataFrame, text_col: str = "text") -> DataFrame:
           + 0.3·min(10·stop_ratio, 1)
     """
     q = _quality_exprs(F.col(text_col), F.col("_toks"))
-    return _stage_tokens(documents, text_col, "doc_id").select(
+    return stage_tokens(documents, text_col, "doc_id").select(
         "doc_id",
         q["n_tokens"].alias("n_tokens"),
         F.round(q["punct_ratio"], 6).alias("punct_ratio"),
         F.round(q["stop_ratio"], 6).alias("stop_ratio"),
         F.round(q["mean_token_len"], 6).alias("mean_token_len"),
         F.round(q["quality"], 6).alias("quality"),
-    )
-
-
-def quality_score_arrow(
-    documents: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """PRODUCTION twin of :func:`quality_score` — the
-    :func:`ngram_frequencies_arrow` pattern applied to the quality
-    signals (r5 verdict item #7: the interpreted-HOF native plan's
-    task_compute swung 9.8→15.2 cpu-s across same-HEAD co-run windows,
-    JIT-profile sensitivity this compiled-CPython path does not have).
-    Per Arrow batch, each document is tokenized once
-    (:func:`_java_split_py` — Java ``split("\\W+")`` semantics) and all
-    five signals are computed in plain dict/str ops; the stage emits
-    RAW doubles and the 6-dp ``F.round`` is applied by Spark on the
-    way out, so the two plans cannot drift on rounding semantics
-    (Spark rounds HALF_UP via BigDecimal; Python's ``round`` banks).
-    Every ratio is a single IEEE-754 division and the score the same
-    left-associated expression as :func:`_quality_exprs`, so the raw
-    doubles are bit-identical — result-equality pytest-pinned,
-    including NULL text (NULL n_tokens/quality, 0.0 ratios). Map-only
-    (zero shuffles), same as the native plan."""
-    import pandas as pd
-
-    stops = frozenset(EN_STOPWORDS)
-    punct_re = re.compile(r"[^A-Za-z0-9_\s]", re.ASCII)
-
-    def feats(pdfs):
-        for pdf in pdfs:
-            ids, n_toks, puncts, stops_r, means, quals = [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["_t"]):
-                ids.append(doc_id)
-                if not isinstance(text, str):
-                    # mirror the native NULL semantics exactly:
-                    # size(NULL) is NULL, the when(n > 0) guards fall
-                    # to 0.0, and Spark's least() SKIPS nulls — so the
-                    # length term saturates to 1.0 and the score is the
-                    # same expression with ratios 0.0
-                    n_toks.append(None)
-                    puncts.append(0.0)
-                    stops_r.append(0.0)
-                    means.append(0.0)
-                    quals.append(
-                        1.0 * 0.4 + (1.0 - 0.0) * 0.3 + 0.0 * 0.3
-                    )
-                    continue
-                toks = _java_split_py(text)
-                n_tok = len(toks)
-                n_chars = len(text)
-                punct = len(punct_re.findall(text))
-                punct_ratio = punct / n_chars if n_chars > 0 else 0.0
-                occ = sum(1 for x in toks if x in stops)
-                stop_ratio = occ / n_tok if n_tok > 0 else 0.0
-                mean_tok = (
-                    sum(len(x) for x in toks) / n_tok if n_tok > 0 else 0.0
-                )
-                quality = (
-                    min(n_tok / 100.0, 1.0) * 0.4
-                    + (1.0 - min(punct_ratio * 5.0, 1.0)) * 0.3
-                    + min(stop_ratio * 10.0, 1.0) * 0.3
-                )
-                n_toks.append(n_tok)
-                puncts.append(punct_ratio)
-                stops_r.append(stop_ratio)
-                means.append(mean_tok)
-                quals.append(quality)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_tokens": pd.array(n_toks, dtype="Int32"),
-                    "punct_ratio": puncts,
-                    "stop_ratio": stops_r,
-                    "mean_token_len": means,
-                    "quality": quals,
-                }
-            )
-
-    raw = (
-        fan_out(documents)
-        .select("doc_id", F.col(text_col).alias("_t"))
-        .mapInPandas(
-            feats,
-            "doc_id long, n_tokens int, punct_ratio double, "
-            "stop_ratio double, mean_token_len double, quality double",
-        )
-    )
-    return raw.select(
-        "doc_id",
-        "n_tokens",
-        F.round("punct_ratio", 6).alias("punct_ratio"),
-        F.round("stop_ratio", 6).alias("stop_ratio"),
-        F.round("mean_token_len", 6).alias("mean_token_len"),
-        F.round("quality", 6).alias("quality"),
     )
 
 
@@ -313,7 +180,7 @@ def corpus_composition(documents: DataFrame, text_col: str = "text") -> DataFram
     """
     t = F.col(text_col)
     q = _quality_exprs(t, F.col("_toks"))
-    per_doc = _stage_tokens(documents, text_col, "doc_id", "source", "lang").select(
+    per_doc = stage_tokens(documents, text_col, "doc_id", "source", "lang").select(
         "doc_id",
         "source",
         "lang",
@@ -350,13 +217,6 @@ def ngram_frequencies(
     the aggregate view behind stop-shingle pruning (the reference's
     ``count == n`` rule, BookQuery.java:105, decides from exactly this
     distribution). explode → count: one shuffle, then TakeOrdered."""
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        staged_shingles_frame,
-    )
-
-    # Staged tokens (see staged_shingles_frame): the fused shingle
-    # expression re-tokenizes each document ~7x in interpreted HOF
-    # projections — the whole 9 cpu-s the r3 verdict measured here.
     sh = staged_shingles_frame(documents, text_col, alias="s", keep=())
     return (
         sh.select(F.explode("s").alias("term"))
@@ -364,105 +224,6 @@ def ngram_frequencies(
         .agg(F.count(F.lit(1)).alias("df"))
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(top_k)
-    )
-
-
-def ngram_frequencies_arrow(
-    documents: DataFrame,
-    top_k: int = 25,
-    text_col: str = "text",
-    flush_vocab: int = 1_000_000,
-) -> DataFrame:
-    """PRODUCTION twin of :func:`ngram_frequencies` — same contract as
-    the hash families' xxhash64 twins (timed as the round bench's
-    ``production_queries`` series, BASELINE.md; the native entry stays
-    the oracle-gated surface, result-equality is pytest-pinned).
-
-    The per-document trigram work (tokenize → trigram → distinct) runs
-    as a ``mapInPandas`` partial-count pass: each Arrow batch folds its
-    documents into ONE in-memory ``Counter`` and emits only the
-    partition's distinct ``(term, partial df)`` rows — so the explode
-    stream never exists, the shuffle carries pre-combined counts (the
-    classic combiner, here at batch grain), and the per-trigram CPU
-    runs in compiled CPython dict/set ops immune to the JVM interpreted
-    -HOF paths' co-run JIT-profile pollution (the r4 carry-over:
-    top_ngrams co-ran 2.2× its solo cost). Memory is bounded by the
-    partition's distinct-term vocabulary (Zipf: far below the term
-    stream); at 100 TB that is the same per-task vocabulary bound the
-    native plan's partial hash aggregation carries.
-
-    Tokenization reproduces Java ``String.split("\\\\W+")`` semantics
-    exactly (``re.ASCII`` — Java's ``\\W`` is ASCII; trailing empties
-    dropped, all-delimiter input → ``[]``, no-match input kept
-    verbatim), matching :func:`functions.text.java_split_tokens`
-    edge-for-edge (pytest on punctuation-only / short / empty docs)."""
-    import pandas as pd
-
-    _java_split = _java_split_py
-
-    # Vocabulary flush bound: the Counter otherwise grows with the
-    # partition's DISTINCT term count — Zipf keeps that small on natural
-    # text, but a pathological vocabulary (random tokens) is bounded
-    # only by the partition. Emitting and resetting past this many
-    # distinct terms caps memory unconditionally; downstream sums the
-    # partials, so flushing is result-invariant (it only trades a
-    # little pre-combining away) — pytest pins result-equality at
-    # flush_vocab=2 against the unflushed run.
-    if flush_vocab < 1:
-        raise ValueError(f"flush_vocab must be >= 1, got {flush_vocab}")
-    _FLUSH_VOCAB = flush_vocab
-
-    def partial_counts(pdfs):
-        from collections import Counter
-
-        c: Counter = Counter()
-        for pdf in pdfs:
-            for text in pdf["_t"]:
-                if not isinstance(text, str):
-                    continue  # NULL text: no trigrams, like the native plan
-                toks = _java_split(text)
-                if len(toks) >= 3:
-                    c.update(
-                        {
-                            " ".join(toks[i : i + 3])
-                            for i in range(len(toks) - 2)
-                        }
-                    )
-            if len(c) > _FLUSH_VOCAB:
-                yield pd.DataFrame(
-                    {"term": list(c.keys()), "df": list(c.values())}
-                )
-                c = Counter()
-        if c:
-            yield pd.DataFrame(
-                {"term": list(c.keys()), "df": list(c.values())}
-            )
-
-    partials = (
-        fan_out(documents)
-        .select(F.col(text_col).alias("_t"))
-        .mapInPandas(partial_counts, "term string, df long")
-    )
-    return (
-        partials.groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(top_k)
-    )
-
-
-def _ngrams_attr_sql(col: str, n: int) -> str:
-    """Word ``n``-grams over a STAGED token attribute via
-    ``sequence + element_at`` — the general-``n`` form of
-    :func:`functions.text.trigrams_attr_sql` (same staging requirement:
-    with an inline expression the interpreted lambda would re-evaluate
-    the split per index); ``< n`` tokens ⇒ ``[]``."""
-    parts = ", ".join(f"element_at({col}, i + {j})" for j in range(n))
-    return (
-        f"CASE WHEN size({col}) >= {n} THEN "
-        f"transform(sequence(1, size({col}) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
@@ -488,23 +249,23 @@ def benchmark_contamination(
     eval-set sized — tiny next to the corpus — so its distinct n-grams
     BROADCAST (explicitly pinned), the corpus side computes per-doc
     distinct n-grams in one staged map pass (tokenize once per doc, the
-    :func:`_stage_tokens` contract), and the broadcast hash join prunes
+    :func:`stage_tokens` contract), and the broadcast hash join prunes
     the exploded stream to hits before the single ``doc_id`` shuffle —
     high-cardinality key, no skew. The corpus never shuffles its text;
     explode volume is bounded by per-doc distinct n-grams, and at
     ``n=13`` the hit stream is almost empty by construction."""
     bench = (
-        _stage_tokens(benchmark, text_col, "doc_id")
+        stage_tokens(benchmark, text_col, "doc_id")
         .select(
             F.explode(
-                F.array_distinct(F.expr(_ngrams_attr_sql("_toks", n)))
+                F.array_distinct(F.expr(ngrams_attr_sql("_toks", n)))
             ).alias("gram")
         )
         .distinct()
     )
-    corp = _stage_tokens(corpus, text_col, "doc_id").select(
+    corp = stage_tokens(corpus, text_col, "doc_id").select(
         "doc_id",
-        F.array_distinct(F.expr(_ngrams_attr_sql("_toks", n))).alias("_ngs"),
+        F.array_distinct(F.expr(ngrams_attr_sql("_toks", n))).alias("_ngs"),
     )
     return (
         corp.select("doc_id", F.size("_ngs").alias("n_ngrams"),
@@ -570,19 +331,19 @@ def benchmark_contamination_bloom(
     )
 
     bench = (
-        _stage_tokens(benchmark, text_col, "doc_id")
+        stage_tokens(benchmark, text_col, "doc_id")
         .select(
             F.explode(
-                F.array_distinct(F.expr(_ngrams_attr_sql("_toks", n)))
+                F.array_distinct(F.expr(ngrams_attr_sql("_toks", n)))
             ).alias("gram")
         )
         .distinct()
     )
     bloom = bloom_build(bench, "gram", m_bits=m_bits, k=k,
                         base_hash=base_hash, with_count=False)
-    corp = _stage_tokens(corpus, text_col, "doc_id").select(
+    corp = stage_tokens(corpus, text_col, "doc_id").select(
         "doc_id",
-        F.array_distinct(F.expr(_ngrams_attr_sql("_toks", n))).alias("_ngs"),
+        F.array_distinct(F.expr(ngrams_attr_sql("_toks", n))).alias("_ngs"),
     )
     stream = corp.select(
         "doc_id", F.size("_ngs").alias("n_ngrams"),
@@ -614,17 +375,12 @@ def vocab_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """One-row corpus vocabulary summary: documents with content, distinct
     trigram vocabulary, total (per-doc-distinct) term occurrences, mean
     shingle-set size."""
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        staged_shingles_frame,
-    )
-
     # Single pass: explode (which naturally skips empty sets — no size
     # filter, so the shingle expression is evaluated exactly once) and
     # derive every statistic from the exploded (doc_id, term) stream.
     # mean_set_size = total_terms / n_docs because each doc's set is
     # already distinct — one exact double division, same as the oracle's
-    # avg over exact integer sums. Token array staged (see
-    # staged_shingles_frame) so the tokenizer runs once per doc.
+    # avg over exact integer sums.
     terms = staged_shingles_frame(documents, text_col, alias="s").select(
         "doc_id", F.explode("s").alias("term")
     )
@@ -682,18 +438,9 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     two-level aggregation — the per-(doc, term) partial keeps the shuffle
     key high-cardinality, and both ratios reduce per doc.
     """
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        java_split_tokens,
-        trigrams,
-    )
-    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import fan_out
-
     base = fan_out(documents)
-    tg = base.select(
-        "doc_id",
-        F.explode(
-            F.expr(trigrams_sql(java_split_tokens_sql(text_col)))
-        ).alias("term"),
+    tg = stage_tokens(documents, text_col, "doc_id").select(
+        "doc_id", F.explode(F.expr(ngrams_attr_sql("_toks", 3))).alias("term")
     )
     per_term = tg.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
     st = per_term.groupBy("doc_id").agg(
@@ -830,7 +577,7 @@ def dup_span_stats(
     }
     if span_key not in keyers:
         raise ValueError(f"span_key must be one of {sorted(keyers)}")
-    base = _stage_tokens(documents, text_col, "doc_id")
+    base = stage_tokens(documents, text_col, "doc_id")
     span = "concat_ws(' ', " + ", ".join(
         f"element_at(_toks, i + {j})" for j in range(w)
     ) + ")"
@@ -957,7 +704,7 @@ def remove_dup_spans(
     }
     if span_key not in keyers:
         raise ValueError(f"span_key must be one of {sorted(keyers)}")
-    base = _stage_tokens(documents, text_col, "doc_id")
+    base = stage_tokens(documents, text_col, "doc_id")
     span = "concat_ws(' ', " + ", ".join(
         f"element_at(_toks, i + {j})" for j in range(w)
     ) + ")"
@@ -1079,11 +826,11 @@ def lm_bigram_score(
     far below the token stream; the join is AQE-splittable on skewed
     head words.
     """
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     tr_staged = (
         staged
         if model_docs is None
-        else _stage_tokens(model_docs, text_col, "doc_id")
+        else stage_tokens(model_docs, text_col, "doc_id")
     )
     # Bigrams as arrays_zip(tokens[:-1], tokens[1:]) — two slices, no
     # indexed lambda. This matters under sessions WITHOUT the package's
@@ -1242,7 +989,7 @@ def tfidf_keywords(
     pushes a partial top-k below the window shuffle, so the sort state
     per document is O(top_k), not O(terms).
     """
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     terms = (
         staged.select("doc_id", F.explode("_toks").alias("term"))
         .filter(
@@ -1316,7 +1063,7 @@ def source_quality_cap(
     tests; the same optimization window_row_number_topn leans on).
     """
     q = _quality_exprs(F.col(text_col), F.col("_toks"))
-    scored = _stage_tokens(documents, text_col, "doc_id", "source").select(
+    scored = stage_tokens(documents, text_col, "doc_id", "source").select(
         "doc_id", "source", F.round(q["quality"], 6).alias("quality")
     )
     from pyspark.sql import Window
@@ -1365,7 +1112,7 @@ def nb_classify(
     per-doc aggregation. The argmax is ``row_number() <= 1`` —
     WindowGroupLimit, map-side partial top-1.
     """
-    staged = _stage_tokens(documents, text_col, "doc_id", label_col)
+    staged = stage_tokens(documents, text_col, "doc_id", label_col)
     toks = staged.select(
         "doc_id", F.col(label_col).alias("_cls"), F.explode("_toks").alias("term")
     )
@@ -1529,7 +1276,7 @@ def gopher_rules(
     def _i(c) -> Column:
         return F.when(c, F.lit(1)).otherwise(F.lit(0)).cast("int")
 
-    return _stage_tokens(documents, text_col, "doc_id").select(
+    return stage_tokens(documents, text_col, "doc_id").select(
         "doc_id",
         sig["n_words"].alias("n_words"),
         _floor6(sig["mwl"]).alias("mean_word_len"),
@@ -1624,7 +1371,7 @@ def gopher_pass_filter(
     )
     keep = [c for c in cols if c != text_col]
     return (
-        _stage_tokens(documents, text_col, *keep)
+        stage_tokens(documents, text_col, *keep)
         .filter(flags["passes"])
         .select(*cols)
     )
@@ -1673,7 +1420,7 @@ def save_lm_model(
     spark = documents.sparkSession
     _drop_model_tables(spark, f"{prefix}_bigrams", f"{prefix}_uni", f"{prefix}_meta")
 
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     pairs = staged.select(
         F.expr(
             "arrays_zip("
@@ -1733,7 +1480,7 @@ def lm_score_from_model(
     model = spark.table(f"{prefix}_bigrams")
     uni = spark.table(f"{prefix}_uni")
     meta = F.broadcast(spark.table(f"{prefix}_meta"))
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     pairs = staged.select(
         "doc_id",
         F.expr(
@@ -1838,7 +1585,7 @@ def vocab_coverage(
     """
     from pyspark.sql import Window
 
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     terms = staged.select(F.explode("_toks").alias("term")).filter(
         F.length("term") > 0
     )
@@ -1943,7 +1690,7 @@ def term_drift(
     flagged = documents.select(
         text_col, a_filter.alias("_a"), b_filter.alias("_b")
     ).filter(F.col("_a") | F.col("_b"))
-    staged = _stage_tokens(flagged, text_col, "_a", "_b")
+    staged = stage_tokens(flagged, text_col, "_a", "_b")
     terms = staged.select(
         F.explode("_toks").alias("term"), "_a", "_b"
     ).filter(F.length("term") > 0)
@@ -2017,7 +1764,7 @@ def corpus_drift(
     flagged = documents.select(
         text_col, a_filter.alias("_a"), b_filter.alias("_b")
     ).filter(F.col("_a") | F.col("_b"))
-    staged = _stage_tokens(flagged, text_col, "_a", "_b")
+    staged = stage_tokens(flagged, text_col, "_a", "_b")
     terms = staged.select(
         F.explode("_toks").alias("term"), "_a", "_b"
     ).filter(F.length("term") > 0)
@@ -2088,7 +1835,7 @@ def save_term_profile(
     spark = documents.sparkSession
     _drop_model_tables(spark, f"{prefix}_terms", f"{prefix}_meta")
 
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     tf = (
         staged.select(F.explode("_toks").alias("term"))
         .filter(F.length("term") > 0)
@@ -2137,7 +1884,7 @@ def drift_from_profile(
     full-outer oracle, which computes the complement the brute way).
     """
     spark = batch.sparkSession
-    staged = _stage_tokens(batch, text_col, "doc_id")
+    staged = stage_tokens(batch, text_col, "doc_id")
     tf_b = (
         staged.select(F.explode("_toks").alias("term"))
         .filter(F.length("term") > 0)
@@ -2281,7 +2028,7 @@ def encode_with_vocab(
     empty docs are not silently dropped.
     """
     spark = batch.sparkSession
-    staged = _stage_tokens(batch, text_col, "doc_id")
+    staged = stage_tokens(batch, text_col, "doc_id")
     pos = staged.select(
         "doc_id", F.posexplode("_toks").alias("pos", "term")
     ).filter(F.length("term") > 0)
@@ -2347,7 +2094,7 @@ def chunk_documents(
             f"{overlap_tokens=} {chunk_tokens=}"
         )
     stride = chunk_tokens - overlap_tokens
-    staged = _stage_tokens(documents, text_col, "doc_id")
+    staged = stage_tokens(documents, text_col, "doc_id")
     kept = staged.select(
         "doc_id",
         F.filter(F.col("_toks"), lambda t: F.length(t) > 0).alias("_kept"),

@@ -190,7 +190,7 @@ def sample_mixture_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(java_split_tokens(F.col("text"))).alias("n_tokens"),
+        F.size(java_split_tokens("text")).alias("n_tokens"),
     )
     return mixture_sample(
         docs,

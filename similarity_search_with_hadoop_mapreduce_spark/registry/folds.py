@@ -128,29 +128,32 @@ def sim_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-document set (quirk Q1's len1). One map stage + one broadcast
     join — zero shuffles."""
     from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        java_split_tokens_sql,
-        shingles,
-        trigrams_sql,
+        ngrams_attr_sql,
+        stage_tokens,
+        staged_shingles_frame,
     )
 
     docs = table(spark, sf_dir, "documents")
-    toks = F.expr(java_split_tokens_sql("text"))
-    grams = F.expr(trigrams_sql(java_split_tokens_sql("text")))
-    sset = shingles("text")
-    profile = docs.select(
+    # each array is staged in its own projection, so the tokenizer and
+    # the trigram lambda run once per document however often they are read
+    grams = stage_tokens(docs, "text", "doc_id").select(
+        "doc_id", "_toks", F.expr(ngrams_attr_sql("_toks", 3)).alias("_g")
+    )
+    sets = grams.select("*", F.array_distinct("_g").alias("s"))
+    profile = sets.select(
         "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.md5(F.concat_ws(" ", toks)).alias("token_md5"),
-        F.size(grams).alias("n_grams"),
-        F.md5(F.concat_ws("|", grams)).alias("gram_md5"),
-        F.size(sset).alias("n_shingles"),
-        F.md5(F.concat_ws("|", F.sort_array(sset))).alias("set_md5"),
-        sset.alias("s"),
+        F.size("_toks").alias("n_tokens"),
+        F.md5(F.concat_ws(" ", "_toks")).alias("token_md5"),
+        F.size("_g").alias("n_grams"),
+        F.md5(F.concat_ws("|", "_g")).alias("gram_md5"),
+        F.size("s").alias("n_shingles"),
+        F.md5(F.concat_ws("|", F.sort_array("s"))).alias("set_md5"),
+        "s",
     )
     qset = F.broadcast(
-        docs.filter(F.col("doc_id") == 0).select(
-            shingles("text").alias("qs")
-        )
+        staged_shingles_frame(docs, alias="qs")
+        .filter(F.col("doc_id") == 0)
+        .select("qs")
     )
     return profile.join(qset).select(
         "doc_id",

@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-    java_split_tokens,
-    shingles,
-    trigrams,
+    ngrams_attr_sql,
+    stage_tokens,
+    staged_shingles_frame,
 )
 from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
     similarity_multi_query,
@@ -101,9 +101,8 @@ FROM tokens
 def q_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 (BookQuery.java:35,64,126): case-sensitive \\W+ split, Java
     String.split semantics; exploded with position for value comparison."""
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.posexplode(java_split_tokens("text")).alias("pos", "token"),
+    return stage_tokens(_docs(spark, sf_dir), "text", "doc_id").select(
+        "doc_id", F.posexplode("_toks").alias("pos", "token")
     )
 
 
@@ -131,9 +130,9 @@ SELECT doc_id, unnest(range(len(g))) AS pos, unnest(g) AS shingle FROM tg
 def q_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 (BookQuery.java:37-40,66-70): sliding-window word trigrams; <3
     tokens => empty; multiset (pre-distinct) with positions."""
-    return _docs(spark, sf_dir).select(
+    return stage_tokens(_docs(spark, sf_dir), "text", "doc_id").select(
         "doc_id",
-        F.posexplode(trigrams(java_split_tokens("text"))).alias(
+        F.posexplode(F.expr(ngrams_attr_sql("_toks", 3))).alias(
             "pos", "shingle"
         ),
     )
@@ -155,8 +154,8 @@ SELECT doc_id, len(s) AS n_shingles FROM shingle_sets
 )
 def q_shingle_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 (BookQuery.java:26,66): HashSet distinctness per document."""
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.size(shingles("text")).alias("n_shingles")
+    return staged_shingles_frame(_docs(spark, sf_dir)).select(
+        "doc_id", F.size("s").alias("n_shingles")
     )
 
 
@@ -178,8 +177,7 @@ def q_semi_join_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 (BookQuery.java:77): doc shingles ∩ query shingles, evaluated
     map-side against a broadcast 1-row query set before any shuffle —
     the reference's `retainAll` re-expressed as `array_intersect`."""
-    docs = _docs(spark, sf_dir)
-    sh = docs.select("doc_id", shingles("text").alias("s"))
+    sh = staged_shingles_frame(_docs(spark, sf_dir))
     q = F.broadcast(sh.filter(F.col("doc_id") == 0).select(F.col("s").alias("qs")))
     return sh.join(q).select(
         "doc_id", F.explode(F.array_intersect("s", "qs")).alias("term")
@@ -203,8 +201,7 @@ FROM shingle_sets d, (SELECT s FROM shingle_sets WHERE doc_id = 0) q
 def q_intersection_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 (BookQuery.java:80): `length` is taken AFTER retainAll, so it is
     |D∩Q| not |D| — the quirk-Q1 contract, one row per document."""
-    docs = _docs(spark, sf_dir)
-    sh = docs.select("doc_id", shingles("text").alias("s"))
+    sh = staged_shingles_frame(_docs(spark, sf_dir))
     q = F.broadcast(sh.filter(F.col("doc_id") == 0).select(F.col("s").alias("qs")))
     return sh.join(q).select(
         "doc_id", F.size(F.array_intersect("s", "qs")).alias("len1")
@@ -241,9 +238,8 @@ def q_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize as `doc@len,...` — byte-parity with the reference's Job-1
     intermediate (modulo its unspecified tie order, fixed here to doc id).
     """
-    docs = _docs(spark, sf_dir)
     n = _doc_count(spark, sf_dir)
-    sh = docs.select("doc_id", shingles("text").alias("s"))
+    sh = staged_shingles_frame(_docs(spark, sf_dir))
     q = F.broadcast(sh.filter(F.col("doc_id") == 0).select(F.col("s").alias("qs")))
     exploded = (
         sh.join(q)
@@ -309,9 +305,8 @@ def q_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2-U4 (BookQuery.java:142-158): per-(doc, query) count of shared
     shingles surviving the prune, query self-pair excluded. Spark's hash
     aggregate adds the map-side combine the reference lacked."""
-    docs = _docs(spark, sf_dir)
     n = _doc_count(spark, sf_dir)
-    sh = docs.select("doc_id", shingles("text").alias("s"))
+    sh = staged_shingles_frame(_docs(spark, sf_dir))
     q = F.broadcast(
         sh.filter(F.col("doc_id") == 0).select(
             F.col("s").alias("qs"), F.size("s").alias("q_len")

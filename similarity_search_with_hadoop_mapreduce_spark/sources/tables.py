@@ -192,12 +192,14 @@ def load_corpus_dir(spark: SparkSession, path: str) -> DataFrame:
     # NB: must be the keyword arg — `.option("wholetext", ...)` is clobbered
     # by the python `.text()` wrapper's own wholetext=False default.
     base = spark.read.text(path, wholetext=True)
+    # input_file_name() is a URI: ' ' and '%' arrive percent-encoded, '+'
+    # and non-ASCII raw; decode so ids match the file names, with '+'
+    # escaped first so the form decoder cannot turn it into a space
+    name = F.regexp_extract(F.input_file_name(), r"([^/]+?)(?:\.[^/]*)?$", 1)
     out = (
         base
         .select(
-            F.regexp_extract(
-                F.input_file_name(), r"([^/]+?)(?:\.[^/]*)?$", 1
-            ).alias("doc_id"),
+            F.url_decode(F.regexp_replace(name, r"\+", "%2B")).alias("doc_id"),
             # lines joined with a single space (BookQuery.java:56-61)
             F.regexp_replace(F.regexp_replace("value", r"\r?\n", " "), r" $", "").alias(
                 "text"

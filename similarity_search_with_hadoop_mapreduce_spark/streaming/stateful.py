@@ -404,13 +404,13 @@ def streaming_curation_loop_demo(
                 append_epoch_cm_partition,
                 cm_surge_probe,
             )
-            from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
-                _stage_tokens,
+            from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
+                stage_tokens,
             )
 
             cm_path, cm_top_k, cm_surge_x = cm_monitor
             terms = (
-                _stage_tokens(batch_df, "text", "doc_id")
+                stage_tokens(batch_df, "text", "doc_id")
                 .select(F.explode("_toks").alias("term"))
                 .filter(F.length("term") > 0)
             )

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import re
 
-_TOKEN_RE = re.compile(r"\W+")
+_TOKEN_RE = re.compile(r"\W+", re.ASCII)  # Java's \W is ASCII-only
 
 
 def java_split(text: str) -> list[str]:

@@ -774,8 +774,8 @@ def test_streaming_curation_loop_cm_monitor(spark, tmp_path):
         cm_sketch,
         merge_cm_sketches,
     )
-    from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
-        _stage_tokens,
+    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
+        stage_tokens,
     )
     from similarity_search_with_hadoop_mapreduce_spark.streaming.stateful import (
         streaming_curation_loop_demo,
@@ -829,7 +829,7 @@ def test_streaming_curation_loop_cm_monitor(spark, tmp_path):
         spark.read.parquet(str(inc / "e2"))
     )
     terms = (
-        _stage_tokens(all_docs, "text", "doc_id")
+        stage_tokens(all_docs, "text", "doc_id")
         .select(F.explode("_toks").alias("term"))
         .filter(F.length("term") > 0)
     )

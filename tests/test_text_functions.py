@@ -1,4 +1,4 @@
-"""java_split_tokens / trigrams / shingles vs the Python harness,
+"""java_split_tokens / staged_shingles_frame vs the Python harness,
 including Java String.split edge semantics (SURVEY §2.3 Q6)."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     java_split_tokens,
-    shingles,
+    staged_shingles_frame,
 )
 from tests.reference_sim import java_split, shingle_set
 
@@ -28,18 +28,22 @@ EDGES = [
     "UPPER lower MiXeD case",
     "numbers 123 and_underscores keep",
     "repeat repeat repeat repeat repeat",
+    # Java's \W is ASCII: non-ASCII letters are delimiters
+    "café au lait ok",
+    "naïve über façade here",
+    "日本語 text here now",
 ]
 
 
 def _spark_tokens(spark, texts):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    rows = df.select("i", java_split_tokens(F.col("t")).alias("tok")).collect()
+    rows = df.select("i", java_split_tokens("t").alias("tok")).collect()
     return [r.tok for r in sorted(rows, key=lambda r: r.i)]
 
 
 def _spark_shingles(spark, texts):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    rows = df.select("i", shingles(F.col("t")).alias("s")).collect()
+    rows = staged_shingles_frame(df, "t", alias="s", keep=("i",)).collect()
     return [set(r.s) for r in sorted(rows, key=lambda r: r.i)]
 
 
@@ -55,13 +59,34 @@ def test_shingle_edge_cases(spark):
     assert got == want
 
 
+def test_ngrams_attr_sql_positional_edge_cases(spark):
+    """ngrams_attr_sql keeps order and repeats before any distinct:
+    every window of the staged tokens, for n = 1, 3 and 5."""
+    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
+        ngrams_attr_sql,
+        stage_tokens,
+    )
+
+    df = spark.createDataFrame(list(enumerate(EDGES)), "i long, t string")
+    for n in (1, 3, 5):
+        rows = stage_tokens(df, "t", "i").select(
+            "i", F.expr(ngrams_attr_sql("_toks", n)).alias("g")
+        ).collect()
+        got = [r.g for r in sorted(rows, key=lambda r: r.i)]
+        want = []
+        for t in EDGES:
+            w = java_split(t)
+            want.append([" ".join(w[i : i + n]) for i in range(len(w) - n + 1)])
+        assert got == want, n
+
+
 @settings(
     max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
 @given(
     st.lists(
         st.text(
-            alphabet="ab !.\t\n\"_0", min_size=0, max_size=30
+            alphabet="ab !.\t\n\"_0é", min_size=0, max_size=30
         ),
         min_size=1,
         max_size=20,
@@ -72,176 +97,115 @@ def test_property_java_split(spark, texts):
     assert _spark_shingles(spark, texts) == [shingle_set(t) for t in texts]
 
 
-def test_sql_twins_match_column_builders(spark):
-    # The sql-text twins must build the exact same expression semantics as
-    # the Column builders, including Java-split edge cases.
-    from pyspark.sql import functions as F
-
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        java_split_tokens,
-        java_split_tokens_sql,
-        shingles,
-        shingles_sql,
-        trigrams,
-        trigrams_sql,
-    )
-
-    cases = ["a b c d e", "", "!!!", "one two", "x.y z!  ", " lead",
-             "a  b\tc d", "single", "a-b-c-d", "\t\n"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(cases)], "id long, text string"
-    )
-    col_side = df.select(
-        "id",
-        java_split_tokens(F.col("text")).alias("t"),
-        trigrams(java_split_tokens(F.col("text"))).alias("g"),
-        shingles(F.col("text")).alias("s"),
-    ).collect()
-    sql_side = df.select(
-        "id",
-        F.expr(java_split_tokens_sql("text")).alias("t"),
-        F.expr(trigrams_sql(java_split_tokens_sql("text"))).alias("g"),
-        F.expr(shingles_sql("text")).alias("s"),
-    ).collect()
-    key = lambda r: r.id
-    assert [tuple(r) for r in sorted(col_side, key=key)] == [
-        tuple(r) for r in sorted(sql_side, key=key)
-    ]
-
-
 def test_sql_twins_quote_hostile_args(spark):
-    # A reserved-word column name must resolve (backtick-quoted), and a
-    # pattern containing a single quote must survive literal rendering
-    # instead of terminating the SQL string (ADVICE r2).
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        java_split_tokens,
-        java_split_tokens_sql,
-    )
-
-    df = spark.createDataFrame([(0, "a'b c")], "id long, `from` string")
-    got = df.select(F.expr(java_split_tokens_sql("from")).alias("t")).collect()
-    assert got[0].t == ["a", "b", "c"]
-
-    pat = r"['\s]+"  # quote inside a character class
-    sql_side = df.select(
-        F.expr(java_split_tokens_sql("from", pat)).alias("t")
-    ).collect()
-    col_side = df.select(
-        java_split_tokens(F.col("from"), pat).alias("t")
-    ).collect()
-    assert sql_side[0].t == col_side[0].t == ["a", "b", "c"]
+    # A reserved-word column name must resolve (backtick-quoted) through
+    # both the tokenizer and the staged shingle frame.
+    df = spark.createDataFrame([(0, "a'b c d")], "id long, `from` string")
+    got = df.select(java_split_tokens("from").alias("t")).collect()
+    assert got[0].t == ["a", "b", "c", "d"]
+    got = staged_shingles_frame(df, "from", keep=("id",)).collect()
+    assert sorted(got[0].s) == ["a b c", "b c d"]
 
 
-def test_trigrams_attr_sql_equals_zip_formulation(spark):
-    """The staged-attribute trigram construction (sequence + element_at,
-    used by staged_shingles_frame) must be value-identical to the zip
-    formulation on every edge case: <3 tokens, exactly 3, repeats,
-    empties from the Java split."""
-    from pyspark.sql import functions as F
-
-    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
-        java_split_tokens_sql,
-        trigrams_attr_sql,
-        trigrams_sql,
-    )
-
-    texts = [
-        "", "a", "a b", "a b c", "a b c d e", "x x x x",
-        "hello, world! hello world again", "!!! ...", "a  b\tc d",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string").select(
-        F.expr(java_split_tokens_sql("text")).alias("tok")
-    )
-    rows = df.select(
-        F.expr(trigrams_sql("tok")).alias("zip"),
-        F.expr(trigrams_attr_sql("tok")).alias("seq"),
-    ).collect()
-    for r in rows:
-        assert list(r.zip) == list(r.seq)
+# Edge fixture shared by the native-operator tests below: Java-split
+# edge cases (punctuation-only, <3 tokens, "", leading delimiter) and
+# NULL text.
+_EDGE_DOCS = [
+    (0, "alpha beta gamma delta alpha beta gamma"),
+    (1, "alpha beta gamma unrelated tail words"),
+    (2, "!!! ... ???"),          # all delimiters -> [] tokens
+    (3, "two words"),             # <3 tokens -> no trigrams
+    (4, ""),                      # no-match -> [''] -> no trigrams
+    (5, "!leading delimiter keeps empty token here"),
+    (6, "alpha beta gamma delta alpha beta gamma"),  # exact dup
+    (7, None),                    # NULL text -> no trigrams, no crash
+    (8, "the quick brown fox jumps over the lazy dog"),
+    (9, "a dense, punct-heavy!! doc?? with (many) marks..."),
+    (10, "word"),
+    (11, "x " * 200),  # n_tokens > 100 saturates the quality length term
+]
 
 
-def test_ngram_frequencies_arrow_twin_matches_native(spark):
-    """The Arrow partial-count production twin must equal the gated
-    native plan exactly — including on the Java-split edge cases
-    (punctuation-only -> no trigrams; <3 tokens -> none; leading
-    delimiter keeps Java's leading empty token inside trigrams)."""
+def _fixture_texts(spark):
+    from tests.test_fixtures import SF
+
+    fx = spark.read.parquet(f"{SF}/documents.parquet")
+    return fx, [(r.doc_id, r.text) for r in fx.select("doc_id", "text").collect()]
+
+
+def test_ngram_frequencies_matches_python_reference(spark):
+    """Native ngram_frequencies equals a document-frequency count over
+    the reference shingle sets: punctuation-only / <3-token / empty docs
+    add no trigrams, a leading delimiter keeps Java's leading empty
+    token inside trigrams, NULL text is skipped; top-k ties break on the
+    term."""
+    from collections import Counter
+
     from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
         ngram_frequencies,
-        ngram_frequencies_arrow,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (0, "alpha beta gamma delta alpha beta gamma"),
-            (1, "alpha beta gamma unrelated tail words"),
-            (2, "!!! ... ???"),          # all delimiters -> [] tokens
-            (3, "two words"),             # <3 tokens -> no trigrams
-            (4, ""),                      # no-match -> [''] -> no trigrams
-            (5, "!leading delimiter keeps empty token here"),
-            (6, "alpha beta gamma delta alpha beta gamma"),  # exact dup
-            (7, None),                    # NULL text -> no trigrams, no crash
-        ],
-        "doc_id long, text string",
-    )
-    key = lambda r: (r.term, r.df)
-    want = [key(r) for r in ngram_frequencies(docs, top_k=50).collect()]
-    got = [key(r) for r in ngram_frequencies_arrow(docs, top_k=50).collect()]
-    assert got == want and want
-    # and on the real fixture
-    fx = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    want = [key(r) for r in ngram_frequencies(fx, top_k=25).collect()]
-    got = [key(r) for r in ngram_frequencies_arrow(fx, top_k=25).collect()]
-    assert got == want and len(want) == 25
-    # the unconditional memory cap is result-invariant: flushing the
-    # partial Counter every 2 distinct terms only trades pre-combining
-    # away — downstream sums the partials to the same dfs
-    got = [
-        key(r)
-        for r in ngram_frequencies_arrow(fx, top_k=25, flush_vocab=2).collect()
-    ]
-    assert got == want
-    import pytest as _pytest
+    def want(rows, top_k):
+        c = Counter(g for _, t in rows if t is not None for g in shingle_set(t))
+        return sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
 
-    with _pytest.raises(ValueError, match="flush_vocab"):
-        ngram_frequencies_arrow(fx, flush_vocab=0)
+    key = lambda r: (r.term, r.df)  # noqa: E731
+    docs = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    got = [key(r) for r in ngram_frequencies(docs, top_k=50).collect()]
+    assert got == want(_EDGE_DOCS, 50) and got
+    assert (" leading delimiter", 1) in got
+    fx, rows = _fixture_texts(spark)
+    got = [key(r) for r in ngram_frequencies(fx, top_k=25).collect()]
+    assert got == want(rows, 25) and len(got) == 25
 
 
-def test_quality_score_arrow_twin_matches_native(spark):
-    """The Arrow quality-signal production twin must equal the gated
-    native HOF plan EXACTLY (bit-level doubles: single-division ratios,
-    same left-associated score expression, Spark-side rounding) —
-    including NULL text, empty text, punctuation-only and no-match
-    edge docs."""
+def test_quality_score_matches_python_reference(spark):
+    """Native quality_score equals the documented formula evaluated in
+    Python over reference tokens, bit for bit after Spark's HALF_UP
+    6-dp rounding — including NULL text (NULL n_tokens; ratios fall to
+    0.0 and least() skips the NULL length term, so quality is 0.7),
+    empty text (Java's [''] is one token), punctuation-only and
+    no-match docs."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
     from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
+        EN_STOPWORDS,
         quality_score,
-        quality_score_arrow,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (0, "the quick brown fox jumps over the lazy dog"),
-            (1, "a dense, punct-heavy!! doc?? with (many) marks..."),
-            (2, "!!! ... ???"),
-            (3, ""),
-            (4, "word"),
-            (5, None),
-            (6, "!leading delimiter keeps empty token here"),
-            (7, "x " * 200),  # n_tokens > 100 saturates the length term
-        ],
-        "doc_id long, text string",
-    )
-    key = lambda r: (
+    punct_re = re.compile(r"[^A-Za-z0-9_\s]", re.ASCII)
+
+    def r6(x):  # java.math.BigDecimal.valueOf(x).setScale(6, HALF_UP)
+        return float(
+            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+        )
+
+    def want(doc_id, text):
+        if text is None:
+            return (doc_id, None, 0.0, 0.0, 0.0, r6(1.0 * 0.4 + 1.0 * 0.3))
+        toks = java_split(text)
+        n = len(toks)
+        punct = len(punct_re.findall(text)) / len(text) if text else 0.0
+        stop = sum(t in EN_STOPWORDS for t in toks) / n if n else 0.0
+        mean = sum(len(t) for t in toks) / n if n else 0.0
+        quality = (
+            min(n / 100.0, 1.0) * 0.4
+            + (1.0 - min(punct * 5.0, 1.0)) * 0.3
+            + min(stop * 10.0, 1.0) * 0.3
+        )
+        return (doc_id, n, r6(punct), r6(stop), r6(mean), r6(quality))
+
+    key = lambda r: (  # noqa: E731
         r.doc_id, r.n_tokens, r.punct_ratio, r.stop_ratio,
         r.mean_token_len, r.quality,
     )
-    want = sorted(key(r) for r in quality_score(docs).collect())
-    got = sorted(key(r) for r in quality_score_arrow(docs).collect())
-    assert got == want
-    # and on the real fixture, every row bit-identical
-    fx = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    want = sorted(key(r) for r in quality_score(fx).collect())
-    got = sorted(key(r) for r in quality_score_arrow(fx).collect())
-    assert got == want and len(want) > 100
+    docs = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    got = sorted(key(r) for r in quality_score(docs).collect())
+    assert got == sorted(want(d, t) for d, t in _EDGE_DOCS)
+    fx, rows = _fixture_texts(spark)
+    got = sorted(key(r) for r in quality_score(fx).collect())
+    assert got == sorted(want(d, t) for d, t in rows) and len(got) > 100
 
 
 def test_benchmark_contamination_flags_overlapping_docs(spark):
@@ -1177,11 +1141,7 @@ def _remove_dup_spans_model(texts: dict[int, str], w: int):
     """Pure-Python model of remove_dup_spans: Java-split tokens, per-doc
     DISTINCT w-windows for the document frequency, ALL positions of a
     df>1 window covered, kept tokens re-joined in order."""
-    from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
-        _java_split_py,
-    )
-
-    toks = {d: _java_split_py(t) for d, t in texts.items()}
+    toks = {d: java_split(t) for d, t in texts.items()}
     df: dict[str, set] = {}
     for d, ts in toks.items():
         for p in range(len(ts) - w + 1):
@@ -1253,9 +1213,11 @@ def test_contamination_bloom_gate_equals_ungated_and_prunes(spark):
         bloom_build,
         bloom_probe,
     )
+    from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
+        ngrams_attr_sql,
+        stage_tokens,
+    )
     from similarity_search_with_hadoop_mapreduce_spark.operators.textstats import (
-        _ngrams_attr_sql,
-        _stage_tokens,
         benchmark_contamination,
         benchmark_contamination_bloom,
     )
@@ -1274,14 +1236,14 @@ def test_contamination_bloom_gate_equals_ungated_and_prunes(spark):
     # join had to kill them), while the honest one prunes ~19x: count
     # the gram stream entering the exact join under each bitmap
     bg = (
-        _stage_tokens(bench, "text", "doc_id")
+        stage_tokens(bench, "text", "doc_id")
         .select(F.explode(F.array_distinct(
-            F.expr(_ngrams_attr_sql("_toks", 3)))).alias("gram"))
+            F.expr(ngrams_attr_sql("_toks", 3)))).alias("gram"))
         .distinct()
     )
-    stream = _stage_tokens(corpus, "text", "doc_id").select(
+    stream = stage_tokens(corpus, "text", "doc_id").select(
         F.explode(F.array_distinct(
-            F.expr(_ngrams_attr_sql("_toks", 3)))).alias("gram")
+            F.expr(ngrams_attr_sql("_toks", 3)))).alias("gram")
     )
     total = stream.count()
     true_hits = stream.join(bg, "gram").count()
