@@ -30,6 +30,26 @@ Scale design (100 TB corpus, 1000 executors):
 - Everything before exchange 1 is one whole-stage-codegen'd map stage over
   a columnar Parquet scan that reads only (doc_id, text).
 
+Resident shingle sets: the reference re-reads and re-shingles every
+document for every query (both MR jobs re-run per query,
+``BookQuery.java:194-257``). Here the corpus side of every operator
+below reads one persisted ``(doc_id, shingle_set)`` frame per corpus
+DataFrame (:func:`_shingle_sets`), so a served corpus is tokenized and
+shingled once — by the first request — and every later request scans
+the cached sets. Lifetime: the frame lives as long as the corpus
+DataFrame object; when that object is garbage-collected a finalizer
+unpersists it. Invalidation: ``load_table`` returns one DataFrame per
+parquet fingerprint and refreshes Spark's cache for a rewritten file,
+so an in-place rewrite yields a fresh corpus object with fresh sets.
+Spark's cache matches plans, not objects: two live corpus DataFrames
+with equal plans share one cache entry, and the first one collected
+unpersists it for both (the survivor stays correct but re-shingles).
+Memory: the sets are stored ``MEMORY_AND_DISK_DESER`` (Spark's
+DataFrame default); partitions that do not fit in executor storage
+memory spill to local disk instead of failing, so a corpus larger than
+the cluster's memory still gets one shingling pass, with the spilled
+part read back from disk per request.
+
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
 and ``s`` counts intersection shingles that survive the
@@ -42,6 +62,9 @@ from __future__ import annotations
 
 import weakref
 
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,6 +83,45 @@ from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
 _qterms_cache: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+# Resident corpus shingle sets: corpus DataFrame identity ->
+# {text_col: persisted (doc_id, shingle_set) frame}. Keyed like
+# _qterms_cache (so load_table's fingerprint is the invalidation rule);
+# a finalizer on the corpus DataFrame unpersists its frames.
+_shingle_sets_cache: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _unpersist(frames: dict) -> None:
+    """Finalizer of a corpus DataFrame: drop its resident frames from
+    Spark's cache. It runs whenever the garbage collector gets to the
+    corpus, possibly after its session was stopped, so a failing call
+    into the JVM (a Py4J error, or a JVM exception PySpark converted) is
+    ignored: there is no cache left to release."""
+    for frame in frames.values():
+        try:
+            frame.unpersist()
+        except (Py4JError, PySparkException):
+            pass
+
+
+def _shingle_sets(documents: DataFrame, text_col: str = "text") -> DataFrame:
+    """The resident ``(doc_id, shingle_set)`` frame of ``documents``:
+    ``staged_shingles_frame`` persisted on first use, then returned as
+    the same object on every later call with the same corpus object."""
+    frames = _shingle_sets_cache.get(documents)
+    if frames is None:
+        frames = _shingle_sets_cache[documents] = {}
+        # not at interpreter exit: the JVM may already be gone by then
+        weakref.finalize(documents, _unpersist, frames).atexit = False
+    frame = frames.get(text_col)
+    if frame is None:
+        frame = frames[text_col] = staged_shingles_frame(
+            documents, text_col, alias="shingle_set"
+        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    return frame
 
 
 def _query_side(documents: DataFrame, query_doc_id) -> DataFrame:
@@ -102,7 +164,7 @@ def similarity_to_query(
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
 
-    docs = staged_shingles_frame(documents, alias="shingle_set")
+    docs = _shingle_sets(documents)
     qside = _query_side(documents, query_doc_id)
 
     if mode == "jaccard":
@@ -221,7 +283,7 @@ def similarity_multi_query(
     Result-identical to the broadcast plan (pytest-pinned with a forced
     threshold); ``stats['multi_query_plan']`` records the choice.
     """
-    docs = staged_shingles_frame(documents, text_col, alias="shingle_set")
+    docs = _shingle_sets(documents, text_col)
     query_ids = list(query_ids)  # materialize: consumed twice (filter + memo key)
     qset = docs.filter(F.col("doc_id").isin(query_ids)).select(
         F.col("doc_id").alias("qid"),
@@ -291,6 +353,13 @@ def top_k_similar(
     """Ranked top-k variant — the obvious extension the reference lacks
     (its output is ordered by packed string key, quirk Q7). Spark plans
     this as ``TakeOrderedAndProject`` (no global sort materialization).
+
+    Serving: the corpus shingle sets are resident per corpus DataFrame
+    (see the module docstring). Repeated calls on one ``documents``
+    object — e.g. the frame ``load_table`` returns for a session — pay
+    tokenizing and shingling once, on the first call; each later call
+    scans the persisted sets. Dropping the corpus object unpersists
+    them; an in-place rewrite of the table gets fresh ones.
     """
     return similarity_to_query(
         documents, query_doc_id, mode=mode, total_documents=total_documents

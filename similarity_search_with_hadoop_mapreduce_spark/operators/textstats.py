@@ -22,6 +22,7 @@ from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     ngrams_attr_sql,
     stage_tokens,
     staged_shingles_frame,
+    word_pairs_sql,
 )
 from similarity_search_with_hadoop_mapreduce_spark.session import (
     table_location,
@@ -832,21 +833,9 @@ def lm_bigram_score(
         if model_docs is None
         else stage_tokens(model_docs, text_col, "doc_id")
     )
-    # Bigrams as arrays_zip(tokens[:-1], tokens[1:]) — two slices, no
-    # indexed lambda. This matters under sessions WITHOUT the package's
-    # InferFiltersFromGenerate exclusion (session.py:55): the inferred
-    # size(...)>0 filter inlines the staged token expression into the
-    # scan filter, and an indexed transform lambda there re-evaluates
-    # the whole split chain PER BIGRAM INDEX — O(len²) per document
-    # (measured 40.8 s vs 1.8 s at sf0.1). The slice/zip form inlines
-    # to a constant number of linear passes and stays native codegen.
     pairs = staged.select(
         "doc_id",
-        F.expr(
-            "arrays_zip("
-            "  slice(_toks, 1, greatest(size(_toks) - 1, 0)), "
-            "  slice(_toks, 2, greatest(size(_toks) - 1, 0)))"
-        ).alias("_bi"),
+        F.expr(word_pairs_sql("_toks")).alias("_bi"),
     )
     bi = pairs.select("doc_id", F.explode("_bi").alias("b")).select(
         "doc_id",
@@ -858,11 +847,7 @@ def lm_bigram_score(
     else:
         tr_pairs = tr_staged.select(
             "doc_id",
-            F.expr(
-                "arrays_zip("
-                "  slice(_toks, 1, greatest(size(_toks) - 1, 0)), "
-                "  slice(_toks, 2, greatest(size(_toks) - 1, 0)))"
-            ).alias("_bi"),
+            F.expr(word_pairs_sql("_toks")).alias("_bi"),
         )
         tr_bi = tr_pairs.select(F.explode("_bi").alias("b")).select(
             F.col("b").getField("0").alias("w1"),
@@ -1422,11 +1407,7 @@ def save_lm_model(
 
     staged = stage_tokens(documents, text_col, "doc_id")
     pairs = staged.select(
-        F.expr(
-            "arrays_zip("
-            "  slice(_toks, 1, greatest(size(_toks) - 1, 0)), "
-            "  slice(_toks, 2, greatest(size(_toks) - 1, 0)))"
-        ).alias("_bi")
+        F.expr(word_pairs_sql("_toks")).alias("_bi")
     )
     bi = pairs.select(F.explode("_bi").alias("b")).select(
         F.col("b").getField("0").alias("w1"),
@@ -1483,11 +1464,7 @@ def lm_score_from_model(
     staged = stage_tokens(documents, text_col, "doc_id")
     pairs = staged.select(
         "doc_id",
-        F.expr(
-            "arrays_zip("
-            "  slice(_toks, 1, greatest(size(_toks) - 1, 0)), "
-            "  slice(_toks, 2, greatest(size(_toks) - 1, 0)))"
-        ).alias("_bi"),
+        F.expr(word_pairs_sql("_toks")).alias("_bi"),
     )
     bi = pairs.select("doc_id", F.explode("_bi").alias("b")).select(
         "doc_id",

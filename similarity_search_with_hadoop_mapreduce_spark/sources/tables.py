@@ -103,14 +103,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cache = _table_cache.setdefault(spark, {})
     # fingerprint in the key (an os.stat, ~µs): an in-place fixture rewrite
     # yields a FRESH DataFrame object, which cascades invalidation to every
-    # identity-keyed plan-routing memo downstream (_fan_cache, temporal's
-    # _span_cache, similarity's _qterms_cache) — one invalidation policy
-    # for the whole catalog instead of per-memo fingerprints (ADVICE r3).
+    # identity-keyed memo downstream (_fan_cache, temporal's _span_cache,
+    # similarity's _qterms_cache and _shingle_sets_cache) — one
+    # invalidation policy for the whole catalog instead of per-memo
+    # fingerprints (ADVICE r3).
     key = (sf_dir, name, table_fingerprint(sf_dir, name))
     if key in cache:
         return cache[key]
-    for k in [k for k in cache if k[:2] == key[:2]]:
+    stale = [k for k in cache if k[:2] == key[:2]]
+    for k in stale:
         del cache[k]  # superseded vintage of the same table
+    if stale:
+        # Spark's cache matches plans, not objects: the new frame's plan
+        # equals the old vintage's, so a persisted frame derived from the
+        # old vintage (similarity's resident shingle sets) would answer
+        # for the new one with the old file's rows. Refresh every cache
+        # entry that reads this path.
+        spark.catalog.refreshByPath(f"{sf_dir}/{name}.parquet")
     if name == "events":
         if events_ts_type(sf_dir).startswith("timestamp[us"):
             df = spark.read.parquet(f"{sf_dir}/{name}.parquet").withColumn(
@@ -127,12 +136,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# fan_out memo: input DataFrame -> fanned-out DataFrame. load_table
-# returns the cached object per (session, table), so repeated
+# fan_out memo: input DataFrame -> repartition target (0: none needed).
+# load_table returns the cached object per (session, table), so repeated
 # fan_out(corpus) calls hit this and skip the plan-stats probe. Keyed
 # weakly on the input df object (DataFrame doesn't override
-# __eq__/__hash__, so this is identity).
-_fan_cache: "weakref.WeakKeyDictionary[DataFrame, DataFrame]" = (
+# __eq__/__hash__, so this is identity). The value is the decision, never
+# a DataFrame: a WeakKeyDictionary holds values strongly, so storing the
+# unrepartitioned input as its own value would keep the key alive forever.
+_fan_cache: "weakref.WeakKeyDictionary[DataFrame, int]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -161,18 +172,20 @@ def fan_out(df: DataFrame) -> DataFrame:
     time (``load_corpus_dir`` does: it repartitions when the listing has
     fewer files than the cluster has cores).
     """
-    out = _fan_cache.get(df)
-    if out is not None:
-        return out
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    # typed SQLConf getter: Spark validates the byte string at conf.set
-    # time, so this is always a parsed, legal value
-    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    out = df if plan_bytes >= target * max_pb else df.repartition(target)
-    _fan_cache[df] = out
-    return out
+    target = _fan_cache.get(df)
+    if target is None:
+        spark = df.sparkSession
+        target = spark.sparkContext.defaultParallelism
+        # typed SQLConf getter: Spark validates the byte string at
+        # conf.set time, so this is always a parsed, legal value
+        max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        plan_bytes = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+        if plan_bytes >= target * max_pb:
+            target = 0
+        _fan_cache[df] = target
+    return df.repartition(target) if target else df
 
 
 def load_corpus_dir(spark: SparkSession, path: str) -> DataFrame:

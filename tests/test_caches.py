@@ -2,16 +2,20 @@
 
 The invalidation policy lives in ONE place — ``load_table`` keys on the
 parquet fingerprint, so an in-place fixture rewrite yields a fresh
-DataFrame object and every identity-keyed plan-routing memo downstream
-(_fan_cache, _span_cache, _qterms_cache) starts clean. The persisted
-ANN index cache additionally unpersists superseded entries.
+DataFrame object and every identity-keyed memo downstream (_fan_cache,
+_span_cache, _qterms_cache, the resident shingle sets) starts clean. The
+persisted ANN index cache additionally unpersists superseded entries;
+resident shingle sets are unpersisted when their corpus DataFrame is
+garbage-collected.
 """
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 import shutil
+import weakref
 
 import pytest
 
@@ -186,3 +190,142 @@ def test_fan_out_follows_max_partition_bytes(spark):
         assert fan_out(fresh) is fresh
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_fan_out_memo_releases_unrepartitioned_frame(spark):
+    """A frame fan_out leaves as is must stay collectable: the memo holds
+    the repartition decision, not the frame (a WeakKeyDictionary holds
+    its values strongly, so a frame stored as its own value never dies)."""
+    from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
+
+    path = f"{SF}/documents.parquet"
+    split = os.path.getsize(path) // spark.sparkContext.defaultParallelism // 2
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        fresh = spark.read.parquet(path)
+        assert T.fan_out(fresh) is fresh  # no repartition
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert fresh in T._fan_cache
+    ref = weakref.ref(fresh)
+    del fresh
+    gc.collect()
+    # a WeakKeyDictionary entry cannot outlive its key
+    assert ref() is None
+
+
+def _sim_rows(df):
+    return sorted((r.doc_id, r.query_id, r.score) for r in df.collect())
+
+
+def _fresh_copy(spark, docs):
+    """The same rows in a DataFrame whose plan no cache entry matches."""
+    return spark.createDataFrame(docs.collect(), docs.schema)
+
+
+def test_resident_shingle_sets_reused_and_exact(spark):
+    """Repeated scoring on one corpus frame reads one persisted shingle
+    frame (an InMemoryTableScan, not a re-tokenizing scan) and answers
+    exactly what a never-cached copy of the corpus answers."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    fresh = _fresh_copy(spark, docs)
+    for mode in ("parity", "jaccard"):
+        first = _sim_rows(S.similarity_to_query(docs, 0, mode=mode))
+        second_df = S.similarity_to_query(docs, 0, mode=mode)
+        assert "InMemoryTableScan" in explain_string(second_df)
+        assert _sim_rows(second_df) == first
+        assert first == _sim_rows(S.similarity_to_query(fresh, 0, mode=mode))
+        assert first  # a non-trivial answer
+    sets = S._shingle_sets(docs)
+    assert S._shingle_sets(docs) is sets
+    assert sets.storageLevel.useMemory
+    multi = S.similarity_multi_query(docs, [0, 1])
+    assert "InMemoryTableScan" in explain_string(multi)
+    assert sorted(multi.collect()) == sorted(
+        S.similarity_multi_query(fresh, [0, 1]).collect()
+    )
+
+
+def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
+    """An in-place rewrite with different rows gets a fresh resident
+    frame that answers from the NEW rows, even while the old vintage's
+    frame is still alive and cached (Spark's cache matches plans, and
+    both vintages read the same path)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+
+    path = tmp_path / "documents.parquet"
+    shutil.copy(f"{SF}/documents.parquet", path)
+    old = load_table(spark, str(tmp_path), "documents")
+    old_rows = _sim_rows(S.similarity_to_query(old, 0))
+    old_sets = S._shingle_sets(old)
+
+    # doc 1 becomes a copy of the query doc 0, so it must score 1.0
+    rows = pq.read_table(path).to_pylist()
+    query_text = next(r["text"] for r in rows if r["doc_id"] == 0)
+    for r in rows:
+        if r["doc_id"] == 1:
+            r["text"] = query_text
+    pq.write_table(pa.Table.from_pylist(rows, schema=pq.read_schema(path)), path)
+
+    new = load_table(spark, str(tmp_path), "documents")
+    assert new is not old
+    new_rows = _sim_rows(S.similarity_to_query(new, 0))
+    assert S._shingle_sets(new) is not old_sets
+    assert new_rows != old_rows
+    assert new_rows == _sim_rows(S.similarity_to_query(_fresh_copy(spark, new), 0))
+    assert (1, "0", 1.0) in new_rows
+
+
+def test_resident_shingle_sets_unpersisted_with_corpus(spark):
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"resident word{i} alpha beta gamma {i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    S.top_k_similar(docs, 0, k=3).collect()
+    sets = S._shingle_sets(docs)
+    assert sets.storageLevel.useMemory
+    del docs
+    gc.collect()
+    assert not sets.storageLevel.useMemory
+
+
+def test_resident_finalizer_tolerates_stopped_session():
+    """The unpersist finalizer runs whenever the collector gets to the
+    corpus, possibly after its session was stopped: the failing JVM call
+    (a Py4J error, or a JVM exception PySpark converted) must not escape,
+    and every frame is still tried."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+
+    calls = []
+
+    class Gone:
+        def __init__(self, exc):
+            self.exc = exc
+
+        def unpersist(self):
+            calls.append(self.exc)
+            raise self.exc("SparkContext has been shutdown")
+
+    S._unpersist({"text": Gone(Py4JError), "body": Gone(PySparkException)})
+    assert calls == [Py4JError, PySparkException]
