@@ -43,12 +43,25 @@ parquet fingerprint and refreshes Spark's cache for a rewritten file,
 so an in-place rewrite yields a fresh corpus object with fresh sets.
 Spark's cache matches plans, not objects: two live corpus DataFrames
 with equal plans share one cache entry, and the first one collected
-unpersists it for both (the survivor stays correct but re-shingles).
+unpersists it for both; the survivor finds its sets uncached on its next
+request and caches them again (one shingling pass).
 Memory: the sets are stored ``MEMORY_AND_DISK_DESER`` (Spark's
 DataFrame default); partitions that do not fit in executor storage
 memory spill to local disk instead of failing, so a corpus larger than
 the cluster's memory still gets one shingling pass, with the spilled
 part read back from disk per request.
+
+Query ids are data, not code: every operator below binds its query ids
+through SQL parameter markers into a small local relation
+(:func:`_query_keys`) and joins it to the resident sets, instead of
+filtering on a literal id. A literal would be inlined into the Java
+source Spark generates (the query-side filter, the cache's batch-pruning
+predicate, the U2 filter), so every new id compiled and loaded new
+classes and then had to be JIT-compiled. With the id in a row, requests
+for different ids run one plan, and from the second request on Spark's
+codegen cache supplies every generated class. The trade-off: the
+query-side lookup is a join, not a filter, so it loses the cache's
+min/max batch pruning on ``doc_id`` and scans every resident batch.
 
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
@@ -120,22 +133,47 @@ def _shingle_sets(documents: DataFrame, text_col: str = "text") -> DataFrame:
     if frame is None:
         frame = frames[text_col] = staged_shingles_frame(
             documents, text_col, alias="shingle_set"
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        )
+    # Spark's cache matches plans, so another corpus object with an
+    # equal plan shares this entry, and its finalizer may have dropped
+    # it: cache it again rather than re-shingle on every request
+    if frame.storageLevel == StorageLevel.NONE:
+        frame.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     return frame
 
 
-def _query_side(documents: DataFrame, query_doc_id) -> DataFrame:
-    """One-row broadcast DataFrame ``(q_set, q_len)`` for the query document.
+def _query_keys(docs: DataFrame, query_ids) -> DataFrame:
+    """The query ids as data: a local relation ``(qid)``, one row per id,
+    typed as ``docs.doc_id``. Every id is bound through a parameter
+    marker, so the plan, and the code Spark generates for it, is the same
+    for every id: warm requests hit Spark's codegen cache instead of
+    compiling and loading new classes, as a literal id would make them.
+    The leading NULL row keeps ``VALUES`` non-empty for an empty id list;
+    the filter drops it (and a NULL id, which matches no document)."""
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    rows = ", ".join(["(NULL)"] + ["(?)"] * len(query_ids))
+    return docs.sparkSession.sql(
+        f"SELECT CAST(qid AS {id_type}) AS qid FROM VALUES {rows} AS t(qid)"
+        " WHERE qid IS NOT NULL",
+        args=list(query_ids),
+    )
+
+
+def _query_side(docs: DataFrame, query_doc_id) -> DataFrame:
+    """One-row broadcast DataFrame ``(qid, q_set, q_len)`` for the query
+    document: its row of the resident sets ``docs``, looked up by joining
+    the bound query key (:func:`_query_keys`).
 
     The reference ships the raw query text to every task via the job
     ``Configuration`` and re-parses it in every ``setup()``
     (``BookQuery.java:205,31-41,122-133``); broadcasting the *parsed*
     shingle set once is the Spark-native equivalent (O3 in SURVEY §4.1).
     """
+    key = F.broadcast(_query_keys(docs, [query_doc_id]))
     q = (
-        staged_shingles_frame(documents, alias="shingle_set")
-        .filter(F.col("doc_id") == F.lit(query_doc_id))
+        docs.join(key, F.col("doc_id") == F.col("qid"))
         .select(
+            "qid",
             F.col("shingle_set").alias("q_set"),
             F.size("shingle_set").alias("q_len"),
         )
@@ -165,7 +203,7 @@ def similarity_to_query(
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
 
     docs = _shingle_sets(documents)
-    qside = _query_side(documents, query_doc_id)
+    qside = _query_side(docs, query_doc_id)
 
     if mode == "jaccard":
         # Textbook |D∩Q| / |D∪Q|; single map stage, no shuffle at all.
@@ -173,7 +211,7 @@ def similarity_to_query(
         union = F.size(F.array_union("shingle_set", "q_set"))
         return (
             docs.join(qside)  # broadcast nested-loop of a 1-row side
-            .filter(F.col("doc_id") != F.lit(query_doc_id))
+            .filter(F.col("doc_id") != F.col("qid"))
             .select(
                 "doc_id",
                 F.lit(str(query_doc_id)).alias("query_id"),
@@ -188,17 +226,20 @@ def similarity_to_query(
 
     # T5/T6: map-side semi-join with the broadcast query set, *then* take
     # the size — len1 = |D∩Q| (quirk Q1), computed before any shuffle so
-    # only intersecting shingles are ever exploded (O1/O6).
+    # only intersecting shingles are ever exploded (O1/O6). ``is_q``
+    # flags the query document's own postings for the U2 filter.
     kept = (
         docs.join(qside)
         .select(
             "doc_id",
             "q_len",
+            (F.col("doc_id") == F.col("qid")).alias("is_q"),
             F.array_intersect("shingle_set", "q_set").alias("kept"),
         )
         .select(
             "doc_id",
             "q_len",
+            "is_q",
             F.size("kept").alias("len1"),
             F.explode("kept").alias("term"),  # T7; includes the query doc (Q5)
         )
@@ -211,7 +252,9 @@ def similarity_to_query(
         kept.groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("df"),
-            F.collect_list(F.struct("doc_id", "len1", "q_len")).alias("postings"),
+            F.collect_list(F.struct("doc_id", "len1", "q_len", "is_q")).alias(
+                "postings"
+            ),
         )
         .filter((F.col("df") != n) & (F.col("df") != F.lit(1)))
     )
@@ -222,8 +265,8 @@ def similarity_to_query(
     # for line-level parity.
     pairs = (
         postings.select(F.explode("postings").alias("p"))
-        .select("p.doc_id", "p.len1", "p.q_len")
-        .filter(F.col("doc_id") != F.lit(query_doc_id))  # U2
+        .select("p.doc_id", "p.len1", "p.q_len", "p.is_q")
+        .filter(~F.col("is_q"))  # U2
         .groupBy("doc_id", "len1", "q_len")
         .agg(F.count(F.lit(1)).alias("s"))
     )
@@ -284,9 +327,11 @@ def similarity_multi_query(
     threshold); ``stats['multi_query_plan']`` records the choice.
     """
     docs = _shingle_sets(documents, text_col)
-    query_ids = list(query_ids)  # materialize: consumed twice (filter + memo key)
-    qset = docs.filter(F.col("doc_id").isin(query_ids)).select(
-        F.col("doc_id").alias("qid"),
+    query_ids = list(query_ids)  # materialize: consumed twice (keys + memo key)
+    # one key row per distinct id, as isin matched each query doc once
+    keys = F.broadcast(_query_keys(docs, list(dict.fromkeys(query_ids))))
+    qset = docs.join(keys, F.col("doc_id") == F.col("qid")).select(
+        "qid",
         F.col("shingle_set").alias("qs"),
         F.size("shingle_set").alias("q_len"),
     )
@@ -359,7 +404,12 @@ def top_k_similar(
     object — e.g. the frame ``load_table`` returns for a session — pay
     tokenizing and shingling once, on the first call; each later call
     scans the persisted sets. Dropping the corpus object unpersists
-    them; an in-place rewrite of the table gets fresh ones.
+    them; an in-place rewrite of the table gets fresh ones. The query id
+    is bound as data, not inlined as a literal, so repeated requests for
+    different ids reuse the code Spark generated for the first one
+    instead of compiling new classes; in exchange the query's own row is
+    found by a join that scans every resident batch (no min/max batch
+    pruning on ``doc_id``).
     """
     return similarity_to_query(
         documents, query_doc_id, mode=mode, total_documents=total_documents

@@ -329,3 +329,143 @@ def test_resident_finalizer_tolerates_stopped_session():
 
     S._unpersist({"text": Gone(Py4JError), "body": Gone(PySparkException)})
     assert calls == [Py4JError, PySparkException]
+
+
+def test_resident_shingle_sets_survive_plan_equal_corpus_collected(spark):
+    """Two live corpus frames with equal plans share one Spark cache
+    entry; when the first is collected its finalizer drops that entry,
+    and the survivor must cache its sets again, not re-shingle on every
+    request."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+
+    path = f"{SF}/documents.parquet"
+    first = spark.read.parquet(path)
+    second = spark.read.parquet(path)
+    S.top_k_similar(first, 0, k=5).collect()
+    S.top_k_similar(second, 1, k=5).collect()
+    del first
+    gc.collect()
+    df = S.top_k_similar(second, 2, k=5)
+    assert "InMemoryTableScan" in explain_string(df)
+    assert S._shingle_sets(second).storageLevel.useMemory
+    assert _sim_rows(df) == _sim_rows(
+        S.top_k_similar(_fresh_copy(spark, second), 2, k=5)
+    )
+
+
+def _compiles(spark) -> int:
+    """Janino compiles of generated classes so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_requests_compile_no_new_code(spark):
+    """The query id is bound as data, so requests for different ids run
+    one plan and one set of generated classes: by the third id, Spark's
+    codegen cache answers every stage and nothing is compiled."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+    ops = {
+        "parity": lambda d, q: S.top_k_similar(d, q, k=10),
+        "jaccard": lambda d, q: S.similarity_to_query(d, q, mode="jaccard"),
+        "multi": lambda d, q: S.similarity_multi_query(d, [q, q + 7]),
+    }
+    ids = (3, 11, 19)
+    answers = {}
+    for name, op in ops.items():
+        for q in ids:
+            before = _compiles(spark)
+            answers[name, q] = sorted(op(docs, q).collect())
+            assert answers[name, q]  # a non-trivial answer
+        assert _compiles(spark) == before, name  # the third id compiled nothing
+    fresh = _fresh_copy(spark, docs)
+    for (name, q), rows in answers.items():
+        assert rows == sorted(ops[name](fresh, q).collect()), (name, q)
+
+
+def test_query_id_binding_edge_cases(spark, tmp_path):
+    """Ids reach the plan as bound parameters of the corpus's doc_id type:
+    bigint ids beyond the int range, and string ids holding a space or
+    '%', score as the reference does; a repeated id scores once; an id
+    absent from the corpus, like an empty id list, matches no query
+    document and yields an empty result."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import (
+        load_corpus_dir,
+        load_table,
+    )
+    from tests.reference_sim import jaccard_similarity, mr_similarity
+
+    def check(frame, corpus, q):
+        got = {r.doc_id: r.score for r in S.similarity_to_query(frame, q).collect()}
+        want = mr_similarity(corpus, q)
+        assert got.keys() == want.keys() and got, q
+        assert all(math.isclose(got[k], want[k], rel_tol=1e-12) for k in want)
+        got = {
+            r.doc_id: r.score
+            for r in S.similarity_to_query(frame, q, mode="jaccard").collect()
+        }
+        assert got == pytest.approx(jaccard_similarity(corpus, q), rel=1e-12)
+        multi = S.similarity_multi_query(frame, [q]).collect()
+        assert {r.doc_id for r in multi} == set(got)
+        assert {r.query_id for r in multi} == {str(q)}
+        # a repeated id scores once, as a one-off id does
+        assert sorted(S.similarity_multi_query(frame, [q, q]).collect()) == sorted(
+            multi
+        )
+
+    def assert_empty(frame, q):
+        assert S.similarity_to_query(frame, q).collect() == []
+        assert S.similarity_to_query(frame, q, mode="jaccard").collect() == []
+        assert S.top_k_similar(frame, q, k=3).collect() == []
+        assert S.similarity_multi_query(frame, [q]).collect() == []
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox sat down by the river",
+        "a quick brown fox jumps over fences all day",
+        "the lazy dog jumps over the quick brown fox again",
+        "completely different text with no shared words",
+    ]
+
+    # bigint ids past the int range (load_table)
+    base = 2**40
+    corpus = {base + i: t for i, t in enumerate(texts)}
+    (tmp_path / "sf").mkdir()
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(list(corpus), pa.int64()),
+            "text": list(corpus.values()),
+        }),
+        tmp_path / "sf" / "documents.parquet",
+    )
+    docs = load_table(spark, str(tmp_path / "sf"), "documents")
+    check(docs, corpus, base)
+    check(docs, corpus, base + 3)
+    for absent in (base + 99, 0, -1):
+        assert_empty(docs, absent)
+    assert S.similarity_multi_query(docs, []).collect() == []
+
+    # string ids from file names (load_corpus_dir)
+    names = ["query", "my doc", "100%", "p+q", "other"]
+    (tmp_path / "dir").mkdir()
+    for name, text in zip(names, texts):
+        (tmp_path / "dir" / f"{name}.txt").write_text(text)
+    corpus = dict(zip(names, texts))
+    raw = load_corpus_dir(spark, str(tmp_path / "dir"))
+    for q in ("my doc", "100%", "query"):
+        check(raw, corpus, q)
+    for absent in ("my%20doc", "100%25", "nope", "Query"):
+        assert_empty(raw, absent)

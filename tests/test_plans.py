@@ -44,7 +44,8 @@ def test_flagship_has_exactly_two_shuffles_and_a_broadcast(spark):
 def test_jaccard_mode_is_map_only(spark):
     df = similarity_to_query(_docs(spark), 0, mode="jaccard")
     assert shuffle_exchange_count(df) == 0
-    assert broadcast_exchange_count(df) == 1
+    # the query side, and the one-row query key it is looked up by
+    assert broadcast_exchange_count(df) == 2
 
 
 def test_minhash_signatures_map_only(spark):
@@ -90,8 +91,12 @@ def test_multi_query_one_pair_shuffle_and_broadcast_query_side(spark):
     # the union-of-query-terms scalar agg + the final pair count; the
     # corpus side itself never shuffles before aggregation
     assert shuffle_exchange_count(df) == 2
-    # both query-side tables (term union, exploded term table) broadcast
-    assert broadcast_exchange_count(df) == 2
+    # both query-side tables (term union, exploded term table) broadcast,
+    # and so does the query-id key they are looked up by: once per table
+    # in the static plan, once at run time (AQE reuses the exchange)
+    assert broadcast_exchange_count(df) == 4
+    df.collect()
+    assert "ReusedExchange" in explain_string(df, "simple")
 
 
 def test_filter_and_projection_reach_parquet_scan(spark):
