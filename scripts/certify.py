@@ -42,10 +42,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+SCRIPTS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(SCRIPTS)
+sys.path.insert(0, REPO)
+sys.path.insert(0, SCRIPTS)
 
-from check_oracle import TABLES, _canon, value_hash  # noqa: E402
+from check_oracle import compare, duckdb_views  # noqa: E402
 
 
 def _compare(sdf, oracle, con):
@@ -55,20 +57,10 @@ def _compare(sdf, oracle, con):
     if oracle is None:
         return "rows_only", "", len(srows)
     res = con.sql(oracle)
-    dcols = list(res.columns)
     drows = [tuple(r) for r in res.fetchall()]
-    if sorted(scols) != sorted(dcols):
-        return "fail", f"columns spark={scols} duckdb={dcols}", len(srows)
-    if len(srows) != len(drows):
-        return "fail", f"rowcount spark={len(srows)} duckdb={len(drows)}", len(srows)
-    order = sorted(range(len(scols)), key=lambda i: scols[i])
-    dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    if value_hash(srows, order) != value_hash(drows, dorder):
-        ss = sorted("\x1f".join(_canon(r[i]) for i in order) for r in srows)
-        dd = sorted("\x1f".join(_canon(r[i]) for i in dorder) for r in drows)
-        diff = next((f"spark={a[:120]} duckdb={b[:120]}"
-                     for a, b in zip(ss, dd) if a != b), "")
-        return "fail", f"value-hash mismatch {diff}", len(srows)
+    problems = compare(scols, srows, res.columns, drows)
+    if problems:
+        return "fail", " ".join(p.strip() for p in problems[:2]), len(srows)
     return "ok", "", len(srows)
 
 
@@ -95,13 +87,7 @@ CURATED_SKIP_AT_10X = {
 
 
 def _sweep(spark, sf_dir, surface, qs, orc, skip: dict | None = None):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(sf_dir)
     t_sweep = time.time()
     entries, failed = {}, []
     for name, fn in qs.items():
@@ -246,20 +232,17 @@ def main() -> int:
         if not os.path.isdir(sf1_dir):
             print(f"building {sf1_dir} via make_scale10x.py ...", flush=True)
             subprocess.run(
-                [sys.executable,
-                 os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "make_scale10x.py")],
+                [sys.executable, os.path.join(SCRIPTS, "make_scale10x.py")],
                 check=True, timeout=3600,
             )
         spark.stop()  # the sweep builds its own tuned session
+        # the sweep writes scale_sweep.json into its working directory
         rc = subprocess.run(
-            [sys.executable,
-             os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "scale_sweep.py"), sf1_dir],
-            timeout=7200,
+            [sys.executable, os.path.join(SCRIPTS, "scale_sweep.py"), sf1_dir],
+            cwd=REPO, timeout=7200,
         ).returncode
         try:
-            with open("/root/repo/scale_sweep.json") as f:
+            with open(os.path.join(REPO, "scale_sweep.json")) as f:
                 sw = json.load(f)
             sweep_summary = {
                 "exit_code": rc,
@@ -272,7 +255,7 @@ def main() -> int:
         import subprocess
 
         head = subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, timeout=10,
         ).stdout.strip()
     except Exception:  # noqa: BLE001

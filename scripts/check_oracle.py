@@ -12,10 +12,11 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -53,23 +54,53 @@ def value_hash(rows: list[tuple], col_order: list[int]) -> str:
     return h.hexdigest()
 
 
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table of ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare(scols, srows, dcols, drows) -> list[str]:
+    """The gate's verdict on a Spark result against its DuckDB oracle:
+    empty when column names (in any order), row count and the
+    order-insensitive value hash all agree, else the problems found."""
+    problems = []
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"columns spark={scols} duckdb={dcols}")
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
+    if not problems:
+        order = sorted(range(len(scols)), key=lambda i: scols[i])
+        dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
+        hs, hd = value_hash(srows, order), value_hash(drows, dorder)
+        if hs != hd:
+            problems.append("value-hash mismatch")
+            ss = sorted("\x1f".join(_canon(r[i]) for i in order) for r in srows)
+            dd = sorted("\x1f".join(_canon(r[i]) for i in dorder) for r in drows)
+            diffs = [(a, b) for a, b in zip(ss, dd) if a != b][:3]
+            for a, b in diffs:
+                problems.append(f"  spark : {a[:200]}")
+                problems.append(f"  duckdb: {b[:200]}")
+    return problems
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--all"]
     use_all = "--all" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    import duckdb
-
     from __spark_entry__ import oracle_sql, queries
     from similarity_search_with_hadoop_mapreduce_spark.session import get_session
 
     spark = get_session("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(sf_dir)
 
     if use_all:  # full fine-grained registry instead of the driver surface
         from similarity_search_with_hadoop_mapreduce_spark.registry import (
@@ -125,23 +156,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {e}")
             continue
 
-        problems = []
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"columns spark={scols} duckdb={dcols}")
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
-        if not problems:
-            order = sorted(range(len(scols)), key=lambda i: scols[i])
-            dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
-            hs, hd = value_hash(srows, order), value_hash(drows, dorder)
-            if hs != hd:
-                problems.append("value-hash mismatch")
-                ss = sorted("\x1f".join(_canon(r[i]) for i in order) for r in srows)
-                dd = sorted("\x1f".join(_canon(r[i]) for i in dorder) for r in drows)
-                diffs = [(a, b) for a, b in zip(ss, dd) if a != b][:3]
-                for a, b in diffs:
-                    problems.append(f"  spark : {a[:200]}")
-                    problems.append(f"  duckdb: {b[:200]}")
+        problems = compare(scols, srows, dcols, drows)
         n_checked += 1
         if problems:
             failures.append((name, "; ".join(problems[:1])))

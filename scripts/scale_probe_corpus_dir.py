@@ -22,7 +22,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_FILES = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
 N_DIRS = int(sys.argv[2]) if len(sys.argv) > 2 else 64

@@ -37,10 +37,11 @@ Usage: python scripts/scale_probe_dup_spans.py [small_n] [scale_mult]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F

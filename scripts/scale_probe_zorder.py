@@ -40,7 +40,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF1 = sys.argv[1] if len(sys.argv) > 1 else "/dev/shm/sparkgraft-sf1.0"
 N_FILES = int(sys.argv[2]) if len(sys.argv) > 2 else 64

@@ -10,6 +10,16 @@ with exactly two shuffle exchanges:
 1. ``groupBy(term)``    — the Job-1 shuffle (``BookQuery.java:92``)
 2. ``groupBy(doc_id)``  — the Job-2 shuffle (``BookQuery.java:153``)
 
+The parity path is built from the reference's stages, one private
+function each, and the registry's stage entries (``semi_join_filter``,
+``intersection_size``, ``posting_lists``, ``pair_counts``) are
+projections of these same functions: :func:`_intersections` (T5/T6, the
+semi-join), :func:`_postings` (Job 1: the pruned term → posting lists)
+and :func:`_pair_counts` (Job 2's per-document count). The prune's ``n``
+is the row count of the resident shingle sets (below) unless the caller
+passes it, so a one-shot caller scans its corpus once: the count caches
+the sets and the scoring job reads them.
+
 There is no intermediate HDFS materialization (the reference round-trips
 ``<output>_temp``, ``BookQuery.java:239-254``), and Spark's hash aggregate
 does map-side partial aggregation automatically, fixing the reference's
@@ -181,6 +191,67 @@ def _query_side(docs: DataFrame, query_doc_id) -> DataFrame:
     return F.broadcast(q)
 
 
+def _intersections(documents: DataFrame, query_doc_id) -> DataFrame:
+    """T5/T6: one row per document, ``(doc_id, q_len, is_q, kept)``, where
+    ``kept = D∩Q`` is the map-side semi-join with the broadcast query set
+    (``retainAll``, ``BookQuery.java:77``) over the resident sets, and
+    ``is_q`` flags the query document's own row. Its size is the
+    reference's ``len1`` (quirk Q1: taken after the intersection)."""
+    docs = _shingle_sets(documents)
+    return docs.join(_query_side(docs, query_doc_id)).select(
+        "doc_id",
+        "q_len",
+        (F.col("doc_id") == F.col("qid")).alias("is_q"),
+        F.array_intersect("shingle_set", "q_set").alias("kept"),
+    )
+
+
+def _postings(
+    documents: DataFrame, query_doc_id, total_documents: int | None = None
+) -> DataFrame:
+    """Job 1 (T7-T10, ``BookQuery.java:92-111``): ``(term, df, postings)``,
+    the query's terms with the documents that share them, after the
+    reference's prune of terms in every document (``df == n``) or only
+    in the query (``df == 1``). ``postings`` is an array of
+    ``(doc_id, len1, q_len, is_q)`` and includes the query doc (Q5).
+    ``n`` is the resident sets' row count unless given."""
+    if total_documents is None:
+        total_documents = _shingle_sets(documents).count()
+    n = F.lit(total_documents)
+    # only intersecting shingles are ever exploded (O1/O6); the group
+    # members are carried along so no re-join with the corpus is needed
+    kept = _intersections(documents, query_doc_id).select(
+        "doc_id",
+        "q_len",
+        "is_q",
+        F.size("kept").alias("len1"),
+        F.explode("kept").alias("term"),  # T7
+    )
+    return (
+        kept.groupBy("term")
+        .agg(
+            F.count(F.lit(1)).alias("df"),
+            F.collect_list(F.struct("doc_id", "len1", "q_len", "is_q")).alias(
+                "postings"
+            ),
+        )
+        .filter((F.col("df") != n) & (F.col("df") != F.lit(1)))
+    )
+
+
+def _pair_counts(postings: DataFrame) -> DataFrame:
+    """Job 2's count (U2-U4, ``BookQuery.java:142-158``): per document
+    other than the query, ``s`` = its shingles that survived the prune,
+    as ``(doc_id, len1, q_len, s)``."""
+    return (
+        postings.select(F.explode("postings").alias("p"))
+        .select("p.doc_id", "p.len1", "p.q_len", "p.is_q")
+        .filter(~F.col("is_q"))  # U2
+        .groupBy("doc_id", "len1", "q_len")
+        .agg(F.count(F.lit(1)).alias("s"))
+    )
+
+
 def similarity_to_query(
     documents: DataFrame,
     query_doc_id=0,
@@ -196,21 +267,20 @@ def similarity_to_query(
 
     ``total_documents`` is the reference's ``totalDocuments`` scalar
     (corpus file count *including* the query doc, ``BookQuery.java:210-214``,
-    quirk Q5); computed with one ``count()`` action when not supplied —
-    the reference's driver did the same file-count RPC.
+    quirk Q5). When not supplied it is the row count of the corpus's
+    resident shingle sets, so counting reads the cached sets (and caches
+    them on a first request) instead of scanning the corpus a second time.
     """
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
 
-    docs = _shingle_sets(documents)
-    qside = _query_side(docs, query_doc_id)
-
     if mode == "jaccard":
         # Textbook |D∩Q| / |D∪Q|; single map stage, no shuffle at all.
+        docs = _shingle_sets(documents)
         inter = F.size(F.array_intersect("shingle_set", "q_set"))
         union = F.size(F.array_union("shingle_set", "q_set"))
         return (
-            docs.join(qside)  # broadcast nested-loop of a 1-row side
+            docs.join(_query_side(docs, query_doc_id))  # 1-row broadcast side
             .filter(F.col("doc_id") != F.col("qid"))
             .select(
                 "doc_id",
@@ -220,56 +290,10 @@ def similarity_to_query(
             .filter(F.col("score") > 0.0)
         )
 
-    if total_documents is None:
-        total_documents = documents.count()
-    n = F.lit(total_documents)
-
-    # T5/T6: map-side semi-join with the broadcast query set, *then* take
-    # the size — len1 = |D∩Q| (quirk Q1), computed before any shuffle so
-    # only intersecting shingles are ever exploded (O1/O6). ``is_q``
-    # flags the query document's own postings for the U2 filter.
-    kept = (
-        docs.join(qside)
-        .select(
-            "doc_id",
-            "q_len",
-            (F.col("doc_id") == F.col("qid")).alias("is_q"),
-            F.array_intersect("shingle_set", "q_set").alias("kept"),
-        )
-        .select(
-            "doc_id",
-            "q_len",
-            "is_q",
-            F.size("kept").alias("len1"),
-            F.explode("kept").alias("term"),  # T7; includes the query doc (Q5)
-        )
-    )
-
-    # T8-T10: shuffle 1 — group by shingle, prune terms appearing in every
-    # document (count == n) or only in the query (count == 1). The group
-    # members are carried along so no re-join with the corpus is needed.
-    postings = (
-        kept.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.collect_list(F.struct("doc_id", "len1", "q_len", "is_q")).alias(
-                "postings"
-            ),
-        )
-        .filter((F.col("df") != n) & (F.col("df") != F.lit(1)))
-    )
-
-    # U2-U6: shuffle 2 — per-document count of surviving shared shingles,
-    # then the reference's literal score expression (BookQuery.java:166).
+    # U5-U6: the reference's literal score expression (BookQuery.java:166).
     # The `sum == len1+len2 → 1.0` guard is dead code (quirk Q4) but kept
     # for line-level parity.
-    pairs = (
-        postings.select(F.explode("postings").alias("p"))
-        .select("p.doc_id", "p.len1", "p.q_len", "p.is_q")
-        .filter(~F.col("is_q"))  # U2
-        .groupBy("doc_id", "len1", "q_len")
-        .agg(F.count(F.lit(1)).alias("s"))
-    )
+    pairs = _pair_counts(_postings(documents, query_doc_id, total_documents))
     score = F.when(
         F.col("s") == F.col("len1") + F.col("q_len"), F.lit(1.0)
     ).otherwise(

@@ -278,7 +278,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     d = _IVF_SERVE_CACHE.setdefault(spark, {})
-    # fingerprint in the key, like _trained_book/_doc_count: an in-place
+    # fingerprint in the key, like _trained_book: an in-place
     # parquet rewrite must rebuild the index, not serve the persisted one
     fp = table_fingerprint(sf_dir, "embeddings")
     key = ("assigned", sf_dir, fp)

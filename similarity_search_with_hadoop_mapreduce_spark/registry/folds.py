@@ -130,7 +130,10 @@ def sim_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
         ngrams_attr_sql,
         stage_tokens,
-        staged_shingles_frame,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
+        _query_side,
+        _shingle_sets,
     )
 
     docs = table(spark, sf_dir, "documents")
@@ -150,11 +153,8 @@ def sim_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat_ws("|", F.sort_array("s"))).alias("set_md5"),
         "s",
     )
-    qset = F.broadcast(
-        staged_shingles_frame(docs, alias="qs")
-        .filter(F.col("doc_id") == 0)
-        .select("qs")
-    )
+    # the query's set as the similarity operator finds it
+    qset = _query_side(_shingle_sets(docs), 0).select("q_set")
     return profile.join(qset).select(
         "doc_id",
         "n_tokens",
@@ -163,7 +163,7 @@ def sim_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gram_md5",
         "n_shingles",
         "set_md5",
-        F.size(F.array_intersect("s", "qs")).alias("len1"),
+        F.size(F.array_intersect("s", "q_set")).alias("len1"),
     )
 
 

@@ -2,6 +2,11 @@
 operator (SURVEY.md §2.2 T2-T12 / U2-U7), each with a full-value DuckDB
 oracle, plus the fused flagship query in both semantic modes.
 
+The stage entries from T5 on (``semi_join_filter``, ``intersection_size``,
+``posting_lists``, ``pair_counts``) are projections of the similarity
+operator's own stages (``_intersections``, ``_postings``,
+``_pair_counts``), so their oracles check the code that serves requests.
+
 The oracle SQL re-derives Java ``String.split`` parity (quirk Q6) in
 DuckDB: ``regexp_split_to_array`` keeps trailing empty tokens (Spark
 limit=-1 does too), so both sides trim them with the same CASE logic;
@@ -20,6 +25,9 @@ from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     staged_shingles_frame,
 )
 from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
+    _intersections,
+    _pair_counts,
+    _postings,
     similarity_multi_query,
     similarity_to_query,
     top_k_similar,
@@ -61,27 +69,6 @@ shingle_sets AS (
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "documents")
-
-
-_DOC_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _doc_count(spark: SparkSession, sf_dir: str) -> int:
-    """Corpus row count, computed once per corpus dir and cached — the
-    same catalog statistic ``ANALYZE TABLE`` persists (the reference's
-    driver likewise counted files once per job submission,
-    BookQuery.java:210-214, not per query execution). Keyed on the
-    parquet fingerprint so an in-place rewrite invalidates (ADVICE r2)."""
-    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import (
-        table_fingerprint,
-    )
-
-    key = (sf_dir, table_fingerprint(sf_dir, "documents"))
-    n = _DOC_COUNT_CACHE.get(key)
-    if n is None:
-        n = _docs(spark, sf_dir).count()
-        _DOC_COUNT_CACHE[key] = n
-    return n
 
 
 # ---------------------------------------------------------------------------
@@ -176,11 +163,9 @@ FROM shingle_sets d, (SELECT s FROM shingle_sets WHERE doc_id = 0) q
 def q_semi_join_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 (BookQuery.java:77): doc shingles ∩ query shingles, evaluated
     map-side against a broadcast 1-row query set before any shuffle —
-    the reference's `retainAll` re-expressed as `array_intersect`."""
-    sh = staged_shingles_frame(_docs(spark, sf_dir))
-    q = F.broadcast(sh.filter(F.col("doc_id") == 0).select(F.col("s").alias("qs")))
-    return sh.join(q).select(
-        "doc_id", F.explode(F.array_intersect("s", "qs")).alias("term")
+    the reference's `retainAll`; the operator's own semi-join, exploded."""
+    return _intersections(_docs(spark, sf_dir), 0).select(
+        "doc_id", F.explode("kept").alias("term")
     )
 
 
@@ -201,10 +186,8 @@ FROM shingle_sets d, (SELECT s FROM shingle_sets WHERE doc_id = 0) q
 def q_intersection_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 (BookQuery.java:80): `length` is taken AFTER retainAll, so it is
     |D∩Q| not |D| — the quirk-Q1 contract, one row per document."""
-    sh = staged_shingles_frame(_docs(spark, sf_dir))
-    q = F.broadcast(sh.filter(F.col("doc_id") == 0).select(F.col("s").alias("qs")))
-    return sh.join(q).select(
-        "doc_id", F.size(F.array_intersect("s", "qs")).alias("len1")
+    return _intersections(_docs(spark, sf_dir), 0).select(
+        "doc_id", F.size("kept").alias("len1")
     )
 
 
@@ -238,39 +221,19 @@ def q_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize as `doc@len,...` — byte-parity with the reference's Job-1
     intermediate (modulo its unspecified tie order, fixed here to doc id).
     """
-    n = _doc_count(spark, sf_dir)
-    sh = staged_shingles_frame(_docs(spark, sf_dir))
-    q = F.broadcast(sh.filter(F.col("doc_id") == 0).select(F.col("s").alias("qs")))
-    exploded = (
-        sh.join(q)
-        .select(
-            "doc_id",
-            F.size(F.array_intersect("s", "qs")).alias("len1"),
-            F.explode(F.array_intersect("s", "qs")).alias("term"),
-        )
-    )
-    # sort_array on struct(-len1, doc_id) = ORDER BY len1 DESC, doc_id ASC
-    return (
-        exploded.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                (-F.col("len1")).alias("negl"),
-                                F.col("doc_id").alias("doc_id"),
-                                F.col("len1").alias("len1"),
-                            )
-                        )
-                    ),
-                    lambda p: F.concat_ws("@", p["doc_id"], p["len1"]),
+    postings = F.transform(
+        F.sort_array(  # struct(-len1, doc_id) = ORDER BY len1 DESC, doc_id ASC
+            F.transform(
+                "postings",
+                lambda p: F.struct(
+                    (-p["len1"]).alias("negl"), p["doc_id"], p["len1"]
                 ),
-            ).alias("postings"),
-        )
-        .filter((F.col("df") != F.lit(n)) & (F.col("df") != F.lit(1)))
+            )
+        ),
+        lambda p: F.concat_ws("@", p["doc_id"], p["len1"]),
+    )
+    return _postings(_docs(spark, sf_dir), 0).select(
+        "term", "df", F.concat_ws(",", postings).alias("postings")
     )
 
 
@@ -305,30 +268,8 @@ def q_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2-U4 (BookQuery.java:142-158): per-(doc, query) count of shared
     shingles surviving the prune, query self-pair excluded. Spark's hash
     aggregate adds the map-side combine the reference lacked."""
-    n = _doc_count(spark, sf_dir)
-    sh = staged_shingles_frame(_docs(spark, sf_dir))
-    q = F.broadcast(
-        sh.filter(F.col("doc_id") == 0).select(
-            F.col("s").alias("qs"), F.size("s").alias("q_len")
-        )
-    )
-    exploded = sh.join(q).select(
-        "doc_id",
-        "q_len",
-        F.size(F.array_intersect("s", "qs")).alias("len1"),
-        F.explode(F.array_intersect("s", "qs")).alias("term"),
-    )
-    pruned = (
-        exploded.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") != F.lit(n)) & (F.col("df") != F.lit(1)))
-        .select("term")
-    )
-    return (
-        exploded.join(pruned, "term", "left_semi")
-        .filter(F.col("doc_id") != 0)
-        .groupBy("doc_id", "len1", "q_len")
-        .agg(F.count(F.lit(1)).alias("shared"))
+    return _pair_counts(_postings(_docs(spark, sf_dir), 0)).withColumnRenamed(
+        "s", "shared"
     )
 
 
@@ -369,12 +310,7 @@ FROM pairs
 def q_flagship_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's entire 2-job pipeline (BookQuery.java:229-257) as one
     DAG with two exchanges; exact quirk-Q1..Q7 semantics."""
-    return similarity_to_query(
-        _docs(spark, sf_dir),
-        0,
-        mode="parity",
-        total_documents=_doc_count(spark, sf_dir),
-    )
+    return similarity_to_query(_docs(spark, sf_dir), 0)
 
 
 _FLAGSHIP_JACCARD_ORACLE = (
@@ -408,9 +344,7 @@ def q_flagship_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_flagship_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranked top-k extension (the reference never ranks, quirk Q7);
     planned as TakeOrderedAndProject, no global sort materialization."""
-    return top_k_similar(
-        _docs(spark, sf_dir), 0, k=10, total_documents=_doc_count(spark, sf_dir)
-    )
+    return top_k_similar(_docs(spark, sf_dir), 0, k=10)
 
 
 @register(
@@ -428,14 +362,7 @@ def q_flagship_reference_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         reference_output_format,
     )
 
-    return reference_output_format(
-        similarity_to_query(
-            _docs(spark, sf_dir),
-            0,
-            mode="parity",
-            total_documents=_doc_count(spark, sf_dir),
-        ),
-    )
+    return reference_output_format(similarity_to_query(_docs(spark, sf_dir), 0))
 
 
 _MULTI_QUERY_ORACLE = (
@@ -484,12 +411,9 @@ def q_flagship_multi_query_shuffled(spark: SparkSession, sf_dir: str) -> DataFra
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver smoke entry: parity similarity, ranked."""
-    return similarity_to_query(
-        _docs(spark, sf_dir),
-        0,
-        mode="parity",
-        total_documents=_doc_count(spark, sf_dir),
-    ).orderBy(F.desc("score"), F.asc("doc_id"))
+    return similarity_to_query(_docs(spark, sf_dir), 0).orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
 
 
 @register(

@@ -288,6 +288,79 @@ def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     assert (1, "0", 1.0) in new_rows
 
 
+def test_parity_doc_count_follows_load_table_rewrite(spark, tmp_path):
+    """Without ``total_documents`` the parity prune's ``n`` is the row
+    count of the current vintage's resident sets: the answer equals one
+    with an explicit ``count()`` of the ``load_table`` frame, and after a
+    rewrite that adds a document, a shingle that was in every document
+    (pruned as ``df == n``) survives, so the scores follow the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
+        similarity_to_query,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+    from tests.reference_sim import mr_similarity
+
+    path = tmp_path / "documents.parquet"
+    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
+
+    def scores(corpus):
+        rows = [{"doc_id": k, "text": v} for k, v in corpus.items()]
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+        docs = load_table(spark, str(tmp_path), "documents")
+        got = {r.doc_id: r.score for r in similarity_to_query(docs, 0).collect()}
+        explicit = similarity_to_query(docs, 0, total_documents=docs.count())
+        assert got == {r.doc_id: r.score for r in explicit.collect()}
+        assert got == mr_similarity(corpus, 0)
+        return got, docs
+
+    # "a b c" is in every document, so n = 4 prunes it
+    corpus = {
+        0: "a b c x y z",
+        1: "a b c x y z w",
+        2: "a b c p q r",
+        3: "a b c k l m",
+    }
+    old, old_docs = scores(corpus)
+    assert old == {1: 3 / 5}  # doc 2 shares only "a b c": absent
+    # one more document without it: df("a b c") = 4 != n = 5 survives
+    new, new_docs = scores({**corpus, 4: "nothing shared with the query"})
+    assert new_docs is not old_docs
+    assert new == {1: 1.0, 2: 1 / 4, 3: 1 / 4}
+
+
+def test_parity_doc_count_caches_the_sets(spark):
+    """The count behind a derived ``n`` reads the resident sets, so the
+    one action ``similarity_to_query`` runs fills their cache and the
+    scoring job reads them: a one-shot caller (the CLI) scans its corpus
+    once, not once to count and once to score."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+
+    docs = spark.createDataFrame(
+        [(i, f"count once word{i} alpha beta gamma {i % 3}") for i in range(9)],
+        "doc_id long, text string",
+    )
+
+    def cached_partitions():
+        return sum(
+            r.numCachedPartitions()
+            for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        )
+
+    before = cached_partitions()
+    scored = S.similarity_to_query(docs, 0)  # runs only the count
+    assert cached_partitions() > before
+    assert "InMemoryTableScan" in explain_string(scored)
+    assert _sim_rows(scored) == _sim_rows(
+        S.similarity_to_query(_fresh_copy(spark, docs), 0)
+    )
+
+
 def test_resident_shingle_sets_unpersisted_with_corpus(spark):
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,

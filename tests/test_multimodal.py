@@ -4,10 +4,6 @@ exactly."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
 from similarity_search_with_hadoop_mapreduce_spark.operators import multimodal as M

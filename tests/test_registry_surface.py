@@ -9,11 +9,7 @@ COVERAGE.md.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from similarity_search_with_hadoop_mapreduce_spark.registry import (  # noqa: E402
+from similarity_search_with_hadoop_mapreduce_spark.registry import (
     CURATED_NAMES,
     CURATED_ORACLES,
     CURATED_QUERIES,
