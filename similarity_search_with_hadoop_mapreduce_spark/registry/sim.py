@@ -342,8 +342,11 @@ def q_flagship_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_flagship_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranked top-k extension (the reference never ranks, quirk Q7);
-    planned as TakeOrderedAndProject, no global sort materialization."""
+    """Ranked top-k extension (the reference never ranks, quirk Q7),
+    answered from the corpus's resident index as a local relation; a
+    corpus the index cannot answer (above the driver budget, duplicate
+    or NULL doc ids) is planned as TakeOrderedAndProject, no global sort
+    materialization."""
     return top_k_similar(_docs(spark, sf_dir), 0, k=10)
 
 

@@ -104,7 +104,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # fingerprint in the key (an os.stat, ~µs): an in-place fixture rewrite
     # yields a FRESH DataFrame object, which cascades invalidation to every
     # identity-keyed memo downstream (_fan_cache, temporal's _span_cache,
-    # similarity's _qterms_cache and _shingle_sets_cache) — one
+    # similarity's resident corpus entries) — one
     # invalidation policy for the whole catalog instead of per-memo
     # fingerprints (ADVICE r3).
     key = (sf_dir, name, table_fingerprint(sf_dir, name))

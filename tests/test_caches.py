@@ -3,10 +3,10 @@
 The invalidation policy lives in ONE place — ``load_table`` keys on the
 parquet fingerprint, so an in-place fixture rewrite yields a fresh
 DataFrame object and every identity-keyed memo downstream (_fan_cache,
-_span_cache, _qterms_cache, the resident shingle sets) starts clean. The
+_span_cache, similarity's resident corpus entries) starts clean. The
 persisted ANN index cache additionally unpersists superseded entries;
-resident shingle sets are unpersisted when their corpus DataFrame is
-garbage-collected.
+a corpus's resident shingle sets are unpersisted, and its top-k index
+dropped, when its corpus DataFrame is garbage-collected.
 """
 
 from __future__ import annotations
@@ -254,9 +254,9 @@ def test_resident_shingle_sets_reused_and_exact(spark):
 
 def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     """An in-place rewrite with different rows gets a fresh resident
-    frame that answers from the NEW rows, even while the old vintage's
-    frame is still alive and cached (Spark's cache matches plans, and
-    both vintages read the same path)."""
+    frame, and a fresh top-k index, that answer from the NEW rows, even
+    while the old vintage's frame is still alive and cached (Spark's
+    cache matches plans, and both vintages read the same path)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -270,6 +270,8 @@ def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     old = load_table(spark, str(tmp_path), "documents")
     old_rows = _sim_rows(S.similarity_to_query(old, 0))
     old_sets = S._shingle_sets(old)
+    old_top = S.top_k_similar(old, 0, k=10).collect()
+    old_index = S._resident(old).index
 
     # doc 1 becomes a copy of the query doc 0, so it must score 1.0
     rows = pq.read_table(path).to_pylist()
@@ -286,6 +288,11 @@ def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     assert new_rows != old_rows
     assert new_rows == _sim_rows(S.similarity_to_query(_fresh_copy(spark, new), 0))
     assert (1, "0", 1.0) in new_rows
+    top = S.top_k_similar(new, 0, k=10).collect()
+    assert S._resident(new).index not in (None, False, old_index)
+    assert top != old_top
+    assert (top[0].doc_id, top[0].score) == (1, 1.0)
+    assert top == S.top_k_similar(_fresh_copy(spark, new), 0, k=10).collect()
 
 
 def test_parity_doc_count_follows_load_table_rewrite(spark, tmp_path):
@@ -362,6 +369,8 @@ def test_parity_doc_count_caches_the_sets(spark):
 
 
 def test_resident_shingle_sets_unpersisted_with_corpus(spark):
+    """One finalizer releases a collected corpus's resident entry: it
+    unpersists the sets and drops the top-k index."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
@@ -373,9 +382,13 @@ def test_resident_shingle_sets_unpersisted_with_corpus(spark):
     S.top_k_similar(docs, 0, k=3).collect()
     sets = S._shingle_sets(docs)
     assert sets.storageLevel.useMemory
+    entry = S._resident(docs)
+    index = weakref.ref(entry.index)
     del docs
     gc.collect()
     assert not sets.storageLevel.useMemory
+    assert entry.index is None
+    assert index() is None
 
 
 def test_resident_finalizer_tolerates_stopped_session():
@@ -408,7 +421,8 @@ def test_resident_shingle_sets_survive_plan_equal_corpus_collected(spark):
     """Two live corpus frames with equal plans share one Spark cache
     entry; when the first is collected its finalizer drops that entry,
     and the survivor must cache its sets again, not re-shingle on every
-    request."""
+    request. (Run through similarity_to_query, which scores from the
+    sets; top_k_similar answers from its index.)"""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
@@ -417,16 +431,37 @@ def test_resident_shingle_sets_survive_plan_equal_corpus_collected(spark):
     path = f"{SF}/documents.parquet"
     first = spark.read.parquet(path)
     second = spark.read.parquet(path)
+    S.similarity_to_query(first, 0).collect()
+    S.similarity_to_query(second, 1).collect()
+    del first
+    gc.collect()
+    df = S.similarity_to_query(second, 2)
+    assert "InMemoryTableScan" in explain_string(df)
+    assert S._shingle_sets(second).storageLevel.useMemory
+    assert _sim_rows(df) == _sim_rows(
+        S.similarity_to_query(_fresh_copy(spark, second), 2)
+    )
+
+
+def test_topk_index_survives_plan_equal_corpus_collected(spark):
+    """Indexes are per corpus object: when a plan-equal corpus is
+    collected (and drops the shared cache entry of the sets), the
+    survivor's index still answers what a fresh copy answers."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+
+    path = f"{SF}/documents.parquet"
+    first = spark.read.parquet(path)
+    second = spark.read.parquet(path)
     S.top_k_similar(first, 0, k=5).collect()
     S.top_k_similar(second, 1, k=5).collect()
     del first
     gc.collect()
-    df = S.top_k_similar(second, 2, k=5)
-    assert "InMemoryTableScan" in explain_string(df)
-    assert S._shingle_sets(second).storageLevel.useMemory
-    assert _sim_rows(df) == _sim_rows(
-        S.top_k_similar(_fresh_copy(spark, second), 2, k=5)
-    )
+    for mode in ("parity", "jaccard"):
+        assert _sim_rows(S.top_k_similar(second, 2, k=5, mode=mode)) == _sim_rows(
+            S.top_k_similar(_fresh_copy(spark, second), 2, k=5, mode=mode)
+        )
 
 
 def _compiles(spark) -> int:

@@ -419,6 +419,35 @@ def test_headline_queries_pass_scale_audit(spark):
     assert offenders == {}, offenders
 
 
+def test_topk_spark_plan_passes_scale_audit(spark, monkeypatch):
+    """``flagship_topk`` now answers from the resident index (a
+    LocalTableScan); the Spark plan it falls back to, forced here by
+    reporting no index, keeps the headline checks: no fatal shape beyond
+    the one-row broadcast nested loop, and a TakeOrderedAndProject, never
+    a global sort."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.plans import (
+        explain_string,
+        scale_audit,
+    )
+    from similarity_search_with_hadoop_mapreduce_spark.registry import QUERIES
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+
+    sf = "/root/testdata/sf0.001"
+    assert "LocalTableScan" in explain_string(QUERIES["flagship_topk"](spark, sf))
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
+    docs = load_table(spark, sf, "documents")
+    for df in (
+        QUERIES["flagship_topk"](spark, sf),
+        S.top_k_similar(docs, 0, k=10, mode="jaccard"),
+    ):
+        findings = [f for f in scale_audit(df) if f["code"] != "nested_loop_join"]
+        assert findings == [], findings
+        assert "TakeOrderedAndProject" in explain_string(df)
+
+
 def test_round6_text_ann_entries_pass_scale_audit(spark):
     """The round-6 entries carry no fatal plan shapes; their warn-level
     findings are exactly the documented ones — 1-row / |classes|-row

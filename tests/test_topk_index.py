@@ -1,0 +1,312 @@
+"""top_k_similar's resident index against the Spark plan it replaces and
+against the pure-Python reference (tests/reference_sim.py).
+
+The Spark plan is forced by patching ``similarity._corpus_index`` to
+report no index, the way the operator falls back when a corpus cannot
+be indexed; there is no user-facing switch."""
+
+from __future__ import annotations
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from similarity_search_with_hadoop_mapreduce_spark.operators import similarity as S
+from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+from tests.reference_sim import jaccard_similarity, mr_similarity
+
+KS = (0, 1, 3, 10, 50)
+
+
+def _corpus(spark, corpus: dict, id_type: str = "string"):
+    return spark.createDataFrame(
+        list(corpus.items()), f"doc_id {id_type}, text string"
+    )
+
+
+def _rows(df):
+    return [(r.doc_id, r.query_id, r.score) for r in df.collect()]
+
+
+def _spark_plan(monkeypatch, *args, **kwargs):
+    """top_k_similar's Spark plan: the index gate forced off."""
+    with monkeypatch.context() as m:
+        m.setattr(S, "_corpus_index", lambda documents: None)
+        df = S.top_k_similar(*args, **kwargs)
+    # (Spark optimizes a limit of 0 into an empty local relation)
+    assert "TakeOrderedAndProject" in explain_string(df) or kwargs["k"] == 0
+    return df
+
+
+def _indexed(*args, **kwargs):
+    df = S.top_k_similar(*args, **kwargs)
+    assert "LocalTableScan" in explain_string(df)
+    return df
+
+
+def _reference(corpus, q, k, mode, n=None):
+    if q not in corpus:
+        return []
+    if mode == "jaccard":
+        scores = jaccard_similarity(corpus, q)
+    else:
+        scores = _mr_with_n(corpus, q, n)
+    ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    return [(d, str(q), s) for d, s in ranked]
+
+
+def _mr_with_n(corpus, q, n):
+    """reference_sim's parity scores with the prune's ``n`` given: pad
+    the corpus with documents that share no shingle with anything."""
+    if n is None or n == len(corpus):
+        return mr_similarity(corpus, q)
+    assert n > len(corpus)
+    pad = {f"\x00pad{i}": "" for i in range(n - len(corpus))}
+    return mr_similarity({**corpus, **pad}, q)
+
+
+WORDS = ["alpha", "beta", "gamma", "delta", "eps", "x1"]
+
+
+@st.composite
+def corpora(draw):
+    """Small corpora over a small vocabulary, so shared shingles, score
+    ties and both prunes are common; texts include NULL, "" and fewer
+    than three tokens."""
+    n_docs = draw(st.integers(min_value=1, max_value=7))
+    if draw(st.booleans()):
+        ids = draw(
+            st.lists(
+                st.sampled_from(["my doc", "100%", "a", "b", "c", "d", "q", "z"]),
+                min_size=n_docs, max_size=n_docs, unique=True,
+            )
+        )
+        absent = "my%20doc"
+    else:
+        base = 2**40
+        ids = draw(
+            st.lists(st.integers(base, base + 20), min_size=n_docs,
+                     max_size=n_docs, unique=True)
+        )
+        absent = base + 99
+    corpus = {}
+    for doc_id in ids:
+        words = draw(st.lists(st.sampled_from(WORDS), max_size=9))
+        corpus[doc_id] = None if draw(st.integers(0, 9)) == 0 else " ".join(words)
+    q = draw(st.sampled_from(ids + [absent]))
+    return corpus, q
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow, HealthCheck.function_scoped_fixture
+    ],
+)
+@given(corpora(), st.sampled_from(KS), st.integers(0, 2))
+def test_index_equals_spark_plan_and_reference(spark, monkeypatch, case, k, extra):
+    """Parity (with ``n`` = the count, or ``total_documents`` above it)
+    and jaccard: the index answers exactly what the Spark plan answers,
+    rows and order, and what the reference computes."""
+    corpus, q = case
+    id_type = "string" if isinstance(q, str) else "bigint"
+    docs = _corpus(spark, corpus, id_type)
+    text = {d: t or "" for d, t in corpus.items()}  # NULL text: no shingles
+    n = len(corpus) + extra if extra else None
+    for mode in ("parity", "jaccard"):
+        total = n if mode == "parity" else None
+        want = _spark_plan(monkeypatch, docs, q, k=k, mode=mode,
+                           total_documents=total)
+        try:
+            want = _rows(want)
+        except Exception as e:  # noqa: BLE001 — jaccard's 0/0 raises
+            with pytest.raises(type(e)):
+                S.top_k_similar(docs, q, k=k, mode=mode).collect()
+            continue
+        got = _rows(_indexed(docs, q, k=k, mode=mode, total_documents=total))
+        assert got == want, (mode, k)
+        assert got == _reference(text, q, k, mode, total), (mode, k)
+
+
+TIES = {
+    0: "one two three four five six",
+    # 5 and 2 tie, as do 4 and 3: the lower doc_id comes first
+    5: "one two three four five nine",
+    2: "one two three four five nine",
+    4: "one two three four seven",
+    3: "one two three four seven",
+    # "one two three" is in every document (df == n, pruned) and
+    # "four five six" only in the query (df == 1, pruned)
+    1: "one two three",
+}
+
+
+@pytest.mark.parametrize("k", KS)
+def test_ties_and_prunes(spark, monkeypatch, k):
+    docs = _corpus(spark, TIES, "bigint")
+    for mode in ("parity", "jaccard"):
+        got = _rows(_indexed(docs, 0, k=k, mode=mode))
+        assert got == _rows(_spark_plan(monkeypatch, docs, 0, k=k, mode=mode))
+        assert got == _reference(TIES, 0, k, mode)
+    # doc 1 holds only the pruned "one two three": absent from parity
+    parity = _rows(_indexed(docs, 0, k=10))
+    assert [d for d, _, _ in parity] == [2, 5, 3, 4]
+    assert parity[0][2] == parity[1][2] and parity[2][2] == parity[3][2]
+    # with n above the count, "one two three" survives and doc 1 appears
+    wide = _rows(_indexed(docs, 0, k=10, total_documents=7))
+    assert 1 in {d for d, _, _ in wide}
+    assert wide == _reference(TIES, 0, 10, "parity", 7)
+
+
+def test_empty_corpus_and_short_texts(spark, monkeypatch):
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    for mode in ("parity", "jaccard"):
+        assert _rows(_indexed(empty, 0, k=3, mode=mode)) == []
+    assert _indexed(empty, 0, k=3).schema == _spark_plan(
+        monkeypatch, empty, 0, k=3
+    ).schema
+    # a query with fewer than three tokens, or NULL text, scores nothing
+    short = _corpus(spark, {"q": "two words", "n": None, "d": "two words here"})
+    for q in ("q", "n"):
+        assert _rows(_indexed(short, q, k=3)) == []
+        assert _rows(_spark_plan(monkeypatch, short, q, k=3)) == []
+    # jaccard's |D∪Q| is 0 for the empty query and the other empty set:
+    # the Spark plan divides 0 by 0 and raises, and so does the operator
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        S.top_k_similar(short, "q", k=3, mode="jaccard").collect()
+
+
+def test_string_and_large_ids(spark, monkeypatch):
+    corpus = {
+        "my doc": "the quick brown fox jumps over the lazy dog",
+        "100%": "the quick brown fox sat down by the lazy dog",
+        "other": "a quick brown fox jumps over the lazy dog today",
+    }
+    docs = _corpus(spark, corpus)
+    for q in ("my doc", "100%"):
+        got = _rows(_indexed(docs, q, k=10))
+        assert got and got == _reference(corpus, q, 10, "parity")
+        assert got == _rows(_spark_plan(monkeypatch, docs, q, k=10))
+    for absent in ("my%20doc", "100%25", "nope"):
+        assert _rows(_indexed(docs, absent, k=10)) == []
+    big = {2**40 + i: t for i, t in enumerate(corpus.values())}
+    docs = _corpus(spark, big, "bigint")
+    got = _rows(_indexed(docs, 2**40 + 1, k=10, mode="jaccard"))
+    assert got and got == _reference(big, 2**40 + 1, 10, "jaccard")
+    assert got[0][0] >= 2**40
+    assert _rows(_indexed(docs, 2**40 + 99, k=10)) == []
+
+
+BIGINT_CORPUS = {
+    0: "zero one two three four",
+    1: "one two three four five",
+    3: "two three four five six",
+    4: "zero one two three four five",
+}
+
+
+@pytest.mark.parametrize("q", ["3", 3.7, True])
+def test_mistyped_ids_take_the_spark_plan(spark, monkeypatch, q):
+    """An id of another Python type than the corpus's is cast by Spark
+    ('3' and 3.7 to 3, True to 1): the operator answers with that plan."""
+    docs = _corpus(spark, BIGINT_CORPUS, "bigint")
+    for mode in ("parity", "jaccard"):
+        df = S.top_k_similar(docs, q, k=10, mode=mode)
+        assert "TakeOrderedAndProject" in explain_string(df)
+        try:
+            want = _rows(_spark_plan(monkeypatch, docs, q, k=10, mode=mode))
+        except Exception as e:  # noqa: BLE001 — True is doc 1's 0/0 in jaccard
+            with pytest.raises(type(e)):
+                df.collect()
+            continue
+        assert _rows(df) == want
+    assert _rows(S.top_k_similar(docs, "3", k=10))[0][1] == "3"
+
+
+def test_unindexable_requests_raise_as_the_spark_plan(spark):
+    from pyspark.errors import AnalysisException, NumberFormatException
+
+    docs = _corpus(spark, BIGINT_CORPUS, "bigint")
+    with pytest.raises(NumberFormatException, match="CAST_INVALID_INPUT"):
+        S.top_k_similar(docs, "abc", k=10).collect()
+    with pytest.raises(AnalysisException, match="IS_NEGATIVE"):
+        S.top_k_similar(docs, 0, k=-1)
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # duplicate doc id: the Spark plan scores each row
+        [(0, "a b c d e"), (1, "a b c d x"), (1, "b c d e f"), (2, "c d e f g")],
+        # NULL doc id
+        [(0, "a b c d e"), (None, "a b c d x"), (2, "b c d e f")],
+    ],
+)
+def test_unindexable_corpora_take_the_spark_plan(spark, monkeypatch, rows):
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    for mode in ("parity", "jaccard"):
+        df = S.top_k_similar(docs, 0, k=10, mode=mode)
+        assert "TakeOrderedAndProject" in explain_string(df)
+        got = _rows(df)
+        assert got and got == _rows(_spark_plan(monkeypatch, docs, 0, k=10,
+                                                mode=mode))
+    assert S._resident(docs).index is False  # decided once per corpus
+
+
+def test_index_above_the_driver_budget_is_not_built(spark, monkeypatch):
+    docs = _corpus(spark, BIGINT_CORPUS, "bigint")
+    monkeypatch.setattr(S, "_fits_driver", lambda spark, set_bytes: False)
+    df = S.top_k_similar(docs, 0, k=10)
+    assert "TakeOrderedAndProject" in explain_string(df)
+    assert _rows(df) == _reference(BIGINT_CORPUS, 0, 10, "parity")
+    assert S._resident(docs).index is False
+
+
+def test_warm_request_runs_no_job(spark):
+    """After the first request builds the index, a request for another id
+    plans a local relation and collects it without a Spark job."""
+    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    S.top_k_similar(docs, 0, k=10).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("topk-warm", "warm top-k request")
+    try:
+        rows = S.top_k_similar(docs, 5, k=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 10
+    assert list(sc.statusTracker().getJobIdsForGroup("topk-warm")) == []
+
+
+def test_concurrent_first_requests_build_once(spark, monkeypatch):
+    """Requests racing on a corpus with no index yet build it once, under
+    the corpus entry's lock, and all answer from it."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    docs = _corpus(spark, TIES, "bigint")
+    builds = []
+    build = S._build_index
+
+    def counted(documents):
+        builds.append(documents)
+        return build(documents)
+
+    monkeypatch.setattr(S, "_build_index", counted)
+    ids = [0, 5, 2, 4] * 3
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [
+                pool.submit(lambda q: _rows(S.top_k_similar(docs, q, k=10)), q)
+                for q in ids
+            ]
+            answers = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(builds) == 1
+    for q, got in zip(ids, answers):
+        assert got == _reference(TIES, q, 10, "parity"), q
