@@ -61,17 +61,21 @@ memory spill to local disk instead of failing, so a corpus larger than
 the cluster's memory still gets one shingling pass, with the spilled
 part read back from disk per request.
 
-Query ids are data, not code: every operator below binds its query ids
-through SQL parameter markers into a small local relation
-(:func:`_query_keys`) and joins it to the resident sets, instead of
-filtering on a literal id. A literal would be inlined into the Java
-source Spark generates (the query-side filter, the cache's batch-pruning
-predicate, the U2 filter), so every new id compiled and loaded new
-classes and then had to be JIT-compiled. With the id in a row, requests
-for different ids run one plan, and from the second request on Spark's
-codegen cache supplies every generated class. The trade-off: the
-query-side lookup is a join, not a filter, so it loses the cache's
-min/max batch pruning on ``doc_id`` and scans every resident batch.
+Query ids are data, not code: every operator below writes its query ids
+as the rows of a small local relation (:func:`_query_keys`) and joins it
+to the resident sets, instead of filtering on a literal id. What keeps
+the code shared is where the id sits: a value in a local-relation row is
+read by the join like any other row, while an id in a filter would be
+inlined into the Java source Spark generates (the query-side filter, the
+cache's batch-pruning predicate, the U2 filter), so every new id would
+compile and load new classes and then have to be JIT-compiled. With the
+id in a row, requests for different ids run one plan, and from the
+second request on Spark's codegen cache supplies every generated class.
+The rows are written as literals (:func:`_sql_literal`), and only after
+:func:`_checked_ids` has checked each id against the corpus's id type.
+The trade-off: the query-side lookup is a join, not a filter, so it
+loses the cache's min/max batch pruning on ``doc_id`` and scans every
+resident batch.
 
 Resident top-k index: :func:`top_k_similar` does not plan a Spark job
 per request. The first request on a corpus object collects its resident
@@ -81,13 +85,14 @@ sorted doc ids) — the reference's Job-1 posting lists, built once
 instead of per query. A request then computes its answer at call time
 in numpy (``len1`` and ``s`` are bincounts over the query terms'
 posting lists) with the Spark plan's IEEE doubles, and returns it as a
-parameter-bound local relation, whose ``collect()`` runs no job and
-compiles no code. The index lives in the corpus's resident entry
-(:class:`_Resident`) beside the sets and is dropped by the same
-finalizer. The Spark plan stays the fallback for what the index cannot
-answer exactly (see :func:`top_k_similar`); ``similarity_to_query``,
-``similarity_multi_query`` and the registry's stage entries keep
-scoring from the sets.
+local relation of literal rows (:func:`_answer_frame`), whose
+``collect()`` runs no job and compiles no code, and which takes the
+same few Py4J commands to build for any ``k``. The index lives in the
+corpus's resident entry (:class:`_Resident`) beside the sets and is
+dropped by the same finalizer. The Spark plan stays the fallback for
+what the index cannot answer exactly (see :func:`top_k_similar`);
+``similarity_to_query``, ``similarity_multi_query`` and the registry's
+stage entries keep scoring from the sets.
 
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
@@ -100,6 +105,7 @@ textbook ratio ``|D∩Q| / |D∪Q|`` (no pruning).
 from __future__ import annotations
 
 import bisect
+import numbers
 import os
 import threading
 import weakref
@@ -200,27 +206,87 @@ def _shingle_sets(documents: DataFrame, text_col: str = "text") -> DataFrame:
     return frame
 
 
+# id types the operators serve: Spark's integral types by bit width, and
+# plain strings
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
+def _checked_ids(documents: DataFrame, query_ids) -> list:
+    """``query_ids`` as plain Python values of the corpus's id type. An
+    integral corpus takes ``int`` or a numpy integer (not ``bool``), a
+    string corpus takes ``str``; any other id raises ``TypeError`` here,
+    before a plan is built, where Spark would cast it to another
+    document's id (``3.7`` and ``'3'`` to 3, ``True`` to 1). An integer
+    outside the id type's range passes, and Spark's cast raises on it."""
+    id_type = documents.schema["doc_id"].dataType.simpleString()
+    if id_type != "string" and id_type not in _INT_BITS:
+        raise TypeError(f"doc_id must be integral or string, not {id_type}")
+    ids = list(query_ids)
+    for q in ids:
+        if not (isinstance(q, str) if id_type == "string" else _is_integer(q)):
+            raise TypeError(
+                f"query id {q!r} ({type(q).__name__}) is not a {id_type} doc id"
+            )
+    return ids if id_type == "string" else [int(q) for q in ids]
+
+
+def _is_integer(value) -> bool:
+    """An ``int`` or numpy integer, not a ``bool``."""
+    return isinstance(value, numbers.Integral) and not isinstance(value, bool)
+
+
+def _sql_literal(value) -> str:
+    """Spark SQL literal text for a checked id or a score: an integer as
+    its decimal token; a string as its UTF-8 bytes in a hex binary literal
+    cast to STRING, so no character of it is ever quoted or escaped; a
+    float as ``repr`` with the ``D`` suffix, which parses back to the same
+    double."""
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(value, float):
+        return f"{float(value)!r}D"  # numpy 2 reprs a double as np.float64(…)
+    if _is_integer(value):
+        return str(int(value))
+    raise TypeError(f"no SQL literal for {value!r} ({type(value).__name__})")
+
+
+def _local_relation(spark, select: str, names: tuple, rows) -> DataFrame:
+    """``SELECT <select>`` over ``rows`` (tuples of ints, strings and
+    floats) as one ``VALUES`` local relation ``t(<names>)``, written as
+    literals in one SQL text: building it takes the same few Py4J
+    commands for any number of rows. The leading NULL row keeps
+    ``VALUES`` non-empty for no rows; the filter on the first column
+    drops it."""
+    values = ", ".join(
+        ["(" + ", ".join(["NULL"] * len(names)) + ")"]
+        + ["(" + ", ".join(map(_sql_literal, row)) + ")" for row in rows]
+    )
+    return spark.sql(
+        f"SELECT {select} FROM VALUES {values} AS t({', '.join(names)})"
+        f" WHERE {names[0]} IS NOT NULL"
+    )
+
+
 def _query_keys(docs: DataFrame, query_ids) -> DataFrame:
     """The query ids as data: a local relation ``(qid)``, one row per id,
-    typed as ``docs.doc_id``. Every id is bound through a parameter
-    marker, so the plan, and the code Spark generates for it, is the same
-    for every id: warm requests hit Spark's codegen cache instead of
-    compiling and loading new classes, as a literal id would make them.
-    The leading NULL row keeps ``VALUES`` non-empty for an empty id list;
-    the filter drops it (and a NULL id, which matches no document)."""
+    typed as ``docs.doc_id``. Every id is a value in a row, so the plan,
+    and the code Spark generates for it, is the same for every id: warm
+    requests hit Spark's codegen cache instead of compiling and loading
+    new classes, as an id in a filter would make them. The ids must have
+    passed :func:`_checked_ids`."""
     id_type = docs.schema["doc_id"].dataType.simpleString()
-    rows = ", ".join(["(NULL)"] + ["(?)"] * len(query_ids))
-    return docs.sparkSession.sql(
-        f"SELECT CAST(qid AS {id_type}) AS qid FROM VALUES {rows} AS t(qid)"
-        " WHERE qid IS NOT NULL",
-        args=list(query_ids),
+    return _local_relation(
+        docs.sparkSession,
+        f"CAST(qid AS {id_type}) AS qid",
+        ("qid",),
+        [(q,) for q in query_ids],
     )
 
 
 def _query_side(docs: DataFrame, query_doc_id) -> DataFrame:
     """One-row broadcast DataFrame ``(qid, q_set, q_len)`` for the query
     document: its row of the resident sets ``docs``, looked up by joining
-    the bound query key (:func:`_query_keys`).
+    the query key row (:func:`_query_keys`).
 
     The reference ships the raw query text to every task via the job
     ``Configuration`` and re-parses it in every ``setup()``
@@ -318,9 +384,12 @@ def similarity_to_query(
     quirk Q5). When not supplied it is the row count of the corpus's
     resident shingle sets, so counting reads the cached sets (and caches
     them on a first request) instead of scanning the corpus a second time.
+
+    ``query_doc_id`` must be of the corpus's id type (:func:`_checked_ids`).
     """
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
+    (query_doc_id,) = _checked_ids(documents, [query_doc_id])
 
     if mode == "jaccard":
         # Textbook |D∩Q| / |D∪Q|; single map stage, no shuffle at all.
@@ -333,7 +402,10 @@ def similarity_to_query(
             .select(
                 "doc_id",
                 F.lit(str(query_doc_id)).alias("query_id"),
-                (inter.cast("double") / union.cast("double")).alias("score"),
+                # two empty sets share nothing: no score, not 0/0
+                F.when(
+                    union > 0, inter.cast("double") / union.cast("double")
+                ).alias("score"),
             )
             .filter(F.col("score") > 0.0)
         )
@@ -397,9 +469,12 @@ def similarity_multi_query(
     AQE's runtime bloom filter can still prune corpus rows early).
     Result-identical to the broadcast plan (pytest-pinned with a forced
     threshold); ``stats['multi_query_plan']`` records the choice.
+
+    Every query id must be of the corpus's id type (:func:`_checked_ids`).
     """
+    # a list of checked ids: consumed twice (keys + memo key)
+    query_ids = _checked_ids(documents, query_ids)
     docs = _shingle_sets(documents, text_col)
-    query_ids = list(query_ids)  # materialize: consumed twice (keys + memo key)
     # one key row per distinct id, as isin matched each query doc once
     keys = F.broadcast(_query_keys(docs, list(dict.fromkeys(query_ids))))
     qset = docs.join(keys, F.col("doc_id") == F.col("qid")).select(
@@ -460,11 +535,6 @@ def similarity_multi_query(
     )
 
 
-# id types the index answers for: Spark's integral types by bit width,
-# and plain strings. Any other type is answered by the Spark plan.
-_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
-
-
 class _CorpusIndex:
     """Driver-resident CSR index of one corpus's shingle sets: Job 1's
     term → posting lists (``BookQuery.java:92-111``) built once, with no
@@ -494,25 +564,22 @@ class _CorpusIndex:
         self.df = df
 
     def row(self, query_doc_id) -> int | None:
-        """The row of ``query_doc_id``, ``-1`` if no document has it, or
-        ``None`` if its Python type is not the corpus's id type (the
-        Spark plan casts such an id, e.g. ``'3'`` or ``3.7`` to 3)."""
+        """The row of ``query_doc_id`` (checked by :func:`_checked_ids`),
+        ``-1`` if no document has it, or ``None`` for an integer outside
+        the id type's range, which Spark's cast rejects."""
         q = query_doc_id
         if self.id_type == "string":
-            if type(q) is not str:
-                return None
             i = bisect.bisect_left(self.ids, q)
         else:
             half = 1 << (_INT_BITS[self.id_type] - 1)
-            if type(q) is not int or not -half <= q < half:
+            if not -half <= q < half:
                 return None
             i = int(self.ids.searchsorted(q))
         return i if i < len(self.ids) and self.ids[i] == q else -1
 
     def top_k(self, row: int, k: int, mode: str, n: int | None):
         """The top ``k`` ``(doc_ids, scores)`` for the query document at
-        ``row``, in the Spark plan's order and with its IEEE doubles, or
-        ``None`` where that plan raises (jaccard's 0/0)."""
+        ``row``, in the Spark plan's order and with its IEEE doubles."""
         import numpy as np
 
         lo, hi = self.doc_ptr[row], self.doc_ptr[row + 1]
@@ -536,8 +603,6 @@ class _CorpusIndex:
             score = np.where(s == len1 + q_len, 1.0, s / (len1 + q_len - s))
         else:
             sizes = np.diff(self.doc_ptr)
-            if q_len == 0 and np.count_nonzero(sizes == 0) > 1:
-                return None  # another empty set: Spark divides 0 by 0
             inter[row] = 0
             cand = np.flatnonzero(inter)
             inter = inter[cand]
@@ -587,13 +652,11 @@ def _fits_driver(spark, set_bytes: int) -> bool:
 
 def _build_index(documents: DataFrame) -> _CorpusIndex | None:
     """Collect the resident sets once and build their CSR index, or
-    ``None`` if the index could not answer exactly: an id type it does
-    not handle, a build too large for the driver (:func:`_fits_driver`),
-    or NULL or duplicate doc ids (the Spark plan scores each row)."""
+    ``None`` if the index could not answer exactly: a build too large for
+    the driver (:func:`_fits_driver`), or NULL or duplicate doc ids (the
+    Spark plan scores each row)."""
     sets = _shingle_sets(documents)
     id_type = sets.schema["doc_id"].dataType.simpleString()
-    if id_type != "string" and id_type not in _INT_BITS:
-        return None
     sets.count()  # fills the cache, so its statistics are the real size
     size = sets._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if not _fits_driver(sets.sparkSession, int(size)):
@@ -642,23 +705,17 @@ def _corpus_index(documents: DataFrame) -> _CorpusIndex | None:
 
 
 def _answer_frame(spark, id_type: str, query_doc_id, ids, scores) -> DataFrame:
-    """An answer as ``(doc_id, query_id, score)`` over a local relation
-    whose values are bound parameters: ``collect()`` reads the relation
-    on the driver, with no Spark job and no generated code. The markers
-    are named, as positional ones in ``VALUES`` would bind before the
-    one in the select list; the NULL row keeps ``VALUES`` non-empty for
-    an empty answer, and the filter drops it."""
-    args = {"q": str(query_doc_id)}
-    rows = ["(NULL, NULL)"]
-    for i, (doc_id, score) in enumerate(zip(ids, scores)):
-        args[f"d{i}"], args[f"s{i}"] = doc_id, score
-        rows.append(f"(:d{i}, :s{i})")
-    return spark.sql(
-        f"SELECT CAST(doc_id AS {id_type}) AS doc_id, :q AS query_id,"
-        " CAST(score AS DOUBLE) AS score"
-        f" FROM VALUES {', '.join(rows)} AS t(doc_id, score)"
-        " WHERE doc_id IS NOT NULL",
-        args=args,
+    """An answer as ``(doc_id, query_id, score)``: a local relation of
+    literal rows (:func:`_local_relation`), so ``collect()`` reads it on
+    the driver, with no Spark job and no generated code, and building it
+    takes the same few Py4J commands for any ``k``."""
+    return _local_relation(
+        spark,
+        f"CAST(doc_id AS {id_type}) AS doc_id,"
+        f" {_sql_literal(str(query_doc_id))} AS query_id,"
+        " CAST(score AS DOUBLE) AS score",
+        ("doc_id", "score"),
+        zip(ids, scores),
     )
 
 
@@ -676,12 +733,12 @@ def top_k_similar(
 
     Serving: the answer comes from the corpus's resident index
     (:class:`_CorpusIndex`) and is computed at call time; the returned
-    DataFrame is a parameter-bound local relation, so ``collect()`` runs
-    no Spark job and compiles no code. The first call on a corpus object
-    builds the index, under a lock, from one Arrow collect of the
-    resident shingle sets (see the module docstring): term ids from a
-    dictionary encoding, doc ids from row position, no strings or
-    hashes kept. A request then scores the query's posting lists in
+    DataFrame is a local relation of literal rows (:func:`_answer_frame`),
+    so ``collect()`` runs no Spark job and compiles no code. The first
+    call on a corpus object builds the index, under a lock, from one
+    Arrow collect of the resident shingle sets (see the module
+    docstring): term ids from a dictionary encoding, doc ids from row
+    position, no strings or hashes kept. A request then scores the query's posting lists in
     numpy, with the Spark plan's IEEE doubles. Memory: about 4 bytes
     per posting each way plus 8 per distinct term, in the Python
     driver (22 MB for 20k documents with 1.57M postings), while the
@@ -693,23 +750,23 @@ def top_k_similar(
     answers whatever the index cannot answer exactly: a corpus whose
     build would not fit the driver (an estimate against
     ``spark.driver.maxResultSize`` and the driver's available memory),
-    duplicate or NULL doc ids, doc ids not integral or string, a query
-    id whose Python type is not the corpus's id type (Spark casts it),
-    jaccard's 0/0 (Spark raises) and a negative or non-int ``k`` (Spark
-    rejects it).
+    duplicate or NULL doc ids, an integer query id outside the id type's
+    range (Spark's cast rejects it) and a negative or non-int ``k``
+    (Spark rejects it). A query id not of the corpus's id type raises
+    ``TypeError`` before either runs (:func:`_checked_ids`).
     """
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
+    (query_doc_id,) = _checked_ids(documents, [query_doc_id])
     index = _corpus_index(documents) if type(k) is int and 0 <= k < 2**31 else None
     row = None if index is None else index.row(query_doc_id)
     if row is not None:
-        answer = ([], []) if row < 0 or k == 0 else index.top_k(
+        ids, scores = ([], []) if row < 0 or k == 0 else index.top_k(
             row, k, mode, total_documents
         )
-        if answer is not None:
-            return _answer_frame(
-                documents.sparkSession, index.id_type, query_doc_id, *answer
-            )
+        return _answer_frame(
+            documents.sparkSession, index.id_type, query_doc_id, ids, scores
+        )
     return similarity_to_query(
         documents, query_doc_id, mode=mode, total_documents=total_documents
     ).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

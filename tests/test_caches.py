@@ -499,7 +499,7 @@ def test_warm_requests_compile_no_new_code(spark):
 
 
 def test_query_id_binding_edge_cases(spark, tmp_path):
-    """Ids reach the plan as bound parameters of the corpus's doc_id type:
+    """Ids reach the plan as literal rows of the corpus's doc_id type:
     bigint ids beyond the int range, and string ids holding a space or
     '%', score as the reference does; a repeated id scores once; an id
     absent from the corpus, like an empty id list, matches no query

@@ -116,14 +116,8 @@ def test_index_equals_spark_plan_and_reference(spark, monkeypatch, case, k, extr
     n = len(corpus) + extra if extra else None
     for mode in ("parity", "jaccard"):
         total = n if mode == "parity" else None
-        want = _spark_plan(monkeypatch, docs, q, k=k, mode=mode,
-                           total_documents=total)
-        try:
-            want = _rows(want)
-        except Exception as e:  # noqa: BLE001 — jaccard's 0/0 raises
-            with pytest.raises(type(e)):
-                S.top_k_similar(docs, q, k=k, mode=mode).collect()
-            continue
+        want = _rows(_spark_plan(monkeypatch, docs, q, k=k, mode=mode,
+                                 total_documents=total))
         got = _rows(_indexed(docs, q, k=k, mode=mode, total_documents=total))
         assert got == want, (mode, k)
         assert got == _reference(text, q, k, mode, total), (mode, k)
@@ -166,15 +160,19 @@ def test_empty_corpus_and_short_texts(spark, monkeypatch):
     assert _indexed(empty, 0, k=3).schema == _spark_plan(
         monkeypatch, empty, 0, k=3
     ).schema
-    # a query with fewer than three tokens, or NULL text, scores nothing
-    short = _corpus(spark, {"q": "two words", "n": None, "d": "two words here"})
+    # a query with fewer than three tokens, or NULL text, scores nothing;
+    # in jaccard, |D∪Q| is 0 for the empty query and the other empty set,
+    # and that document is skipped, as the reference skips it
+    texts = {"q": "two words", "n": None, "d": "two words here"}
+    short = _corpus(spark, texts)
+    text = {d: t or "" for d, t in texts.items()}
     for q in ("q", "n"):
-        assert _rows(_indexed(short, q, k=3)) == []
-        assert _rows(_spark_plan(monkeypatch, short, q, k=3)) == []
-    # jaccard's |D∪Q| is 0 for the empty query and the other empty set:
-    # the Spark plan divides 0 by 0 and raises, and so does the operator
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S.top_k_similar(short, "q", k=3, mode="jaccard").collect()
+        for mode in ("parity", "jaccard"):
+            want = _reference(text, q, 3, mode)
+            assert want == []
+            assert _rows(_indexed(short, q, k=3, mode=mode)) == want
+            assert _rows(_spark_plan(monkeypatch, short, q, k=3, mode=mode)) == want
+        assert S.similarity_to_query(short, q, mode="jaccard").collect() == []
 
 
 def test_string_and_large_ids(spark, monkeypatch):
@@ -207,29 +205,47 @@ BIGINT_CORPUS = {
 
 
 @pytest.mark.parametrize("q", ["3", 3.7, True])
-def test_mistyped_ids_take_the_spark_plan(spark, monkeypatch, q):
-    """An id of another Python type than the corpus's is cast by Spark
-    ('3' and 3.7 to 3, True to 1): the operator answers with that plan."""
+def test_mistyped_ids_raise_type_error(spark, q):
+    """An id of another Python type than the corpus's would be cast by
+    Spark ('3' and 3.7 to 3, True to 1) and answer for another document:
+    every operator rejects it before it builds a plan or caches a set."""
+    import numpy as np
+
     docs = _corpus(spark, BIGINT_CORPUS, "bigint")
-    for mode in ("parity", "jaccard"):
-        df = S.top_k_similar(docs, q, k=10, mode=mode)
-        assert "TakeOrderedAndProject" in explain_string(df)
-        try:
-            want = _rows(_spark_plan(monkeypatch, docs, q, k=10, mode=mode))
-        except Exception as e:  # noqa: BLE001 — True is doc 1's 0/0 in jaccard
-            with pytest.raises(type(e)):
-                df.collect()
-            continue
-        assert _rows(df) == want
-    assert _rows(S.top_k_similar(docs, "3", k=10))[0][1] == "3"
+    calls = (
+        lambda q: S.top_k_similar(docs, q, k=10),
+        lambda q: S.top_k_similar(docs, q, k=10, mode="jaccard"),
+        lambda q: S.similarity_to_query(docs, q),
+        lambda q: S.similarity_to_query(docs, q, mode="jaccard"),
+        lambda q: S.similarity_multi_query(docs, [0, q]),
+    )
+    for call in calls:
+        with pytest.raises(TypeError, match="query id"):
+            call(q)
+    assert docs not in S._resident_cache  # no set cached, no index built
+    # a numpy integer is an integer id
+    assert _rows(S.top_k_similar(docs, np.int64(3), k=10)) == _rows(
+        S.top_k_similar(docs, 3, k=10)
+    )
+    # and on a string corpus, only a str is an id
+    strings = _corpus(spark, {str(d): t for d, t in BIGINT_CORPUS.items()})
+    for bad in (3, np.int64(3), b"3", None):
+        with pytest.raises(TypeError, match="query id"):
+            S.top_k_similar(strings, bad, k=10)
 
 
 def test_unindexable_requests_raise_as_the_spark_plan(spark):
-    from pyspark.errors import AnalysisException, NumberFormatException
+    """What the index cannot answer runs the Spark plan, which raises: an
+    integer id outside the corpus's id type (Spark's cast overflows) and
+    a negative ``k``."""
+    from pyspark.errors import AnalysisException
 
+    tiny = _corpus(spark, BIGINT_CORPUS, "tinyint")
+    S.top_k_similar(tiny, 0, k=10).collect()  # builds the index
+    for q in (128, -129, 2**63, -2**63 - 1):
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            S.top_k_similar(tiny, q, k=10).collect()
     docs = _corpus(spark, BIGINT_CORPUS, "bigint")
-    with pytest.raises(NumberFormatException, match="CAST_INVALID_INPUT"):
-        S.top_k_similar(docs, "abc", k=10).collect()
     with pytest.raises(AnalysisException, match="IS_NEGATIVE"):
         S.top_k_similar(docs, 0, k=-1)
 
@@ -310,3 +326,121 @@ def test_concurrent_first_requests_build_once(spark, monkeypatch):
     assert len(builds) == 1
     for q, got in zip(ids, answers):
         assert got == _reference(TIES, q, 10, "parity"), q
+
+
+HOSTILE_IDS = [
+    "a'b", "back\\slash", "x:y", "?", "${v}", "new\nline", "", 'q"', "--c",
+    "/*x*/", "日本",
+]
+
+
+def test_hostile_string_ids(spark, monkeypatch):
+    """String ids reach SQL text only as hex literals: ids holding quotes,
+    backslashes, marker and comment syntax, a newline, the empty string or
+    non-ASCII text answer, and label, exactly as the Spark plan does."""
+    corpus = {
+        q: f"one two three four five w{i % 3} six seven eight"
+        for i, q in enumerate(HOSTILE_IDS)
+    }
+    docs = _corpus(spark, corpus)
+    for q in HOSTILE_IDS:
+        for mode in ("parity", "jaccard"):
+            got = _rows(_indexed(docs, q, k=10, mode=mode))
+            assert got and got == _reference(corpus, q, 10, mode), (q, mode)
+            assert got == _rows(_spark_plan(monkeypatch, docs, q, k=10, mode=mode))
+    multi = S.similarity_multi_query(docs, HOSTILE_IDS).collect()
+    assert {r.query_id for r in multi} == set(HOSTILE_IDS)
+
+
+@pytest.mark.parametrize(
+    "id_type, bits",
+    [("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64)],
+)
+def test_integer_id_extremes(spark, monkeypatch, id_type, bits):
+    lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
+    ids = [lo, lo + 1, 0, hi - 1, hi]
+    corpus = {q: f"one two three four w{i % 2} five six" for i, q in enumerate(ids)}
+    docs = _corpus(spark, corpus, id_type)
+    for q in (lo, hi):
+        for mode in ("parity", "jaccard"):
+            got = _rows(_indexed(docs, q, k=10, mode=mode))
+            assert got and got == _reference(corpus, q, 10, mode), (q, mode)
+            assert got == _rows(_spark_plan(monkeypatch, docs, q, k=10, mode=mode))
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow, HealthCheck.function_scoped_fixture
+    ],
+)
+@given(st.lists(st.floats(0.0, 1.0, exclude_min=True), max_size=len(TIES)))
+def test_scores_round_trip_bit_for_bit(spark, monkeypatch, scores):
+    """Whatever doubles in (0, 1] the index scores, subnormals included,
+    the answer frame returns the same bits."""
+    import struct
+
+    docs = _corpus(spark, TIES, "bigint")
+    ids = sorted(TIES)[: len(scores)]
+    with monkeypatch.context() as m:
+        m.setattr(S._CorpusIndex, "top_k", lambda *a: (ids, scores))
+        rows = _indexed(docs, 0, k=10).collect()
+    assert [r.doc_id for r in rows] == ids
+    bits = [struct.pack("<d", s) for s in scores]
+    assert [struct.pack("<d", r.score) for r in rows] == bits
+
+
+def test_answer_schema(spark, monkeypatch):
+    """The index's answer has the Spark plan's schema, nullability
+    included, for a full and an empty answer."""
+    from pyspark.sql.types import (
+        DoubleType, LongType, StringType, StructField, StructType,
+    )
+
+    def schema(id_type):
+        return StructType([
+            StructField("doc_id", id_type, True),
+            StructField("query_id", StringType(), False),
+            StructField("score", DoubleType(), True),
+        ])
+
+    for docs, q, id_type in (
+        (_corpus(spark, TIES, "bigint"), 0, LongType()),
+        (_corpus(spark, {str(d): t for d, t in TIES.items()}), "0", StringType()),
+    ):
+        for k in (0, 10):
+            assert _indexed(docs, q, k=k).schema == schema(id_type)
+        assert _spark_plan(monkeypatch, docs, q, k=10).schema == schema(id_type)
+
+
+def test_answer_frame_py4j_commands_constant_in_k(spark, monkeypatch):
+    """Building a warm top-k answer sends the same few Py4J commands for
+    k=1 and k=50: the answer rows travel as one SQL text, not one bound
+    value each. Only this thread's commands count: Py4J's finalizer
+    thread sends the deletes of collected objects whenever it runs."""
+    import threading
+
+    corpus = {i: f"one two three four x{i} y{i}" for i in range(60)}
+    docs = _corpus(spark, corpus, "bigint")
+    n = len(corpus) + 1  # "one two three" and "two three four" survive
+    S.top_k_similar(docs, 0, k=1, total_documents=n).collect()  # builds
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+    me = threading.get_ident()
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(args)
+        return send(*args, **kwargs)
+
+    counts = {}
+    for k in (1, 50):
+        sent.clear()
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counted)
+            df = S.top_k_similar(docs, 7, k=k, total_documents=n)
+        counts[k] = len(sent)
+        assert len(df.collect()) == k
+    assert counts[1] == counts[50] <= 6, counts
