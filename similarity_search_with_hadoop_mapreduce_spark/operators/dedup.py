@@ -1988,7 +1988,8 @@ def incremental_dedup_probe(
     is row-identical to the ungated probe (pytest-pinned, including
     under a deliberately saturated 64-bit bitmap).
 
-    **When to flip it** (measured, scale_probe_bloom_gate.json): the
+    **When to flip it** (measured, SCALE.md "r12: the probe bloom
+    gate"): the
     dial targets the regime where the epoch is too large for Spark to
     broadcast-hash-join. With a broadcastable batch the ungated plan
     already streams the stored side through a BroadcastHashJoin

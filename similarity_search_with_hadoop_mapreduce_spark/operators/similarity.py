@@ -72,7 +72,9 @@ compile and load new classes and then have to be JIT-compiled. With the
 id in a row, requests for different ids run one plan, and from the
 second request on Spark's codegen cache supplies every generated class.
 The rows are written as literals (:func:`_sql_literal`), and only after
-:func:`_checked_ids` has checked each id against the corpus's id type.
+:func:`_checked_ids` has checked each id against the corpus's id type;
+an integer outside the type's range gets no row (:func:`_in_range`), so
+it answers no rows from every operator, as an absent id does.
 The trade-off: the query-side lookup is a join, not a filter, so it
 loses the cache's min/max batch pruning on ``doc_id`` and scans every
 resident batch.
@@ -80,19 +82,19 @@ resident batch.
 Resident top-k index: :func:`top_k_similar` does not plan a Spark job
 per request. The first request on a corpus object collects its resident
 sets once through Arrow and builds a driver-resident CSR index of them
-(:class:`_CorpusIndex`: term → rows, row → terms, df per term, the
-sorted doc ids) — the reference's Job-1 posting lists, built once
-instead of per query. A request then computes its answer at call time
-in numpy (``len1`` and ``s`` are bincounts over the query terms'
+(:class:`_CorpusIndex`) — the reference's Job-1 posting lists, built
+once instead of per query. A request then computes its answer at call
+time in numpy (``len1`` and ``s`` are bincounts over the query terms'
 posting lists) with the Spark plan's IEEE doubles, and returns it as a
 local relation of literal rows (:func:`_answer_frame`), whose
 ``collect()`` runs no job and compiles no code, and which takes the
 same few Py4J commands to build for any ``k``. The index lives in the
 corpus's resident entry (:class:`_Resident`) beside the sets and is
-dropped by the same finalizer. The Spark plan stays the fallback for
-what the index cannot answer exactly (see :func:`top_k_similar`);
-``similarity_to_query``, ``similarity_multi_query`` and the registry's
-stage entries keep scoring from the sets.
+dropped by the same finalizer. The Spark plan runs only for a corpus
+the index cannot hold exactly (see :func:`top_k_similar`), so the
+corpus alone decides the path; ``similarity_to_query``,
+``similarity_multi_query`` and the registry's stage entries keep
+scoring from the sets.
 
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
@@ -125,23 +127,23 @@ class _Resident:
     """Everything one corpus DataFrame keeps resident, dropped together
     by one finalizer when the corpus is garbage-collected:
 
-    - ``frames``: text column -> persisted ``(doc_id, shingle_set)``
-      frame (:func:`_shingle_sets`);
-    - ``qterms``: similarity_multi_query's broadcast-guard probe memo,
-      ``(query_ids, text_col) -> n_terms``. The probe is a point-lookup
-      aggregate over only the query rows, a per-batch statistic a
-      serving deployment computes once when the query battery is
-      registered, not on every scoring pass;
+    - ``sets``: the persisted ``(doc_id, shingle_set)`` frame
+      (:func:`_shingle_sets`), ``None`` until first used;
+    - ``probe``: similarity_multi_query's broadcast-guard probe memo,
+      ``(query_ids, n_terms)`` of the last battery probed. The probe is
+      a point-lookup aggregate over only the query rows, a per-battery
+      statistic, so a battery sent again skips it; one slot, so a
+      stream of fresh batteries holds one entry, not one per battery;
     - ``index``: top_k_similar's :class:`_CorpusIndex`; ``None`` until
       the first request builds it under ``lock``, ``False`` when the
       corpus cannot be indexed.
     """
 
-    __slots__ = ("frames", "qterms", "index", "lock")
+    __slots__ = ("sets", "probe", "index", "lock")
 
     def __init__(self) -> None:
-        self.frames: dict = {}
-        self.qterms: dict = {}
+        self.sets = None
+        self.probe = None
         self.index = None
         self.lock = threading.Lock()
 
@@ -170,34 +172,32 @@ def _resident(documents: DataFrame) -> _Resident:
 
 def _release(entry: _Resident) -> None:
     """Finalizer of a corpus DataFrame: drop its index and unpersist its
-    resident frames."""
+    resident sets."""
     entry.index = None
-    _unpersist(entry.frames)
+    if entry.sets is not None:
+        _unpersist(entry.sets)
 
 
-def _unpersist(frames: dict) -> None:
-    """Drop resident frames from Spark's cache. The finalizer runs
+def _unpersist(frame: DataFrame) -> None:
+    """Drop a resident frame from Spark's cache. The finalizer runs
     whenever the garbage collector gets to the corpus, possibly after
     its session was stopped, so a failing call into the JVM (a Py4J
     error, or a JVM exception PySpark converted) is ignored: there is no
     cache left to release."""
-    for frame in frames.values():
-        try:
-            frame.unpersist()
-        except (Py4JError, PySparkException):
-            pass
+    try:
+        frame.unpersist()
+    except (Py4JError, PySparkException):
+        pass
 
 
-def _shingle_sets(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def _shingle_sets(documents: DataFrame) -> DataFrame:
     """The resident ``(doc_id, shingle_set)`` frame of ``documents``:
-    ``staged_shingles_frame`` persisted on first use, then returned as
-    the same object on every later call with the same corpus object."""
-    frames = _resident(documents).frames
-    frame = frames.get(text_col)
-    if frame is None:
-        frame = frames[text_col] = staged_shingles_frame(
-            documents, text_col, alias="shingle_set"
-        )
+    ``staged_shingles_frame`` of its ``text``, persisted on first use,
+    then the same object on every later call with the same corpus."""
+    entry = _resident(documents)
+    if entry.sets is None:
+        entry.sets = staged_shingles_frame(documents, "text", alias="shingle_set")
+    frame = entry.sets
     # Spark's cache matches plans, so another corpus object with an
     # equal plan shares this entry, and its finalizer may have dropped
     # it: cache it again rather than re-shingle on every request
@@ -217,7 +217,8 @@ def _checked_ids(documents: DataFrame, query_ids) -> list:
     string corpus takes ``str``; any other id raises ``TypeError`` here,
     before a plan is built, where Spark would cast it to another
     document's id (``3.7`` and ``'3'`` to 3, ``True`` to 1). An integer
-    outside the id type's range passes, and Spark's cast raises on it."""
+    outside the id type's range passes: no document has it
+    (:func:`_in_range`), so it answers no rows, as an absent id does."""
     id_type = documents.schema["doc_id"].dataType.simpleString()
     if id_type != "string" and id_type not in _INT_BITS:
         raise TypeError(f"doc_id must be integral or string, not {id_type}")
@@ -233,6 +234,16 @@ def _checked_ids(documents: DataFrame, query_ids) -> list:
 def _is_integer(value) -> bool:
     """An ``int`` or numpy integer, not a ``bool``."""
     return isinstance(value, numbers.Integral) and not isinstance(value, bool)
+
+
+def _in_range(id_type: str, query_id) -> bool:
+    """Whether a checked id fits the corpus's id type: every string does,
+    an integer must lie in its type's range. An id that does not names
+    no document, and Spark's cast would overflow on it."""
+    if id_type == "string":
+        return True
+    half = 1 << (_INT_BITS[id_type] - 1)
+    return -half <= query_id < half
 
 
 def _sql_literal(value) -> str:
@@ -273,36 +284,35 @@ def _query_keys(docs: DataFrame, query_ids) -> DataFrame:
     and the code Spark generates for it, is the same for every id: warm
     requests hit Spark's codegen cache instead of compiling and loading
     new classes, as an id in a filter would make them. The ids must have
-    passed :func:`_checked_ids`."""
+    passed :func:`_checked_ids`; one outside the id type's range gets no
+    row, so the plans answer no rows for it."""
     id_type = docs.schema["doc_id"].dataType.simpleString()
     return _local_relation(
         docs.sparkSession,
         f"CAST(qid AS {id_type}) AS qid",
         ("qid",),
-        [(q,) for q in query_ids],
+        [(q,) for q in query_ids if _in_range(id_type, q)],
     )
 
 
-def _query_side(docs: DataFrame, query_doc_id) -> DataFrame:
-    """One-row broadcast DataFrame ``(qid, q_set, q_len)`` for the query
-    document: its row of the resident sets ``docs``, looked up by joining
-    the query key row (:func:`_query_keys`).
+def _query_side(docs: DataFrame, query_ids: list) -> DataFrame:
+    """``(qid, q_set, q_len)``, one row per query document found: its row
+    of the resident sets ``docs``, looked up by joining the query key
+    rows (:func:`_query_keys`). The one keys-to-sets lookup of every
+    Spark plan here.
 
     The reference ships the raw query text to every task via the job
     ``Configuration`` and re-parses it in every ``setup()``
     (``BookQuery.java:205,31-41,122-133``); broadcasting the *parsed*
-    shingle set once is the Spark-native equivalent (O3 in SURVEY §4.1).
+    shingle set once is the Spark-native equivalent (O3 in SURVEY §4.1):
+    a caller that joins one query broadcasts this frame.
     """
-    key = F.broadcast(_query_keys(docs, [query_doc_id]))
-    q = (
-        docs.join(key, F.col("doc_id") == F.col("qid"))
-        .select(
-            "qid",
-            F.col("shingle_set").alias("q_set"),
-            F.size("shingle_set").alias("q_len"),
-        )
+    keys = F.broadcast(_query_keys(docs, query_ids))
+    return docs.join(keys, F.col("doc_id") == F.col("qid")).select(
+        "qid",
+        F.col("shingle_set").alias("q_set"),
+        F.size("shingle_set").alias("q_len"),
     )
-    return F.broadcast(q)
 
 
 def _intersections(documents: DataFrame, query_doc_id) -> DataFrame:
@@ -312,7 +322,7 @@ def _intersections(documents: DataFrame, query_doc_id) -> DataFrame:
     ``is_q`` flags the query document's own row. Its size is the
     reference's ``len1`` (quirk Q1: taken after the intersection)."""
     docs = _shingle_sets(documents)
-    return docs.join(_query_side(docs, query_doc_id)).select(
+    return docs.join(F.broadcast(_query_side(docs, [query_doc_id]))).select(
         "doc_id",
         "q_len",
         (F.col("doc_id") == F.col("qid")).alias("is_q"),
@@ -397,7 +407,7 @@ def similarity_to_query(
         inter = F.size(F.array_intersect("shingle_set", "q_set"))
         union = F.size(F.array_union("shingle_set", "q_set"))
         return (
-            docs.join(_query_side(docs, query_doc_id))  # 1-row broadcast side
+            docs.join(F.broadcast(_query_side(docs, [query_doc_id])))
             .filter(F.col("doc_id") != F.col("qid"))
             .select(
                 "doc_id",
@@ -430,7 +440,6 @@ def similarity_to_query(
 def similarity_multi_query(
     documents: DataFrame,
     query_ids,
-    text_col: str = "text",
     broadcast_term_limit: int = 2_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -462,38 +471,34 @@ def similarity_multi_query(
     every executor, which stops being viable when the query battery's
     vocabulary no longer fits executor memory (tens of thousands of
     queries). A cheap probe — ``sum(q_len)`` over the query rows only, a
-    point-lookup aggregate, never a corpus scan — counts the term upper
-    bound; above ``broadcast_term_limit`` the operator switches to the
-    shuffled plan: corpus shingles explode fully and shuffle-join the
-    exploded query terms on ``term`` (both sides hash-partitioned;
-    AQE's runtime bloom filter can still prune corpus rows early).
+    point-lookup aggregate, never a corpus scan, kept for the last
+    battery (:class:`_Resident`) — counts the term upper bound; above
+    ``broadcast_term_limit`` the operator switches to the shuffled plan:
+    corpus shingles explode fully and shuffle-join the exploded query
+    terms on ``term`` (both sides hash-partitioned; AQE's runtime bloom
+    filter can still prune corpus rows early).
     Result-identical to the broadcast plan (pytest-pinned with a forced
     threshold); ``stats['multi_query_plan']`` records the choice.
 
-    Every query id must be of the corpus's id type (:func:`_checked_ids`).
+    Every query id must be of the corpus's id type (:func:`_checked_ids`);
+    one that names no document scores nothing.
     """
-    # a list of checked ids: consumed twice (keys + memo key)
-    query_ids = _checked_ids(documents, query_ids)
-    docs = _shingle_sets(documents, text_col)
+    # a tuple of checked ids: consumed twice (keys + memo key)
+    query_ids = tuple(_checked_ids(documents, query_ids))
+    docs = _shingle_sets(documents)
     # one key row per distinct id, as isin matched each query doc once
-    keys = F.broadcast(_query_keys(docs, list(dict.fromkeys(query_ids))))
-    qset = docs.join(keys, F.col("doc_id") == F.col("qid")).select(
-        "qid",
-        F.col("shingle_set").alias("qs"),
-        F.size("shingle_set").alias("q_len"),
-    )
-    qterms = qset.select("qid", "q_len", F.explode("qs").alias("term"))
-    memo = _resident(documents).qterms
-    memo_key = (tuple(query_ids), text_col)
-    n_terms = memo.get(memo_key)
-    if n_terms is None:
-        n_terms = qset.agg(F.sum("q_len")).first()[0] or 0
-        memo[memo_key] = n_terms
+    qset = _query_side(docs, list(dict.fromkeys(query_ids)))
+    qterms = qset.select("qid", "q_len", F.explode("q_set").alias("term"))
+    entry = _resident(documents)
+    probe = entry.probe  # one read: another thread may replace the slot
+    if probe is None or probe[0] != query_ids:
+        probe = entry.probe = (query_ids, qset.agg(F.sum("q_len")).first()[0] or 0)
+    n_terms = probe[1]
     if n_terms <= broadcast_term_limit:
         if stats is not None:
             stats["multi_query_plan"] = "broadcast"
         all_terms = qset.agg(
-            F.array_distinct(F.flatten(F.collect_list("qs"))).alias("all_q")
+            F.array_distinct(F.flatten(F.collect_list("q_set"))).alias("all_q")
         )
         kept = docs.join(F.broadcast(all_terms)).select(
             "doc_id",
@@ -563,18 +568,13 @@ class _CorpusIndex:
         self.term_docs = term_docs
         self.df = df
 
-    def row(self, query_doc_id) -> int | None:
+    def row(self, query_doc_id) -> int:
         """The row of ``query_doc_id`` (checked by :func:`_checked_ids`),
-        ``-1`` if no document has it, or ``None`` for an integer outside
-        the id type's range, which Spark's cast rejects."""
+        or ``-1`` if no document has it."""
         q = query_doc_id
-        if self.id_type == "string":
-            i = bisect.bisect_left(self.ids, q)
-        else:
-            half = 1 << (_INT_BITS[self.id_type] - 1)
-            if not -half <= q < half:
-                return None
-            i = int(self.ids.searchsorted(q))
+        if not _in_range(self.id_type, q):
+            return -1
+        i = bisect.bisect_left(self.ids, q)  # ids: a sorted list or array
         return i if i < len(self.ids) and self.ids[i] == q else -1
 
     def top_k(self, row: int, k: int, mode: str, n: int | None):
@@ -731,42 +731,41 @@ def top_k_similar(
     best-scoring documents of :func:`similarity_to_query`, by score
     descending, then ``doc_id`` ascending.
 
-    Serving: the answer comes from the corpus's resident index
-    (:class:`_CorpusIndex`) and is computed at call time; the returned
-    DataFrame is a local relation of literal rows (:func:`_answer_frame`),
-    so ``collect()`` runs no Spark job and compiles no code. The first
-    call on a corpus object builds the index, under a lock, from one
-    Arrow collect of the resident shingle sets (see the module
-    docstring): term ids from a dictionary encoding, doc ids from row
-    position, no strings or hashes kept. A request then scores the query's posting lists in
-    numpy, with the Spark plan's IEEE doubles. Memory: about 4 bytes
-    per posting each way plus 8 per distinct term, in the Python
-    driver (22 MB for 20k documents with 1.57M postings), while the
-    sets stay persisted in Spark. Lifetime: the index lives with the
-    corpus object, is dropped by the finalizer that unpersists its sets,
-    and an in-place rewrite of a ``load_table`` table gets a fresh one.
+    Serving: the answer is computed at call time from the corpus's
+    resident index (:class:`_CorpusIndex`, built by the first call under
+    a lock; see the module docstring) and returned as a local relation
+    of literal rows (:func:`_answer_frame`). Memory: about 4 bytes per
+    posting each way plus 8 per distinct term, in the Python driver
+    (22 MB for 20k documents with 1.57M postings), while the sets stay
+    persisted in Spark.
 
     The Spark plan, ``TakeOrderedAndProject`` over the scored frame,
-    answers whatever the index cannot answer exactly: a corpus whose
-    build would not fit the driver (an estimate against
+    runs only for a corpus the index cannot hold exactly: a build that
+    would not fit the driver (an estimate against
     ``spark.driver.maxResultSize`` and the driver's available memory),
-    duplicate or NULL doc ids, an integer query id outside the id type's
-    range (Spark's cast rejects it) and a negative or non-int ``k``
-    (Spark rejects it). A query id not of the corpus's id type raises
-    ``TypeError`` before either runs (:func:`_checked_ids`).
+    or duplicate or NULL doc ids. Invalid requests raise before either
+    runs: ``k`` must be an ``int`` or numpy integer, not ``bool``
+    (``TypeError``), and not negative (``ValueError``); the query id
+    must be of the corpus's id type (:func:`_checked_ids`). An id that
+    names no document answers no rows.
     """
+    if not _is_integer(k):
+        raise TypeError(f"k must be an integer, not {type(k).__name__}")
+    if k < 0:
+        raise ValueError(f"k must not be negative, got {k}")
+    k = int(k)
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
     (query_doc_id,) = _checked_ids(documents, [query_doc_id])
-    index = _corpus_index(documents) if type(k) is int and 0 <= k < 2**31 else None
-    row = None if index is None else index.row(query_doc_id)
-    if row is not None:
-        ids, scores = ([], []) if row < 0 or k == 0 else index.top_k(
-            row, k, mode, total_documents
-        )
-        return _answer_frame(
-            documents.sparkSession, index.id_type, query_doc_id, ids, scores
-        )
-    return similarity_to_query(
-        documents, query_doc_id, mode=mode, total_documents=total_documents
-    ).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    index = _corpus_index(documents)
+    if index is None:
+        return similarity_to_query(
+            documents, query_doc_id, mode=mode, total_documents=total_documents
+        ).orderBy(F.desc("score"), F.asc("doc_id")).limit(min(k, 2**31 - 1))
+    row = index.row(query_doc_id)
+    ids, scores = ([], []) if row < 0 or k == 0 else index.top_k(
+        row, k, mode, total_documents
+    )
+    return _answer_frame(
+        documents.sparkSession, index.id_type, query_doc_id, ids, scores
+    )

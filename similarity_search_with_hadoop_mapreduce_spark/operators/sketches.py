@@ -905,7 +905,8 @@ def _dense_words_sql(col: str, n_words_sql: str) -> str:
     assembly: ``element_at`` on a MAP is a linear scan, making that
     shape O(m²) — invisible at the 2^14 family default (~0.07 s) but
     18 s at the 2^20 bitmap the decontamination gate sizes for a real
-    benchmark (scale_probe_zipf.json, r12). Arrays are O(1)-indexed,
+    benchmark (SCALE.md, "r12: dense-bitmap assembly was O(m²)").
+    Arrays are O(1)-indexed,
     so this pays O(total output) exactly once."""
     return (
         f"CASE WHEN size({col}) = 0 THEN "

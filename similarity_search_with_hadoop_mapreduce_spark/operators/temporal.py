@@ -454,7 +454,7 @@ def _is_bare_scan(df: DataFrame, ts_col: str | None = None) -> bool:
     parquet TIMESTAMP(MICROS) fixtures — the driver's events table
     always routed to the aggregate-bounds plan with its second scan
     branch + broadcast-nested-loop join (the exact shape the r10
-    literal-injection win deleted; plans/r12/events_gapfill_locf_*).
+    literal-injection win deleted; OPTIMIZATION_r12.md §5).
 
     The walk inspects the JVM plan tree directly (ADVICE r11), not
     ``optimizedPlan().toString()``: the string render elides Project

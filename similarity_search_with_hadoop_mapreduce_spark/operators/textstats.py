@@ -323,7 +323,8 @@ def benchmark_contamination_bloom(
     join still kills every false positive) but saturates toward
     FPR → 1 and prunes nothing, which is how the family default
     (2^14, watchlist-sized) measured 0.6% prune on the 22k-gram Zipf
-    benchmark before this dial was widened (scale_probe_zipf.json).
+    benchmark before this dial was widened (SCALE.md, "r12: the skew
+    machinery measured on Zipf-shaped text").
     At real eval-suite scale raise ``m_bits`` with ~10 bits/key.
     """
     from similarity_search_with_hadoop_mapreduce_spark.operators.sketches import (

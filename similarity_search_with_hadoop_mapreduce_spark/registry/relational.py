@@ -2374,7 +2374,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~1.65% rank eps, so the 5% tolerance holds with high probability on any
 # given dataset — and DETERMINISTICALLY on a fixed one (the sketches are
 # hash-based, no RNG), which is what makes the pin replay-stable across
-# certification runs at sf0.001/0.01/0.1 (CERTIFY_r*.json). A future
+# certification runs at sf0.001/0.01/0.1 (scripts/certify.py). A future
 # dataset or SF where an estimate lands outside tolerance fails loudly at
 # certification; the deliberate re-pin is these dials (raise the
 # tolerance, or SKETCH_LGK / CM width for more precision), not a silent

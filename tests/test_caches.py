@@ -394,8 +394,8 @@ def test_resident_shingle_sets_unpersisted_with_corpus(spark):
 def test_resident_finalizer_tolerates_stopped_session():
     """The unpersist finalizer runs whenever the collector gets to the
     corpus, possibly after its session was stopped: the failing JVM call
-    (a Py4J error, or a JVM exception PySpark converted) must not escape,
-    and every frame is still tried."""
+    (a Py4J error, or a JVM exception PySpark converted) must not
+    escape."""
     from py4j.protocol import Py4JError
     from pyspark.errors import PySparkException
 
@@ -413,8 +413,40 @@ def test_resident_finalizer_tolerates_stopped_session():
             calls.append(self.exc)
             raise self.exc("SparkContext has been shutdown")
 
-    S._unpersist({"text": Gone(Py4JError), "body": Gone(PySparkException)})
+    S._unpersist(Gone(Py4JError))
+    S._unpersist(Gone(PySparkException))
     assert calls == [Py4JError, PySparkException]
+
+
+def test_multi_query_probe_memo_holds_the_last_battery(spark, monkeypatch):
+    """similarity_multi_query's broadcast-guard probe is remembered for
+    the last battery only: the same battery sent again runs no probe,
+    and a stream of fresh batteries leaves one memo entry, not one per
+    battery."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"probe word{i} alpha beta gamma {i}") for i in range(8)],
+        "doc_id long, text string",
+    )
+    probes = []
+    first = type(docs).first  # the probe is the operator's one first()
+    monkeypatch.setattr(
+        type(docs), "first", lambda self: probes.append(self) or first(self)
+    )
+
+    def probed(battery):
+        probes.clear()
+        S.similarity_multi_query(docs, battery)
+        return len(probes)
+
+    for i in range(1, 7):
+        assert probed([0, i]) == 1
+        assert probed([0, i]) == 0
+    assert S._resident(docs).probe[0] == (0, 6)
+    assert probed([0, 1]) == 1  # replaced by the later batteries
 
 
 def test_resident_shingle_sets_survive_plan_equal_corpus_collected(spark):

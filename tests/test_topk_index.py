@@ -234,20 +234,67 @@ def test_mistyped_ids_raise_type_error(spark, q):
             S.top_k_similar(strings, bad, k=10)
 
 
-def test_unindexable_requests_raise_as_the_spark_plan(spark):
-    """What the index cannot answer runs the Spark plan, which raises: an
-    integer id outside the corpus's id type (Spark's cast overflows) and
-    a negative ``k``."""
-    from pyspark.errors import AnalysisException
+INT_TYPES = (("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64))
 
-    tiny = _corpus(spark, BIGINT_CORPUS, "tinyint")
-    S.top_k_similar(tiny, 0, k=10).collect()  # builds the index
-    for q in (128, -129, 2**63, -2**63 - 1):
-        with pytest.raises(Exception, match="CAST_OVERFLOW"):
-            S.top_k_similar(tiny, q, k=10).collect()
+
+def test_out_of_range_ids_answer_no_rows(spark, monkeypatch):
+    """An integer outside the corpus's id type names no document: every
+    operator answers it as an absent id, with no rows, in both modes,
+    from the index and from the Spark plan, and a battery holding it
+    scores its other ids as if it were not there."""
+    for id_type, bits in INT_TYPES:
+        half = 2 ** (bits - 1)
+        docs = _corpus(spark, BIGINT_CORPUS, id_type)
+        multi = sorted(S.similarity_multi_query(docs, [0]).collect())
+        assert multi
+        for q in (-half - 1, half, 2**63, 10**40):
+            assert S._corpus_index(docs).row(q) == -1
+            for mode in ("parity", "jaccard"):
+                assert _rows(_indexed(docs, q, k=10, mode=mode)) == []
+                with monkeypatch.context() as m:
+                    m.setattr(S, "_corpus_index", lambda documents: None)
+                    assert _rows(S.top_k_similar(docs, q, k=10, mode=mode)) == []
+                assert S.similarity_to_query(docs, q, mode=mode).collect() == []
+            assert S.similarity_multi_query(docs, [q]).collect() == []
+            assert sorted(S.similarity_multi_query(docs, [q, 0]).collect()) == multi
+
+
+def test_invalid_k_raises_before_spark(spark):
+    """``k`` is checked first: a non-integer (``bool`` included) raises
+    ``TypeError`` and a negative one ``ValueError``, before any plan is
+    built or set cached."""
+    import numpy as np
+
     docs = _corpus(spark, BIGINT_CORPUS, "bigint")
-    with pytest.raises(AnalysisException, match="IS_NEGATIVE"):
-        S.top_k_similar(docs, 0, k=-1)
+    for k in (True, False, 2.0, None, "10", np.float64(10), np.bool_(True)):
+        with pytest.raises(TypeError, match="k must be an integer"):
+            S.top_k_similar(docs, 0, k=k)
+    for k in (-1, np.int64(-1)):
+        with pytest.raises(ValueError, match="k must not be negative"):
+            S.top_k_similar(docs, 0, k=k)
+    assert docs not in S._resident_cache
+
+
+def test_every_valid_request_is_indexed(spark):
+    """On an indexable corpus the index answers every valid request: an
+    ``int`` or numpy ``k`` up to and past the Java int range, for a
+    present, an absent and an out-of-range id, on every id type; no
+    request plans the Spark plan's ``TakeOrderedAndProject``."""
+    import numpy as np
+
+    corpora = [(t, BIGINT_CORPUS, (0, 2, 2 ** (b - 1))) for t, b in INT_TYPES]
+    strings = {str(d): t for d, t in BIGINT_CORPUS.items()}
+    corpora.append(("string", strings, ("0", "2")))
+    for id_type, corpus, ids in corpora:
+        docs = _corpus(spark, corpus, id_type)
+        for k in (0, 1, 10, 2**31):
+            for kk in (k, np.int64(k)):
+                for q in ids:
+                    for mode in ("parity", "jaccard"):
+                        df = _indexed(docs, q, k=kk, mode=mode)
+                        assert "TakeOrderedAndProject" not in explain_string(df)
+                        want = _reference(corpus, q, k, mode)
+                        assert _rows(df) == want, (id_type, kk, q, mode)
 
 
 @pytest.mark.parametrize(
@@ -352,10 +399,7 @@ def test_hostile_string_ids(spark, monkeypatch):
     assert {r.query_id for r in multi} == set(HOSTILE_IDS)
 
 
-@pytest.mark.parametrize(
-    "id_type, bits",
-    [("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64)],
-)
+@pytest.mark.parametrize("id_type, bits", INT_TYPES)
 def test_integer_id_extremes(spark, monkeypatch, id_type, bits):
     lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
     ids = [lo, lo + 1, 0, hi - 1, hi]
