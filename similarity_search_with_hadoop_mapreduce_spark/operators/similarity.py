@@ -47,8 +47,11 @@ below reads one persisted ``(doc_id, shingle_set)`` frame per corpus
 DataFrame (:func:`_shingle_sets`), so a served corpus is tokenized and
 shingled once — by the first request — and every later request scans
 the cached sets (or, for top-k, the index built from them; below).
-Lifetime: the frame lives as long as the corpus DataFrame object; when
-that object is garbage-collected a finalizer unpersists it. Invalidation: ``load_table`` returns one DataFrame per
+The sets, the top-k index and the multi-query probe slot are values of
+the corpus DataFrame in the package's one resident store
+(``sources.tables.resident``). Lifetime: they live as long as the corpus
+object; when it is garbage-collected the store's finalizer unpersists
+the sets. Invalidation: ``load_table`` returns one DataFrame per
 parquet fingerprint and refreshes Spark's cache for a rewritten file,
 so an in-place rewrite yields a fresh corpus object with fresh sets.
 Spark's cache matches plans, not objects: two live corpus DataFrames
@@ -88,13 +91,13 @@ time in numpy (``len1`` and ``s`` are bincounts over the query terms'
 posting lists) with the Spark plan's IEEE doubles, and returns it as a
 local relation of literal rows (:func:`_answer_frame`), whose
 ``collect()`` runs no job and compiles no code, and which takes the
-same few Py4J commands to build for any ``k``. The index lives in the
-corpus's resident entry (:class:`_Resident`) beside the sets and is
-dropped by the same finalizer. The Spark plan runs only for a corpus
-the index cannot hold exactly (see :func:`top_k_similar`), so the
-corpus alone decides the path; ``similarity_to_query``,
-``similarity_multi_query`` and the registry's stage entries keep
-scoring from the sets.
+same few Py4J commands to build for any ``k``. The index is the
+corpus's resident value beside the sets. Once built it unpersists the
+sets, which then serve only the Spark plans, and the next such request
+caches them again. The Spark plan runs only for a corpus the index
+cannot hold exactly (see :func:`top_k_similar`), so the corpus alone
+decides the path; ``similarity_to_query``, ``similarity_multi_query``
+and the registry's stage entries keep scoring from the sets.
 
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
@@ -109,98 +112,30 @@ from __future__ import annotations
 import bisect
 import numbers
 import os
-import threading
-import weakref
 
-from py4j.protocol import Py4JError
 from pyspark import StorageLevel
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     staged_shingles_frame,
 )
-
-
-class _Resident:
-    """Everything one corpus DataFrame keeps resident, dropped together
-    by one finalizer when the corpus is garbage-collected:
-
-    - ``sets``: the persisted ``(doc_id, shingle_set)`` frame
-      (:func:`_shingle_sets`), ``None`` until first used;
-    - ``probe``: similarity_multi_query's broadcast-guard probe memo,
-      ``(query_ids, n_terms)`` of the last battery probed. The probe is
-      a point-lookup aggregate over only the query rows, a per-battery
-      statistic, so a battery sent again skips it; one slot, so a
-      stream of fresh batteries holds one entry, not one per battery;
-    - ``index``: top_k_similar's :class:`_CorpusIndex`; ``None`` until
-      the first request builds it under ``lock``, ``False`` when the
-      corpus cannot be indexed.
-    """
-
-    __slots__ = ("sets", "probe", "index", "lock")
-
-    def __init__(self) -> None:
-        self.sets = None
-        self.probe = None
-        self.index = None
-        self.lock = threading.Lock()
-
-
-# corpus DataFrame identity -> its _Resident entry. load_table returns
-# one DataFrame per (session, table, parquet fingerprint), so identity
-# keying matches that reuse, and an in-place rewrite yields a fresh
-# corpus object with a fresh entry (the one invalidation rule, in
-# load_table).
-_resident_cache: "weakref.WeakKeyDictionary[DataFrame, _Resident]" = (
-    weakref.WeakKeyDictionary()
-)
-_resident_lock = threading.Lock()
-
-
-def _resident(documents: DataFrame) -> _Resident:
-    """The resident entry of ``documents``, created on first use."""
-    with _resident_lock:
-        entry = _resident_cache.get(documents)
-        if entry is None:
-            entry = _resident_cache[documents] = _Resident()
-            # not at interpreter exit: the JVM may already be gone by then
-            weakref.finalize(documents, _release, entry).atexit = False
-    return entry
-
-
-def _release(entry: _Resident) -> None:
-    """Finalizer of a corpus DataFrame: drop its index and unpersist its
-    resident sets."""
-    entry.index = None
-    if entry.sets is not None:
-        _unpersist(entry.sets)
-
-
-def _unpersist(frame: DataFrame) -> None:
-    """Drop a resident frame from Spark's cache. The finalizer runs
-    whenever the garbage collector gets to the corpus, possibly after
-    its session was stopped, so a failing call into the JVM (a Py4J
-    error, or a JVM exception PySpark converted) is ignored: there is no
-    cache left to release."""
-    try:
-        frame.unpersist()
-    except (Py4JError, PySparkException):
-        pass
+from similarity_search_with_hadoop_mapreduce_spark.sources.tables import resident
 
 
 def _shingle_sets(documents: DataFrame) -> DataFrame:
     """The resident ``(doc_id, shingle_set)`` frame of ``documents``:
     ``staged_shingles_frame`` of its ``text``, persisted on first use,
     then the same object on every later call with the same corpus."""
-    entry = _resident(documents)
-    if entry.sets is None:
-        entry.sets = staged_shingles_frame(documents, "text", alias="shingle_set")
-    frame = entry.sets
-    # Spark's cache matches plans, so another corpus object with an
-    # equal plan shares this entry, and its finalizer may have dropped
-    # it: cache it again rather than re-shingle on every request
+    frame = resident(
+        documents,
+        "shingle_sets",
+        lambda: staged_shingles_frame(documents, "text", alias="shingle_set"),
+    )
+    # the index build unpersists the sets, and Spark's cache matches
+    # plans, so another corpus object with an equal plan shares this
+    # entry and its finalizer may have dropped it: cache it again rather
+    # than re-shingle on every request
     if frame.storageLevel == StorageLevel.NONE:
         frame.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     return frame
@@ -234,6 +169,19 @@ def _checked_ids(documents: DataFrame, query_ids) -> list:
 def _is_integer(value) -> bool:
     """An ``int`` or numpy integer, not a ``bool``."""
     return isinstance(value, numbers.Integral) and not isinstance(value, bool)
+
+
+def _count(name: str, value, bound: int | None = None) -> int:
+    """``value`` as a plain ``int``, checked before any Spark call: an
+    ``int`` or numpy integer, not ``bool`` (else ``TypeError``), not
+    negative and below ``bound`` if given (else ``ValueError``)."""
+    if not _is_integer(value):
+        raise TypeError(f"{name} must be an integer, not {type(value).__name__}")
+    if value < 0:
+        raise ValueError(f"{name} must not be negative, got {value}")
+    if bound is not None and value >= bound:
+        raise ValueError(f"{name} must be below {bound}, got {value}")
+    return int(value)
 
 
 def _in_range(id_type: str, query_id) -> bool:
@@ -395,10 +343,14 @@ def similarity_to_query(
     resident shingle sets, so counting reads the cached sets (and caches
     them on a first request) instead of scanning the corpus a second time.
 
-    ``query_doc_id`` must be of the corpus's id type (:func:`_checked_ids`).
+    ``total_documents`` must be ``None`` or an integer in ``[0, 2**63)``
+    (:func:`_count`), and ``query_doc_id`` of the corpus's id type
+    (:func:`_checked_ids`).
     """
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
+    if total_documents is not None:
+        total_documents = _count("total_documents", total_documents, 2**63)
     (query_doc_id,) = _checked_ids(documents, [query_doc_id])
 
     if mode == "jaccard":
@@ -472,11 +424,11 @@ def similarity_multi_query(
     vocabulary no longer fits executor memory (tens of thousands of
     queries). A cheap probe — ``sum(q_len)`` over the query rows only, a
     point-lookup aggregate, never a corpus scan, kept for the last
-    battery (:class:`_Resident`) — counts the term upper bound; above
-    ``broadcast_term_limit`` the operator switches to the shuffled plan:
-    corpus shingles explode fully and shuffle-join the exploded query
-    terms on ``term`` (both sides hash-partitioned; AQE's runtime bloom
-    filter can still prune corpus rows early).
+    battery in one resident slot of the corpus — counts the term upper
+    bound; above ``broadcast_term_limit`` the operator switches to the
+    shuffled plan: corpus shingles explode fully and shuffle-join the
+    exploded query terms on ``term`` (both sides hash-partitioned; AQE's
+    runtime bloom filter can still prune corpus rows early).
     Result-identical to the broadcast plan (pytest-pinned with a forced
     threshold); ``stats['multi_query_plan']`` records the choice.
 
@@ -489,10 +441,13 @@ def similarity_multi_query(
     # one key row per distinct id, as isin matched each query doc once
     qset = _query_side(docs, list(dict.fromkeys(query_ids)))
     qterms = qset.select("qid", "q_len", F.explode("q_set").alias("term"))
-    entry = _resident(documents)
-    probe = entry.probe  # one read: another thread may replace the slot
+    # one slot, (query_ids, n_terms) of the last battery probed: a
+    # battery sent again skips the probe, and a stream of fresh ones
+    # holds one entry, not one per battery
+    slot = resident(documents, "multi_query_probe", lambda: [None])
+    probe = slot[0]  # one read: another thread may replace the slot
     if probe is None or probe[0] != query_ids:
-        probe = entry.probe = (query_ids, qset.agg(F.sum("q_len")).first()[0] or 0)
+        probe = slot[0] = (query_ids, qset.agg(F.sum("q_len")).first()[0] or 0)
     n_terms = probe[1]
     if n_terms <= broadcast_term_limit:
         if stats is not None:
@@ -654,7 +609,9 @@ def _build_index(documents: DataFrame) -> _CorpusIndex | None:
     """Collect the resident sets once and build their CSR index, or
     ``None`` if the index could not answer exactly: a build too large for
     the driver (:func:`_fits_driver`), or NULL or duplicate doc ids (the
-    Spark plan scores each row)."""
+    Spark plan scores each row). A built index unpersists the sets: only
+    the Spark plans read them, and :func:`_shingle_sets` caches them
+    again for the next such request."""
     sets = _shingle_sets(documents)
     id_type = sets.schema["doc_id"].dataType.simpleString()
     sets.count()  # fills the cache, so its statistics are the real size
@@ -689,19 +646,16 @@ def _build_index(documents: DataFrame) -> _CorpusIndex | None:
     rows = np.repeat(np.arange(len(sizes), dtype=np.int32), sizes)
     term_docs = rows[np.argsort(term_ids, kind="stable")]
     ids = ids.to_pylist() if id_type == "string" else ids.to_numpy()
+    sets.unpersist()
     return _CorpusIndex(id_type, ids, doc_ptr, term_ids, term_ptr, term_docs, df)
 
 
 def _corpus_index(documents: DataFrame) -> _CorpusIndex | None:
     """The resident index of ``documents``, built once, by the first
-    request, under the corpus entry's lock; ``None`` if the corpus
-    cannot be indexed."""
-    entry = _resident(documents)
-    if entry.index is None:
-        with entry.lock:
-            if entry.index is None:
-                entry.index = _build_index(documents) or False
-    return entry.index or None
+    request; ``None`` if the corpus cannot be indexed (stored as
+    ``False``, so that is decided once too)."""
+    index = resident(documents, "index", lambda: _build_index(documents) or False)
+    return index or None
 
 
 def _answer_frame(spark, id_type: str, query_doc_id, ids, scores) -> DataFrame:
@@ -736,8 +690,8 @@ def top_k_similar(
     a lock; see the module docstring) and returned as a local relation
     of literal rows (:func:`_answer_frame`). Memory: about 4 bytes per
     posting each way plus 8 per distinct term, in the Python driver
-    (22 MB for 20k documents with 1.57M postings), while the sets stay
-    persisted in Spark.
+    (22 MB for 20k documents with 1.57M postings); the build unpersists
+    the sets from Spark's cache.
 
     The Spark plan, ``TakeOrderedAndProject`` over the scored frame,
     runs only for a corpus the index cannot hold exactly: a build that
@@ -745,17 +699,16 @@ def top_k_similar(
     ``spark.driver.maxResultSize`` and the driver's available memory),
     or duplicate or NULL doc ids. Invalid requests raise before either
     runs: ``k`` must be an ``int`` or numpy integer, not ``bool``
-    (``TypeError``), and not negative (``ValueError``); the query id
-    must be of the corpus's id type (:func:`_checked_ids`). An id that
-    names no document answers no rows.
+    (``TypeError``), and not negative (``ValueError``); so must
+    ``total_documents``, unless ``None``, and below ``2**63`` as well
+    (:func:`_count`); the query id must be of the corpus's id type
+    (:func:`_checked_ids`). An id that names no document answers no rows.
     """
-    if not _is_integer(k):
-        raise TypeError(f"k must be an integer, not {type(k).__name__}")
-    if k < 0:
-        raise ValueError(f"k must not be negative, got {k}")
-    k = int(k)
+    k = _count("k", k)
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
+    if total_documents is not None:
+        total_documents = _count("total_documents", total_documents, 2**63)
     (query_doc_id,) = _checked_ids(documents, [query_doc_id])
     index = _corpus_index(documents)
     if index is None:

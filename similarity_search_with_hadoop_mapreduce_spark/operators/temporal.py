@@ -30,25 +30,13 @@ entries run the bucketed implementations against the unchanged oracles).
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Memo for gapfill_locf_auto's span probe: DataFrame identity -> {ts_col:
-# (lo, hi)}. The probe is a catalog-style min/max statistic (parquet
-# footer metadata, no row scan); caching it per loaded table mirrors what
-# ANALYZE TABLE persists and removes a per-call job launch. load_table
-# returns one cached DataFrame object per (session, table, parquet
-# fingerprint), so identity keying matches exactly the reuse a catalog
-# would see — and an in-place fixture rewrite yields a fresh DataFrame
-# object, which starts a fresh memo here (the ADVICE-r2 invalidation
-# rule, enforced once in load_table rather than per-memo).
-_span_cache: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+from similarity_search_with_hadoop_mapreduce_spark.sources.tables import resident
 
 
 def asof_join(
@@ -541,20 +529,7 @@ def gapfill_locf_auto(
     literals, deleting the bounds subquery + broadcast join from the
     global plan (measured -41% solo, r10; OPTIMIZATION_r12.md §5).
     """
-    memo = _span_cache.setdefault(events, {})
-    if ts_col in memo:
-        lo, hi, exact = memo[ts_col]
-    else:
-        bounds = _parquet_footer_span(events, ts_col)
-        if bounds is None:
-            lo, hi = events.agg(F.min(ts_col), F.max(ts_col)).first()
-            exact = True  # aggregate of the actual rows
-        else:
-            lo, hi = bounds
-            # footer stats == row bounds only if no node drops rows AND
-            # no Project redefines ts_col under its physical name
-            exact = _is_bare_scan(events, ts_col)
-        memo[ts_col] = (lo, hi, exact)
+    lo, hi, exact = resident(events, ("span", ts_col), lambda: _span(events, ts_col))
     span_minutes = (
         0 if lo is None else int((hi - lo).total_seconds() // 60) + 1
     )
@@ -568,6 +543,20 @@ def gapfill_locf_auto(
     if stats is not None:
         stats["gapfill_plan"] = "bucketed"
     return gapfill_locf_bucketed(events, ts_col, key_col, value_col, bucket_unit)
+
+
+def _span(events: DataFrame, ts_col: str) -> tuple:
+    """``(lo, hi, exact)``: :func:`gapfill_locf_auto`'s span probe, a
+    catalog-style min/max statistic (parquet footer metadata, no row
+    scan) kept once per frame in the resident store, as ANALYZE TABLE
+    would persist it; ``exact`` when the bounds are the rows' own."""
+    bounds = _parquet_footer_span(events, ts_col)
+    if bounds is None:
+        lo, hi = events.agg(F.min(ts_col), F.max(ts_col)).first()
+        return lo, hi, True  # aggregate of the actual rows
+    # footer stats == row bounds only if no node drops rows AND
+    # no Project redefines ts_col under its physical name
+    return (*bounds, _is_bare_scan(events, ts_col))
 
 
 def gapfill_locf_bucketed(

@@ -11,13 +11,21 @@ of plain-text files, one file = one document, doc id = basename up to the
 first ``.`` — ``BookQuery.java:48-49``) without any driver-side manifest:
 ``spark.read.text`` + ``input_file_name()`` keeps the scan distributed and
 lets Spark place splits.
+
+State derived from a table — a corpus's shingle sets and top-k index, an
+embeddings table's ANN layouts, a span or fan-out probe — lives in one
+store, :func:`resident`, keyed on the frame ``load_table`` returns, so
+``load_table``'s fingerprint rule invalidates all of it at once.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,10 +57,10 @@ _table_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 def table_fingerprint(sf_dir: str, name: str) -> tuple:
     """``(mtime_ns, size)`` of a fixture table's backing parquet.
 
-    Process-global caches of table-derived artifacts (corpus doc counts,
-    trained codebooks) key on this alongside ``sf_dir`` so rewriting a
-    fixture in place within one process invalidates them (ADVICE r2)
-    instead of serving stale values against their own oracles.
+    Read only by :func:`load_table`, whose catalog key it ends: rewriting
+    a fixture in place yields a fresh frame, and with it a fresh entry in
+    the :func:`resident` store, so nothing derived from the old file is
+    served against the new one.
     """
     st = os.stat(f"{sf_dir}/{name}.parquet")
     return (st.st_mtime_ns, st.st_size)
@@ -97,22 +105,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos are microsecond-aligned); a TIMESTAMP(MICROS) fixture arrives as
     TIMESTAMP_NTZ and is cast. DuckDB's TIMESTAMP is naive microseconds,
     so both normalizations are oracle-compatible.
+
+    The frame is the one invalidation rule of every state derived from
+    the table: the :func:`resident` store keys on it, and an in-place
+    rewrite of the file (a new :func:`table_fingerprint`) yields a fresh
+    frame, whose entries start empty, and releases the superseded
+    frame's entries at once.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     cache = _table_cache.setdefault(spark, {})
     # fingerprint in the key (an os.stat, ~µs): an in-place fixture rewrite
-    # yields a FRESH DataFrame object, which cascades invalidation to every
-    # identity-keyed memo downstream (_fan_cache, temporal's _span_cache,
-    # similarity's resident corpus entries) — one
-    # invalidation policy for the whole catalog instead of per-memo
-    # fingerprints (ADVICE r3).
+    # yields a FRESH DataFrame object, so the resident store starts clean
+    # for it
     key = (sf_dir, name, table_fingerprint(sf_dir, name))
     if key in cache:
         return cache[key]
     stale = [k for k in cache if k[:2] == key[:2]]
     for k in stale:
-        del cache[k]  # superseded vintage of the same table
+        # a superseded vintage: release its resident values now, not when
+        # a caller drops the frame. Spark's cache matches plans, so the new
+        # vintage's persisted frames share cache entries with the old
+        # one's, which the old frame's finalizer would drop later.
+        entry = _resident_store.pop(cache.pop(k), None)
+        if entry is not None:
+            _release(entry.values)
     if stale:
         # Spark's cache matches plans, not objects: the new frame's plan
         # equals the old vintage's, so a persisted frame derived from the
@@ -136,16 +153,68 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# fan_out memo: input DataFrame -> repartition target (0: none needed).
-# load_table returns the cached object per (session, table), so repeated
-# fan_out(corpus) calls hit this and skip the plan-stats probe. Keyed
-# weakly on the input df object (DataFrame doesn't override
-# __eq__/__hash__, so this is identity). The value is the decision, never
-# a DataFrame: a WeakKeyDictionary holds values strongly, so storing the
-# unrepartitioned input as its own value would keep the key alive forever.
-_fan_cache: "weakref.WeakKeyDictionary[DataFrame, int]" = (
+class _Entry:
+    """One frame's resident values by key, and a build lock per key."""
+
+    __slots__ = ("values", "locks")
+
+    def __init__(self) -> None:
+        self.values: dict = {}
+        self.locks: dict = {}
+
+
+# The resident store: frame -> its _Entry, weakly keyed on the frame
+# object (DataFrame does not override __eq__/__hash__, so this is
+# identity). A value must not reference its frame, or the frame never
+# dies: a frame derived from it holds its JVM plan, not the Python object.
+_resident_store: "weakref.WeakKeyDictionary[DataFrame, _Entry]" = (
     weakref.WeakKeyDictionary()
 )
+_resident_lock = threading.Lock()
+
+
+def resident(df: DataFrame, key, build):
+    """The value ``build()`` made for ``(df, key)``, built by the first
+    call and then the same object on every later one.
+
+    Each value is built once, under a lock per ``(df, key)``, so racing
+    first calls wait for one build. A build may read other keys of the
+    same frame (the top-k index reads the shingle sets, the IVF-PQ layout
+    reads the trained book); the keys must form no cycle. A build that
+    raises stores nothing, and the next call builds again. When ``df`` is
+    garbage-collected, one finalizer unpersists every DataFrame among its
+    values, also inside tuples.
+    """
+    with _resident_lock:
+        entry = _resident_store.get(df)
+        if entry is None:
+            entry = _resident_store[df] = _Entry()
+            # not at interpreter exit: the JVM may already be gone by then
+            weakref.finalize(df, _release, entry.values).atexit = False
+        if key in entry.values:
+            return entry.values[key]
+        lock = entry.locks.setdefault(key, threading.Lock())
+    with lock:
+        if key not in entry.values:
+            entry.values[key] = build()
+    return entry.values[key]
+
+
+def _release(values: dict) -> None:
+    """Finalizer of a frame: unpersist the DataFrames among its resident
+    values and forget them, so a later call releases nothing twice. It
+    runs whenever the collector gets to the frame, possibly after its
+    session was stopped, so a failing call into the JVM (a Py4J error, or
+    a JVM exception PySpark converted) is ignored: there is no cache left
+    to release."""
+    for value in values.values():
+        for item in value if isinstance(value, tuple) else (value,):
+            if isinstance(item, DataFrame):
+                try:
+                    item.unpersist()
+                except (Py4JError, PySparkException):
+                    pass
+    values.clear()
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -162,7 +231,8 @@ def fan_out(df: DataFrame) -> DataFrame:
     (for file sources: the already-listed file sizes) against
     ``defaultParallelism × spark.sql.files.maxPartitionBytes`` — an input
     smaller than that cannot yield that many splits. This is driver-side
-    metadata only: no ``df.rdd`` conversion, no physical planning, no job.
+    metadata only: no ``df.rdd`` conversion, no physical planning, no job,
+    and it is made once per frame (:func:`resident`).
 
     The byte heuristic assumes a byte-range-splittable source (parquet,
     ORC, plain CSV/JSON/text). Non-splittable scans — ``wholetext``
@@ -172,20 +242,21 @@ def fan_out(df: DataFrame) -> DataFrame:
     time (``load_corpus_dir`` does: it repartitions when the listing has
     fewer files than the cluster has cores).
     """
-    target = _fan_cache.get(df)
-    if target is None:
-        spark = df.sparkSession
-        target = spark.sparkContext.defaultParallelism
-        # typed SQLConf getter: Spark validates the byte string at
-        # conf.set time, so this is always a parsed, legal value
-        max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        plan_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if plan_bytes >= target * max_pb:
-            target = 0
-        _fan_cache[df] = target
+    target = resident(df, "fan_out", lambda: _fan_target(df))
     return df.repartition(target) if target else df
+
+
+def _fan_target(df: DataFrame) -> int:
+    """:func:`fan_out`'s repartition target for ``df``, 0 for none. The
+    value is the decision, never a frame: a resident value holding its
+    own frame would keep it alive forever."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    # typed SQLConf getter: Spark validates the byte string at
+    # conf.set time, so this is always a parsed, legal value
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    plan_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 if plan_bytes >= target * max_pb else target
 
 
 def load_corpus_dir(spark: SparkSession, path: str) -> DataFrame:

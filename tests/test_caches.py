@@ -1,12 +1,13 @@
-"""Cache-invalidation and literal-guard behavior (ADVICE r3).
+"""Cache-invalidation and literal-guard behavior.
 
 The invalidation policy lives in ONE place — ``load_table`` keys on the
 parquet fingerprint, so an in-place fixture rewrite yields a fresh
-DataFrame object and every identity-keyed memo downstream (_fan_cache,
-_span_cache, similarity's resident corpus entries) starts clean. The
-persisted ANN index cache additionally unpersists superseded entries;
-a corpus's resident shingle sets are unpersisted, and its top-k index
-dropped, when its corpus DataFrame is garbage-collected.
+DataFrame object, and the one resident store (``sources.tables.resident``:
+fan-out targets, span probes, similarity's shingle sets and top-k index,
+the ANN layouts) starts clean for it, while the superseded vintage's
+values are released. When a frame is garbage-collected, the store's
+finalizer unpersists the DataFrames among its values, such as a corpus's
+shingle sets.
 """
 
 from __future__ import annotations
@@ -62,33 +63,46 @@ def test_table_cache_evicts_superseded_vintage(spark, tmp_sf):
 
 
 def test_span_memo_invalidated_by_rewrite(spark, tmp_sf):
-    """The identity-keyed span memo follows load_table's fingerprint:
-    a rewritten fixture cannot serve a stale span."""
-    from similarity_search_with_hadoop_mapreduce_spark.operators import temporal as TP
-    from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
+    """The span probe is a resident value of the load_table frame, so it
+    follows load_table's fingerprint: a rewritten fixture cannot serve a
+    stale span, and the superseded frame's values are released."""
+    from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 
-    emb = load_table(spark, tmp_sf, "embeddings")
-    TP._span_cache.setdefault(emb, {})["ts"] = "SENTINEL"
+    emb = T.load_table(spark, tmp_sf, "embeddings")
+    assert T.resident(emb, ("span", "ts"), lambda: "SENTINEL") == "SENTINEL"
     _rewrite(f"{tmp_sf}/embeddings.parquet")
-    emb2 = load_table(spark, tmp_sf, "embeddings")
-    assert "ts" not in TP._span_cache.setdefault(emb2, {})
+    emb2 = T.load_table(spark, tmp_sf, "embeddings")
+    assert T.resident(emb2, ("span", "ts"), lambda: "fresh") == "fresh"
+    assert emb not in T._resident_store
 
 
 def test_ivf_serve_cache_unpersists_stale(spark, tmp_sf):
+    """After an in-place rewrite of ``embeddings``, the superseded
+    vintage's persisted ANN layouts are unpersisted, and the next entry
+    builds fresh ones for the new frame. The fresh ones stay cached when
+    the old frame, which a caller held through the rewrite, is collected
+    (Spark's cache matches plans, so old and new layouts share cache
+    entries, and a late finalizer of the old frame would drop them)."""
     from similarity_search_with_hadoop_mapreduce_spark.registry import ann as R
 
-    d: dict = {}
-    df_old = spark.range(5).persist()
-    df_old.count()
-    assert df_old.storageLevel.useMemory
-    d[("assigned", tmp_sf, ("fp-old",))] = df_old
-    d[("pq", tmp_sf, ("fp-old",))] = (["books"], df_old)
-    d[("assigned", "/other/sf", ("fp-old",))] = "untouched"
-    R._evict_stale(d, tmp_sf, ("fp-new",))
-    assert not df_old.storageLevel.useMemory  # unpersisted
-    assert ("assigned", tmp_sf, ("fp-old",)) not in d
-    assert ("pq", tmp_sf, ("fp-old",)) not in d
-    assert d[("assigned", "/other/sf", ("fp-old",))] == "untouched"
+    assigned = R._ivf_index(spark, tmp_sf)
+    _books, codes = R._pq_index(spark, tmp_sf)
+    old_rows = sorted(assigned.collect())
+    assert assigned.storageLevel.useMemory and codes.storageLevel.useMemory
+    old = R.table(spark, tmp_sf, "embeddings")
+    _rewrite(f"{tmp_sf}/embeddings.parquet")
+    assert R.table(spark, tmp_sf, "embeddings") is not old
+    assert not assigned.storageLevel.useMemory  # unpersisted
+    assert not codes.storageLevel.useMemory
+    fresh = R._ivf_index(spark, tmp_sf)
+    fresh_codes = R._pq_index(spark, tmp_sf)[1]
+    assert fresh is not assigned and fresh_codes is not codes
+    assert sorted(fresh.collect()) == old_rows  # same bytes, same layout
+    ref = weakref.ref(old)
+    del old
+    gc.collect()
+    assert ref() is None
+    assert fresh.storageLevel.useMemory and fresh_codes.storageLevel.useMemory
 
 
 def test_pq_topk_rejects_codes_without_books(spark):
@@ -193,8 +207,8 @@ def test_fan_out_follows_max_partition_bytes(spark):
 
 
 def test_fan_out_memo_releases_unrepartitioned_frame(spark):
-    """A frame fan_out leaves as is must stay collectable: the memo holds
-    the repartition decision, not the frame (a WeakKeyDictionary holds
+    """A frame fan_out leaves as is must stay collectable: the resident
+    store holds the repartition decision, not the frame (the store holds
     its values strongly, so a frame stored as its own value never dies)."""
     from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 
@@ -206,11 +220,11 @@ def test_fan_out_memo_releases_unrepartitioned_frame(spark):
         assert T.fan_out(fresh) is fresh  # no repartition
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
-    assert fresh in T._fan_cache
+    assert T._resident_store[fresh].values == {"fan_out": 0}
     ref = weakref.ref(fresh)
     del fresh
     gc.collect()
-    # a WeakKeyDictionary entry cannot outlive its key
+    # a resident entry cannot outlive its frame
     assert ref() is None
 
 
@@ -255,8 +269,8 @@ def test_resident_shingle_sets_reused_and_exact(spark):
 def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     """An in-place rewrite with different rows gets a fresh resident
     frame, and a fresh top-k index, that answer from the NEW rows, even
-    while the old vintage's frame is still alive and cached (Spark's
-    cache matches plans, and both vintages read the same path)."""
+    while the old vintage's frame is still alive (Spark's cache matches
+    plans, and both vintages read the same path)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -271,7 +285,7 @@ def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     old_rows = _sim_rows(S.similarity_to_query(old, 0))
     old_sets = S._shingle_sets(old)
     old_top = S.top_k_similar(old, 0, k=10).collect()
-    old_index = S._resident(old).index
+    old_index = S._corpus_index(old)
 
     # doc 1 becomes a copy of the query doc 0, so it must score 1.0
     rows = pq.read_table(path).to_pylist()
@@ -289,7 +303,7 @@ def test_resident_shingle_sets_follow_load_table_rewrite(spark, tmp_path):
     assert new_rows == _sim_rows(S.similarity_to_query(_fresh_copy(spark, new), 0))
     assert (1, "0", 1.0) in new_rows
     top = S.top_k_similar(new, 0, k=10).collect()
-    assert S._resident(new).index not in (None, False, old_index)
+    assert S._corpus_index(new) not in (None, old_index)
     assert top != old_top
     assert (top[0].doc_id, top[0].score) == (1, 1.0)
     assert top == S.top_k_similar(_fresh_copy(spark, new), 0, k=10).collect()
@@ -369,8 +383,8 @@ def test_parity_doc_count_caches_the_sets(spark):
 
 
 def test_resident_shingle_sets_unpersisted_with_corpus(spark):
-    """One finalizer releases a collected corpus's resident entry: it
-    unpersists the sets and drops the top-k index."""
+    """The store's one finalizer releases a collected corpus's resident
+    values: it unpersists the sets and drops the top-k index."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
@@ -380,41 +394,77 @@ def test_resident_shingle_sets_unpersisted_with_corpus(spark):
         "doc_id long, text string",
     )
     S.top_k_similar(docs, 0, k=3).collect()
-    sets = S._shingle_sets(docs)
+    sets = S._shingle_sets(docs)  # cached again after the index build
     assert sets.storageLevel.useMemory
-    entry = S._resident(docs)
-    index = weakref.ref(entry.index)
+    index = weakref.ref(S._corpus_index(docs))
     del docs
     gc.collect()
     assert not sets.storageLevel.useMemory
-    assert entry.index is None
     assert index() is None
 
 
-def test_resident_finalizer_tolerates_stopped_session():
-    """The unpersist finalizer runs whenever the collector gets to the
-    corpus, possibly after its session was stopped: the failing JVM call
-    (a Py4J error, or a JVM exception PySpark converted) must not
-    escape."""
-    from py4j.protocol import Py4JError
-    from pyspark.errors import PySparkException
+def test_index_build_releases_the_shingle_sets(spark):
+    """Once top_k_similar has built its index, the corpus's shingle sets
+    hold no storage: only the Spark plans read them, and the next such
+    request caches them again and answers what a never-cached copy
+    answers. A corpus the index cannot hold (a NULL doc id) keeps its
+    sets cached, because its top-k requests run the Spark plan."""
+    from pyspark import StorageLevel
 
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
+    from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+    from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
+
+    def stored_sets(docs):
+        # the resident frame as is: _shingle_sets would cache it again
+        return T._resident_store[docs].values["shingle_sets"].storageLevel
+
+    rows = [(i, f"release word{i} alpha beta gamma {i % 4}") for i in range(10)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    S.top_k_similar(docs, 0, k=3).collect()
+    assert S._corpus_index(docs) is not None
+    assert stored_sets(docs) == StorageLevel.NONE
+    for mode in ("parity", "jaccard"):
+        df = S.similarity_to_query(docs, 0, mode=mode)
+        assert "InMemoryTableScan" in explain_string(df)
+        assert _sim_rows(df) == _sim_rows(
+            S.similarity_to_query(_fresh_copy(spark, docs), 0, mode=mode)
+        )
+    assert stored_sets(docs).useMemory
+
+    nulls = spark.createDataFrame(rows + [(None, "release alpha beta")], docs.schema)
+    S.top_k_similar(nulls, 0, k=3).collect()
+    assert S._corpus_index(nulls) is None
+    assert stored_sets(nulls).useMemory
+
+
+def test_resident_finalizer_tolerates_stopped_session():
+    """The store's unpersist finalizer runs whenever the collector gets to
+    the corpus, possibly after its session was stopped: the failing JVM
+    call (a Py4J error, or a JVM exception PySpark converted) must not
+    escape."""
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+    from pyspark.sql import DataFrame
+
+    from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 
     calls = []
 
-    class Gone:
+    class Gone(DataFrame):
+        def __new__(cls, exc):
+            return object.__new__(cls)
+
         def __init__(self, exc):
             self.exc = exc
 
-        def unpersist(self):
+        def unpersist(self, blocking=False):
             calls.append(self.exc)
             raise self.exc("SparkContext has been shutdown")
 
-    S._unpersist(Gone(Py4JError))
-    S._unpersist(Gone(PySparkException))
+    T._release({"sets": Gone(Py4JError), "layout": ([], Gone(PySparkException))})
     assert calls == [Py4JError, PySparkException]
 
 
@@ -426,6 +476,7 @@ def test_multi_query_probe_memo_holds_the_last_battery(spark, monkeypatch):
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
+    from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 
     docs = spark.createDataFrame(
         [(i, f"probe word{i} alpha beta gamma {i}") for i in range(8)],
@@ -445,7 +496,8 @@ def test_multi_query_probe_memo_holds_the_last_battery(spark, monkeypatch):
     for i in range(1, 7):
         assert probed([0, i]) == 1
         assert probed([0, i]) == 0
-    assert S._resident(docs).probe[0] == (0, 6)
+    slot = T._resident_store[docs].values["multi_query_probe"]
+    assert len(slot) == 1 and slot[0][0] == (0, 6)
     assert probed([0, 1]) == 1  # replaced by the later batteries
 
 

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 
 from similarity_search_with_hadoop_mapreduce_spark.operators import similarity as S
 from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 from tests.reference_sim import jaccard_similarity, mr_similarity
 
 KS = (0, 1, 3, 10, 50)
@@ -222,7 +223,7 @@ def test_mistyped_ids_raise_type_error(spark, q):
     for call in calls:
         with pytest.raises(TypeError, match="query id"):
             call(q)
-    assert docs not in S._resident_cache  # no set cached, no index built
+    assert docs not in T._resident_store  # no set cached, no index built
     # a numpy integer is an integer id
     assert _rows(S.top_k_similar(docs, np.int64(3), k=10)) == _rows(
         S.top_k_similar(docs, 3, k=10)
@@ -272,7 +273,48 @@ def test_invalid_k_raises_before_spark(spark):
     for k in (-1, np.int64(-1)):
         with pytest.raises(ValueError, match="k must not be negative"):
             S.top_k_similar(docs, 0, k=k)
-    assert docs not in S._resident_cache
+    assert docs not in T._resident_store
+
+
+def test_total_documents_checked_before_spark(spark, monkeypatch):
+    """``total_documents`` follows ``k``'s rule: ``None`` or an integer
+    in ``[0, 2**63)``. Another type raises ``TypeError`` and a value out
+    of range ``ValueError``, from both operators, in both modes and on
+    both top-k paths, before a plan is built or a set cached (the index
+    used to skip the prune for ``'3'``, which the Spark plan cast to 3).
+    A valid ``n`` below the count prunes alike on the index and the
+    Spark plan."""
+    import numpy as np
+
+    docs = _corpus(spark, BIGINT_CORPUS, "bigint")
+
+    def calls(n):
+        for mode in ("parity", "jaccard"):
+            yield lambda: S.similarity_to_query(docs, 0, mode=mode, total_documents=n)
+            yield lambda: S.top_k_similar(docs, 0, k=10, mode=mode, total_documents=n)
+            yield lambda: _spark_plan(
+                monkeypatch, docs, 0, k=10, mode=mode, total_documents=n
+            )
+
+    for bad in ("3", True, 3.0, np.float64(3), np.bool_(True), b"3"):
+        for call in calls(bad):
+            with pytest.raises(TypeError, match="total_documents must be an integer"):
+                call()
+    for bad in (-1, np.int64(-1), 2**63, 2**70):
+        for call in calls(bad):
+            with pytest.raises(ValueError, match="total_documents must"):
+                call()
+    assert docs not in T._resident_store
+    for n in (3, np.int64(3), 2**63 - 1):
+        want = _rows(_spark_plan(monkeypatch, docs, 0, k=10, total_documents=n))
+        assert _rows(_indexed(docs, 0, k=10, total_documents=n)) == want
+        assert sorted(want) == sorted(
+            _rows(S.similarity_to_query(docs, 0, total_documents=n))
+        )
+    # n = 3 prunes the shingles in three of the four documents
+    assert _rows(_indexed(docs, 0, k=10, total_documents=3)) != _rows(
+        _indexed(docs, 0, k=10)
+    )
 
 
 def test_every_valid_request_is_indexed(spark):
@@ -314,7 +356,7 @@ def test_unindexable_corpora_take_the_spark_plan(spark, monkeypatch, rows):
         got = _rows(df)
         assert got and got == _rows(_spark_plan(monkeypatch, docs, 0, k=10,
                                                 mode=mode))
-    assert S._resident(docs).index is False  # decided once per corpus
+    assert T._resident_store[docs].values["index"] is False  # decided once
 
 
 def test_index_above_the_driver_budget_is_not_built(spark, monkeypatch):
@@ -323,7 +365,7 @@ def test_index_above_the_driver_budget_is_not_built(spark, monkeypatch):
     df = S.top_k_similar(docs, 0, k=10)
     assert "TakeOrderedAndProject" in explain_string(df)
     assert _rows(df) == _reference(BIGINT_CORPUS, 0, 10, "parity")
-    assert S._resident(docs).index is False
+    assert T._resident_store[docs].values["index"] is False
 
 
 def test_warm_request_runs_no_job(spark):
