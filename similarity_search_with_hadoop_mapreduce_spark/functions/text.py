@@ -27,11 +27,16 @@ Reference parity notes (SURVEY.md §2.3):
 from __future__ import annotations
 
 import re
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.sources.tables import fan_out
+
+if TYPE_CHECKING:
+    import numpy as np
+    import pyarrow as pa
 
 _PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
@@ -136,3 +141,117 @@ def staged_shingles_frame(
         *keep,
         F.expr(f"array_distinct({ngrams_attr_sql('_toks', 3)})").alias(alias),
     )
+
+
+class TrigramSets(NamedTuple):
+    """The distinct word-trigram sets of a column of texts, as term ids
+    (:func:`trigram_sets`). Row ``r``'s set is ``terms[ptr[r]:ptr[r+1]]``,
+    ascending. Term ``t`` is the trigram with exact code ``keys[t]``
+    (ascending, so ids are dense ranks of the codes); a code is
+    ``pair * base + c`` over token ids ``a, b, c`` with
+    ``base = len(vocab) + 1``, where ``pair`` is ``a * base + b``, or its
+    rank in ``pairs`` when the packed code would overflow int64. Token id
+    ``len(vocab)`` is Java's leading empty token."""
+
+    ptr: np.ndarray
+    terms: np.ndarray
+    keys: np.ndarray
+    pairs: np.ndarray | None
+    vocab: pa.Array
+
+    def strings(self, term_ids) -> list[str]:
+        """The trigram text of each term id, as ``staged_shingles_frame``
+        spells it."""
+        import numpy as np
+        import pyarrow as pa
+
+        base = len(self.vocab) + 1
+        pair, c = np.divmod(self.keys[np.asarray(term_ids, np.int64)], base)
+        if self.pairs is not None:
+            pair = self.pairs[pair]
+        words = pa.concat_arrays([self.vocab, pa.array([b""], self.vocab.type)])
+        a, b = np.divmod(pair, base)
+        parts = [words.take(pa.array(x)).to_pylist() for x in (a, b, c)]
+        return [b" ".join(t).decode("ascii") for t in zip(*parts)]
+
+
+def trigram_sets(text) -> TrigramSets:
+    """:func:`staged_shingles_frame`'s sets, computed on the driver from an
+    Arrow string column (an ``Array`` or ``ChunkedArray``; NULL is an
+    empty text) with numpy, exactly: no trigram is hashed.
+
+    Java's ``split("\\\\W+")`` over Spark's strings, restated on bytes.
+    Spark decodes a string's UTF-8 bytes to Java's UTF-16, where a
+    malformed sequence becomes U+FFFD, and Java's decoder never folds an
+    ASCII byte into a malformed sequence; ``\\W`` is ASCII. So a token is
+    a maximal run of the bytes ``[0-9A-Za-z_]`` and every other byte
+    (each byte of a non-ASCII character, valid or not) is a delimiter;
+    a text that starts with a delimiter and holds a word gets Java's
+    leading empty token; a text of delimiters only has no tokens.
+
+    Tokens are dictionary-encoded, and a trigram's code packs its three
+    token ids (see :class:`TrigramSets`); the pair ids are re-ranked first
+    when the packed code would overflow, which happens from 2**21
+    distinct tokens on."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = pc.cast(text, pa.large_binary())
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    col = col.fill_null(b"")
+    offsets = np.frombuffer(col.buffers()[1], np.int64)[
+        col.offset : col.offset + len(col) + 1
+    ]
+    buf = col.buffers()[2]
+    data = np.frombuffer(buf, np.uint8) if buf is not None else np.zeros(0, np.uint8)
+    data = data[offsets[0] : offsets[-1]]
+    offsets = offsets - offsets[0]
+
+    word_byte = np.zeros(256, bool)
+    for lo, hi in (b"09", b"AZ", b"az", b"__"):
+        word_byte[lo : hi + 1] = True
+    word = word_byte[data]
+    row_start = np.zeros(len(data) + 1, bool)
+    row_start[offsets] = True  # (the end of the data counts as a start)
+    padded = np.concatenate(([False], word, [False]))
+    starts = np.flatnonzero(word & (row_start[:-1] | ~padded[:-2]))
+    ends = np.flatnonzero(word & (row_start[1:] | ~padded[2:])) + 1
+    row = np.searchsorted(offsets, starts, side="right") - 1
+    del row_start, padded
+
+    token_ptr = np.zeros(len(starts) + 1, np.int64)
+    np.cumsum(ends - starts, out=token_ptr[1:])
+    tokens = pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), len(starts),
+        [None, pa.py_buffer(token_ptr), pa.py_buffer(data[word])],
+    )
+    encoded = pc.dictionary_encode(tokens)
+    vocab = encoded.dictionary
+    ids = encoded.indices.to_numpy().astype(np.int64)
+    del tokens, encoded, token_ptr, ends
+
+    # Java's leading empty token, before the first word of each text that
+    # starts with a delimiter
+    count = np.bincount(row, minlength=len(col))
+    lead = np.flatnonzero(count)
+    lead = lead[~word[offsets[lead]]]
+    at = (np.cumsum(count) - count)[lead]
+    ids = np.insert(ids, at, len(vocab))
+    row = np.insert(row, at, lead)
+
+    base = len(vocab) + 1
+    i = np.flatnonzero(row[2:] == row[:-2])  # trigrams inside one text
+    pair = ids[i] * base + ids[i + 1]  # < base**2 <= 2**62
+    pairs = None
+    if len(i) and (int(pair.max()) + 1) * base > 2**63:
+        pairs, pair = np.unique(pair, return_inverse=True)
+    keys, term = np.unique(pair * base + ids[i + 2], return_inverse=True)
+    # distinct (row, term) pairs, by row and then term
+    row_terms = np.unique(row[i] * len(keys) + term)
+    rows, terms = np.divmod(row_terms, max(1, len(keys)))
+    ptr = np.zeros(len(col) + 1, np.int64)
+    np.cumsum(np.bincount(rows, minlength=len(col)), out=ptr[1:])
+    return TrigramSets(ptr, terms, keys, pairs, vocab)
+

@@ -17,8 +17,9 @@ projections of these same functions: :func:`_intersections` (T5/T6, the
 semi-join), :func:`_postings` (Job 1: the pruned term → posting lists)
 and :func:`_pair_counts` (Job 2's per-document count). The prune's ``n``
 is the row count of the resident shingle sets (below) unless the caller
-passes it, so a one-shot caller scans its corpus once: the count caches
-the sets and the scoring job reads them.
+passes it, so the plan scans its corpus once: the count caches the sets
+and the scoring job reads them. This plan, and the top-k plan over it,
+runs only for a corpus the resident index (below) cannot hold.
 
 There is no intermediate HDFS materialization (the reference round-trips
 ``<output>_temp``, ``BookQuery.java:239-254``), and Spark's hash aggregate
@@ -42,18 +43,18 @@ Scale design (100 TB corpus, 1000 executors):
 
 Resident shingle sets: the reference re-reads and re-shingles every
 document for every query (both MR jobs re-run per query,
-``BookQuery.java:194-257``). Here the corpus side of every operator
-below reads one persisted ``(doc_id, shingle_set)`` frame per corpus
-DataFrame (:func:`_shingle_sets`), so a served corpus is tokenized and
-shingled once — by the first request — and every later request scans
-the cached sets (or, for top-k, the index built from them; below).
-The sets, the top-k index and the multi-query probe slot are values of
-the corpus DataFrame in the package's one resident store
-(``sources.tables.resident``). Lifetime: they live as long as the corpus
-object; when it is garbage-collected the store's finalizer unpersists
-the sets. Invalidation: ``load_table`` returns one DataFrame per
-parquet fingerprint and refreshes Spark's cache for a rewritten file,
-so an in-place rewrite yields a fresh corpus object with fresh sets.
+``BookQuery.java:194-257``). Here every Spark plan below reads one
+persisted ``(doc_id, shingle_set)`` frame per corpus DataFrame
+(:func:`_shingle_sets`), so a corpus served by the Spark plans is
+tokenized and shingled once — by the first such request — and every
+later one scans the cached sets. The sets, the resident index and the
+multi-query probe slot are values of the corpus DataFrame in the
+package's one resident store (``sources.tables.resident``). Lifetime:
+they live as long as the corpus object; when it is garbage-collected
+the store's finalizer unpersists the sets. Invalidation: ``load_table``
+returns one DataFrame per parquet fingerprint and refreshes Spark's
+cache for a rewritten file, so an in-place rewrite yields a fresh corpus
+object with fresh sets.
 Spark's cache matches plans, not objects: two live corpus DataFrames
 with equal plans share one cache entry, and the first one collected
 unpersists it for both; the survivor finds its sets uncached on its next
@@ -82,22 +83,21 @@ The trade-off: the query-side lookup is a join, not a filter, so it
 loses the cache's min/max batch pruning on ``doc_id`` and scans every
 resident batch.
 
-Resident top-k index: :func:`top_k_similar` does not plan a Spark job
-per request. The first request on a corpus object collects its resident
-sets once through Arrow and builds a driver-resident CSR index of them
-(:class:`_CorpusIndex`) — the reference's Job-1 posting lists, built
-once instead of per query. A request then computes its answer at call
-time in numpy (``len1`` and ``s`` are bincounts over the query terms'
+Resident index: :func:`similarity_to_query` and :func:`top_k_similar`
+do not plan a Spark job per request. The first request on a corpus
+object collects its ``(doc_id, text)`` once through Arrow (one scan
+job) and builds a driver-resident CSR index of its trigram sets
+(:class:`_CorpusIndex`) with the exact driver-side twin of the Spark
+shingler (``functions.text.trigram_sets``) — the reference's Job-1
+posting lists, built once instead of per query, with no shingling,
+cache or shuffle job. A request then computes its answer at call time
+in numpy (``len1`` and ``s`` are bincounts over the query terms'
 posting lists) with the Spark plan's IEEE doubles, and returns it as a
 local relation of literal rows (:func:`_answer_frame`), whose
-``collect()`` runs no job and compiles no code, and which takes the
-same few Py4J commands to build for any ``k``. The index is the
-corpus's resident value beside the sets. Once built it unpersists the
-sets, which then serve only the Spark plans, and the next such request
-caches them again. The Spark plan runs only for a corpus the index
-cannot hold exactly (see :func:`top_k_similar`), so the corpus alone
-decides the path; ``similarity_to_query``, ``similarity_multi_query``
-and the registry's stage entries keep scoring from the sets.
+``collect()`` runs no job and compiles no code. The Spark plans run only
+for a corpus the index cannot hold exactly (see :func:`_build_index`),
+so the corpus alone decides the path; ``similarity_multi_query`` and the
+registry's stage entries keep scoring from the sets.
 
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
@@ -119,6 +119,7 @@ from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     staged_shingles_frame,
+    trigram_sets,
 )
 from similarity_search_with_hadoop_mapreduce_spark.sources.tables import resident
 
@@ -132,10 +133,9 @@ def _shingle_sets(documents: DataFrame) -> DataFrame:
         "shingle_sets",
         lambda: staged_shingles_frame(documents, "text", alias="shingle_set"),
     )
-    # the index build unpersists the sets, and Spark's cache matches
-    # plans, so another corpus object with an equal plan shares this
-    # entry and its finalizer may have dropped it: cache it again rather
-    # than re-shingle on every request
+    # Spark's cache matches plans, so another corpus object with an equal
+    # plan shares this entry and its finalizer may have dropped it: cache
+    # it again rather than re-shingle on every request
     if frame.storageLevel == StorageLevel.NONE:
         frame.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     return frame
@@ -339,20 +339,44 @@ def similarity_to_query(
 
     ``total_documents`` is the reference's ``totalDocuments`` scalar
     (corpus file count *including* the query doc, ``BookQuery.java:210-214``,
-    quirk Q5). When not supplied it is the row count of the corpus's
-    resident shingle sets, so counting reads the cached sets (and caches
-    them on a first request) instead of scanning the corpus a second time.
+    quirk Q5). When not supplied it is the corpus's row count.
+
+    Serving: every candidate's score is computed at call time from the
+    corpus's resident index (:class:`_CorpusIndex`, built by the first
+    request; see the module docstring) and returned as a local relation
+    of literal rows (:func:`_answer_frame`), which costs SQL parsing per
+    row, so it suits answers of up to some thousands of rows. The Spark
+    plan (two shuffles for parity, map-only for jaccard) runs only for a
+    corpus the index cannot hold exactly (:func:`_build_index`); there,
+    ``n`` is the row count of the corpus's resident shingle sets, so
+    counting caches the sets for the scoring job instead of scanning the
+    corpus a second time.
 
     ``total_documents`` must be ``None`` or an integer in ``[0, 2**63)``
     (:func:`_count`), and ``query_doc_id`` of the corpus's id type
-    (:func:`_checked_ids`).
+    (:func:`_checked_ids`); an id that names no document answers no rows.
     """
     if mode not in ("parity", "jaccard"):
         raise ValueError(f"mode must be 'parity' or 'jaccard', got {mode!r}")
     if total_documents is not None:
         total_documents = _count("total_documents", total_documents, 2**63)
     (query_doc_id,) = _checked_ids(documents, [query_doc_id])
+    index = _corpus_index(documents)
+    if index is None:
+        return _scores_plan(documents, query_doc_id, mode, total_documents)
+    row = index.row(query_doc_id)
+    rows, scores = ([], []) if row < 0 else index.scores(row, mode, total_documents)
+    return _answer_frame(
+        documents.sparkSession, index.id_type, query_doc_id, index.doc_ids(rows),
+        scores,
+    )
 
+
+def _scores_plan(
+    documents: DataFrame, query_doc_id, mode: str, total_documents: int | None
+) -> DataFrame:
+    """:func:`similarity_to_query`'s Spark plan over the resident sets,
+    for checked arguments."""
     if mode == "jaccard":
         # Textbook |D∩Q| / |D∪Q|; single map stage, no shuffle at all.
         docs = _shingle_sets(documents)
@@ -502,14 +526,14 @@ class _CorpusIndex:
 
     Rows are the corpus documents in ascending ``doc_id`` order (Spark's
     order: numeric, or UTF-8 bytes, which is code-point order), so a
-    row number is also the ``doc_id`` tie-break. Term ids are positions
-    in a dictionary encoding of the shingles; the strings themselves are
-    dropped, since a query is always a corpus document and its terms are
-    its row of ``doc_terms``.
+    row number is also the ``doc_id`` tie-break. Term ids are the ranks
+    of the trigrams' exact codes (``functions.text.trigram_sets``); the
+    strings themselves are never built, since a query is always a corpus
+    document and its terms are its row of ``doc_terms``.
 
     - ``ids``: the sorted doc ids (a numpy array, or a list of ``str``);
-    - ``doc_ptr``/``doc_terms``: row → its term ids (the set sizes are
-      ``diff(doc_ptr)``);
+    - ``doc_ptr``/``doc_terms``: row → its term ids, ascending (the set
+      sizes are ``diff(doc_ptr)``);
     - ``term_ptr``/``term_docs``: term id → the rows holding it;
     - ``df``: rows per term.
     """
@@ -532,9 +556,12 @@ class _CorpusIndex:
         i = bisect.bisect_left(self.ids, q)  # ids: a sorted list or array
         return i if i < len(self.ids) and self.ids[i] == q else -1
 
-    def top_k(self, row: int, k: int, mode: str, n: int | None):
-        """The top ``k`` ``(doc_ids, scores)`` for the query document at
-        ``row``, in the Spark plan's order and with its IEEE doubles."""
+    def scores(self, row: int, mode: str, n: int | None):
+        """Every document that scores against the query document at
+        ``row``, as ``(rows, scores)`` in ascending row (``doc_id``)
+        order, with the Spark plan's IEEE doubles: parity's documents
+        with ``s > 0``, jaccard's with ``|D∩Q| > 0``, never the query's
+        own row."""
         import numpy as np
 
         lo, hi = self.doc_ptr[row], self.doc_ptr[row + 1]
@@ -555,24 +582,31 @@ class _CorpusIndex:
             s[row] = 0  # U2: the query's own row
             cand = np.flatnonzero(s)
             s, len1 = s[cand], inter[cand]
-            score = np.where(s == len1 + q_len, 1.0, s / (len1 + q_len - s))
-        else:
-            sizes = np.diff(self.doc_ptr)
-            inter[row] = 0
-            cand = np.flatnonzero(inter)
-            inter = inter[cand]
-            score = inter / (sizes[cand] + q_len - inter)
+            return cand, np.where(s == len1 + q_len, 1.0, s / (len1 + q_len - s))
+        sizes = np.diff(self.doc_ptr)
+        inter[row] = 0
+        cand = np.flatnonzero(inter)
+        inter = inter[cand]
+        return cand, inter / (sizes[cand] + q_len - inter)
+
+    def top_k(self, row: int, k: int, mode: str, n: int | None):
+        """The top ``k`` ``(doc_ids, scores)`` of :meth:`scores`, by score
+        descending, then ``doc_id`` ascending: the Spark plan's order."""
+        import numpy as np
+
+        cand, score = self.scores(row, mode, n)
         if k < len(cand):
             # keep the rows scoring at least the k-th best, ties included
             top = score >= np.partition(score, len(score) - k)[len(score) - k]
             cand, score = cand[top], score[top]
         order = np.lexsort((cand, -score))[:k]  # score desc, then doc_id asc
-        rows = cand[order]
+        return self.doc_ids(cand[order]), score[order].tolist()
+
+    def doc_ids(self, rows) -> list:
+        """The doc ids of ``rows``, as plain Python values."""
         if self.id_type == "string":
-            ids = [self.ids[r] for r in rows]
-        else:
-            ids = self.ids[rows].tolist()
-        return ids, score[order].tolist()
+            return [self.ids[r] for r in rows]
+        return self.ids[rows].tolist()
 
 
 def _available_memory() -> int:
@@ -589,65 +623,74 @@ def _available_memory() -> int:
     return os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
-def _fits_driver(spark, set_bytes: int) -> bool:
-    """Whether the driver can build the index of shingle sets that fill
-    ``set_bytes`` of Spark's cache. The build collects the sets through
-    Arrow, which ``spark.driver.maxResultSize`` bounds (0: no bound),
-    and at its peak holds the Arrow table, its sorted copy, the
-    dictionary encoder's hash table and the CSR arrays: Arrow's pool
-    peaked at 5.8 times the set bytes on a 20k-document corpus (221 MB
-    for 38 MB of sets), so the budget takes six times."""
+def _input_bytes(frame: DataFrame) -> int:
+    """The size of ``frame``, a corpus's ``(doc_id, text)`` plan, before
+    it is collected: Spark's estimate from its statistics (for a file
+    source, its files' bytes). A plan Spark cannot size (an RDD or a
+    Python list) reports ``spark.sql.defaultSizeInBytes``; for that one,
+    one aggregate job counts the texts' bytes."""
+    spark = frame.sparkSession
+    size = int(frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size < spark._jsparkSession.sessionState().conf().defaultSizeInBytes():
+        return size
+    return frame.agg(F.sum(F.octet_length("text"))).first()[0] or 0
+
+
+def _fits_driver(spark, input_bytes: int) -> bool:
+    """Whether the driver can build the index of a corpus of
+    ``input_bytes`` (:func:`_input_bytes`). The build collects
+    ``(doc_id, text)`` through Arrow, uncompressed, which
+    ``spark.driver.maxResultSize`` bounds (0: no bound); compressed files
+    hold fewer bytes than that, so the check takes four times the input.
+    At its peak the kernel (:func:`trigram_sets`) holds the texts, a byte
+    class per byte, the token and trigram arrays and their sorts: numpy
+    and Arrow's pool peaked at 48 times the input for a 4.3 MB parquet
+    file of 20k short documents (snappy-compressed, 7.3 MB of text) and
+    at 16 times for 100 plain-text books (22 MB of files, which Spark's
+    wholetext plan sizes at 38 MB), so the budget takes 64 times."""
     limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
         "spark.driver.maxResultSize", "1g"
     )
-    if 0 < limit < set_bytes:
+    if 0 < limit < 4 * input_bytes:
         return False
-    return 6 * set_bytes <= _available_memory()
+    return 64 * input_bytes <= _available_memory()
 
 
 def _build_index(documents: DataFrame) -> _CorpusIndex | None:
-    """Collect the resident sets once and build their CSR index, or
-    ``None`` if the index could not answer exactly: a build too large for
-    the driver (:func:`_fits_driver`), or NULL or duplicate doc ids (the
-    Spark plan scores each row). A built index unpersists the sets: only
-    the Spark plans read them, and :func:`_shingle_sets` caches them
-    again for the next such request."""
-    sets = _shingle_sets(documents)
-    id_type = sets.schema["doc_id"].dataType.simpleString()
-    sets.count()  # fills the cache, so its statistics are the real size
-    size = sets._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if not _fits_driver(sets.sparkSession, int(size)):
+    """Collect ``(doc_id, text)`` once and build the CSR index of its
+    trigram sets on the driver (:func:`trigram_sets`, the exact twin of
+    the Spark sets), or ``None`` if the index could not answer exactly: a
+    build too large for the driver (:func:`_fits_driver`), or NULL or
+    duplicate doc ids (the Spark plan scores each row). One Spark job,
+    the scan; nothing is persisted."""
+    frame = documents.select("doc_id", "text")
+    if not _fits_driver(frame.sparkSession, _input_bytes(frame)):
         return None
+    id_type = frame.schema["doc_id"].dataType.simpleString()
 
     import numpy as np
     import pyarrow.compute as pc
 
-    table = sets.toArrow()
-    if table.column("doc_id").null_count:
-        return None
-    table = table.take(pc.sort_indices(table.column("doc_id")))
+    table = frame.toArrow()
     ids = table.column("doc_id")
+    if ids.null_count:
+        return None
+    order = pc.sort_indices(ids)
+    ids = ids.take(order)
     if len(ids) > 1 and pc.any(pc.equal(ids[1:], ids[:-1])).as_py():
         return None
-    shingles = table.column("shingle_set")
-    sizes = pc.list_value_length(shingles).fill_null(0).to_numpy()
-    # one dictionary for all chunks: term id = position in it
-    encoded = pc.dictionary_encode(pc.list_flatten(shingles))
-    term_ids = np.concatenate(
-        [c.indices.to_numpy() for c in encoded.chunks] + [np.zeros(0, np.int32)]
-    )
-    del table, shingles, encoded
-    ptr_type = np.int32 if len(term_ids) < 2**31 else np.int64
-    doc_ptr = np.zeros(len(sizes) + 1, ptr_type)
-    np.cumsum(sizes, out=doc_ptr[1:])
-    df = np.bincount(term_ids).astype(np.int32)
+    sets = trigram_sets(table.column("text").take(order))
+    del table, order
+    doc_terms = sets.terms.astype(np.int32)
+    ptr_type = np.int32 if len(doc_terms) < 2**31 else np.int64
+    doc_ptr = sets.ptr.astype(ptr_type)
+    df = np.bincount(doc_terms, minlength=len(sets.keys)).astype(np.int32)
     term_ptr = np.zeros(len(df) + 1, ptr_type)
     np.cumsum(df, out=term_ptr[1:])
-    rows = np.repeat(np.arange(len(sizes), dtype=np.int32), sizes)
-    term_docs = rows[np.argsort(term_ids, kind="stable")]
+    rows = np.repeat(np.arange(len(ids), dtype=np.int32), np.diff(sets.ptr))
+    term_docs = rows[np.argsort(doc_terms, kind="stable")]
     ids = ids.to_pylist() if id_type == "string" else ids.to_numpy()
-    sets.unpersist()
-    return _CorpusIndex(id_type, ids, doc_ptr, term_ids, term_ptr, term_docs, df)
+    return _CorpusIndex(id_type, ids, doc_ptr, doc_terms, term_ptr, term_docs, df)
 
 
 def _corpus_index(documents: DataFrame) -> _CorpusIndex | None:
@@ -690,8 +733,7 @@ def top_k_similar(
     a lock; see the module docstring) and returned as a local relation
     of literal rows (:func:`_answer_frame`). Memory: about 4 bytes per
     posting each way plus 8 per distinct term, in the Python driver
-    (22 MB for 20k documents with 1.57M postings); the build unpersists
-    the sets from Spark's cache.
+    (22 MB for 20k documents with 1.57M postings).
 
     The Spark plan, ``TakeOrderedAndProject`` over the scored frame,
     runs only for a corpus the index cannot hold exactly: a build that
@@ -712,8 +754,8 @@ def top_k_similar(
     (query_doc_id,) = _checked_ids(documents, [query_doc_id])
     index = _corpus_index(documents)
     if index is None:
-        return similarity_to_query(
-            documents, query_doc_id, mode=mode, total_documents=total_documents
+        return _scores_plan(
+            documents, query_doc_id, mode, total_documents
         ).orderBy(F.desc("score"), F.asc("doc_id")).limit(min(k, 2**31 - 1))
     row = index.row(query_doc_id)
     ids, scores = ([], []) if row < 0 or k == 0 else index.top_k(

@@ -237,16 +237,19 @@ def _fresh_copy(spark, docs):
     return spark.createDataFrame(docs.collect(), docs.schema)
 
 
-def test_resident_shingle_sets_reused_and_exact(spark):
-    """Repeated scoring on one corpus frame reads one persisted shingle
-    frame (an InMemoryTableScan, not a re-tokenizing scan) and answers
-    exactly what a never-cached copy of the corpus answers."""
+def test_resident_shingle_sets_reused_and_exact(spark, monkeypatch):
+    """Repeated scoring on one corpus frame through the Spark plans (the
+    single-query one forced by reporting no index, as for a corpus the
+    index cannot hold) reads one persisted shingle frame (an
+    InMemoryTableScan, not a re-tokenizing scan) and answers exactly what
+    a never-cached copy of the corpus answers."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
     from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
     from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
 
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
     docs = load_table(spark, SF, "documents")
     fresh = _fresh_copy(spark, docs)
     for mode in ("parity", "jaccard"):
@@ -352,15 +355,18 @@ def test_parity_doc_count_follows_load_table_rewrite(spark, tmp_path):
     assert new == {1: 1.0, 2: 1 / 4, 3: 1 / 4}
 
 
-def test_parity_doc_count_caches_the_sets(spark):
-    """The count behind a derived ``n`` reads the resident sets, so the
-    one action ``similarity_to_query`` runs fills their cache and the
-    scoring job reads them: a one-shot caller (the CLI) scans its corpus
-    once, not once to count and once to score."""
+def test_parity_doc_count_caches_the_sets(spark, monkeypatch):
+    """On the Spark plan (forced by reporting no index, as for a corpus
+    the index cannot hold), the count behind a derived ``n`` reads the
+    resident sets, so the one action ``similarity_to_query`` runs fills
+    their cache and the scoring job reads them: a one-shot caller scans
+    its corpus once, not once to count and once to score."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
     from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
 
     docs = spark.createDataFrame(
         [(i, f"count once word{i} alpha beta gamma {i % 3}") for i in range(9)],
@@ -394,7 +400,7 @@ def test_resident_shingle_sets_unpersisted_with_corpus(spark):
         "doc_id long, text string",
     )
     S.top_k_similar(docs, 0, k=3).collect()
-    sets = S._shingle_sets(docs)  # cached again after the index build
+    sets = S._shingle_sets(docs)  # made and cached, as a Spark plan would
     assert sets.storageLevel.useMemory
     index = weakref.ref(S._corpus_index(docs))
     del docs
@@ -403,14 +409,14 @@ def test_resident_shingle_sets_unpersisted_with_corpus(spark):
     assert index() is None
 
 
-def test_index_build_releases_the_shingle_sets(spark):
-    """Once top_k_similar has built its index, the corpus's shingle sets
-    hold no storage: only the Spark plans read them, and the next such
-    request caches them again and answers what a never-cached copy
-    answers. A corpus the index cannot hold (a NULL doc id) keeps its
-    sets cached, because its top-k requests run the Spark plan."""
-    from pyspark import StorageLevel
-
+def test_index_build_releases_the_shingle_sets(spark, monkeypatch):
+    """The index is built from the corpus's texts, not from its shingle
+    sets: once top_k_similar has built it, the corpus has no resident
+    sets, and similarity_to_query answers from the index what its Spark
+    plan answers. Only a Spark plan makes and caches the sets (forced
+    here by reporting no index), and a corpus the index cannot hold (a
+    NULL doc id) keeps its sets cached, because its requests run the
+    Spark plans."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
@@ -425,13 +431,20 @@ def test_index_build_releases_the_shingle_sets(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     S.top_k_similar(docs, 0, k=3).collect()
     assert S._corpus_index(docs) is not None
-    assert stored_sets(docs) == StorageLevel.NONE
+    indexed = {}
     for mode in ("parity", "jaccard"):
         df = S.similarity_to_query(docs, 0, mode=mode)
-        assert "InMemoryTableScan" in explain_string(df)
-        assert _sim_rows(df) == _sim_rows(
-            S.similarity_to_query(_fresh_copy(spark, docs), 0, mode=mode)
-        )
+        assert "LocalTableScan" in explain_string(df)
+        indexed[mode] = _sim_rows(df)
+    assert "shingle_sets" not in T._resident_store[docs].values
+    with monkeypatch.context() as m:
+        m.setattr(S, "_corpus_index", lambda documents: None)
+        for mode in ("parity", "jaccard"):
+            df = S.similarity_to_query(docs, 0, mode=mode)
+            assert "InMemoryTableScan" in explain_string(df)
+            assert indexed[mode] == _sim_rows(df) == _sim_rows(
+                S.similarity_to_query(_fresh_copy(spark, docs), 0, mode=mode)
+            )
     assert stored_sets(docs).useMemory
 
     nulls = spark.createDataFrame(rows + [(None, "release alpha beta")], docs.schema)
@@ -501,16 +514,21 @@ def test_multi_query_probe_memo_holds_the_last_battery(spark, monkeypatch):
     assert probed([0, 1]) == 1  # replaced by the later batteries
 
 
-def test_resident_shingle_sets_survive_plan_equal_corpus_collected(spark):
+def test_resident_shingle_sets_survive_plan_equal_corpus_collected(
+    spark, monkeypatch
+):
     """Two live corpus frames with equal plans share one Spark cache
     entry; when the first is collected its finalizer drops that entry,
     and the survivor must cache its sets again, not re-shingle on every
-    request. (Run through similarity_to_query, which scores from the
-    sets; top_k_similar answers from its index.)"""
+    request. (Run through similarity_to_query's Spark plan, forced by
+    reporting no index: the plans score from the sets, the index from
+    the texts.)"""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
     from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
+
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
 
     path = f"{SF}/documents.parquet"
     first = spark.read.parquet(path)

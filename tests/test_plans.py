@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from similarity_search_with_hadoop_mapreduce_spark.operators import dedup as D
+from similarity_search_with_hadoop_mapreduce_spark.operators import similarity as S
 from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
     similarity_to_query,
 )
@@ -33,16 +34,23 @@ def _docs(spark):
     )
 
 
-def test_flagship_has_exactly_two_shuffles_and_a_broadcast(spark):
-    df = similarity_to_query(_docs(spark), 0, total_documents=40)
+def _scores_spark_plan(monkeypatch, *args, **kwargs):
+    """similarity_to_query's Spark plan, the one it runs for a corpus its
+    index cannot hold: the index gate forced off."""
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
+    return similarity_to_query(*args, **kwargs)
+
+
+def test_flagship_has_exactly_two_shuffles_and_a_broadcast(spark, monkeypatch):
+    df = _scores_spark_plan(monkeypatch, _docs(spark), 0, total_documents=40)
     # the two MR jobs' shuffles (groupBy term, groupBy doc) and nothing else
     assert shuffle_exchange_count(df) == 2
     # the query side ships as a broadcast, reference O3 (BookQuery.java:205)
     assert broadcast_exchange_count(df) >= 1
 
 
-def test_jaccard_mode_is_map_only(spark):
-    df = similarity_to_query(_docs(spark), 0, mode="jaccard")
+def test_jaccard_mode_is_map_only(spark, monkeypatch):
+    df = _scores_spark_plan(monkeypatch, _docs(spark), 0, mode="jaccard")
     assert shuffle_exchange_count(df) == 0
     # the query side, and the one-row query key it is looked up by
     assert broadcast_exchange_count(df) == 2

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from similarity_search_with_hadoop_mapreduce_spark.functions.text import (
     java_split_tokens,
     staged_shingles_frame,
+    trigram_sets,
 )
 from tests.reference_sim import java_split, shingle_set
 
@@ -47,6 +48,21 @@ def _spark_shingles(spark, texts):
     return [set(r.s) for r in sorted(rows, key=lambda r: r.i)]
 
 
+def _kernel_shingles(texts):
+    """The driver kernel's sets of ``texts`` (str, bytes or None), as
+    trigram strings."""
+    import pyarrow as pa
+
+    sets = trigram_sets(
+        pa.array([t.encode() if isinstance(t, str) else t for t in texts],
+                 pa.binary())
+    )
+    return [
+        set(sets.strings(sets.terms[sets.ptr[r] : sets.ptr[r + 1]]))
+        for r in range(len(texts))
+    ]
+
+
 def test_java_split_edge_cases(spark):
     got = _spark_tokens(spark, EDGES)
     want = [java_split(t) for t in EDGES]
@@ -57,6 +73,77 @@ def test_shingle_edge_cases(spark):
     got = _spark_shingles(spark, EDGES)
     want = [shingle_set(t) for t in EDGES]
     assert got == want
+    assert _kernel_shingles(EDGES) == want
+
+
+# Texts whose bytes Spark holds as is, invalid UTF-8 included (built with
+# CAST(X'...' AS STRING)): Java decodes a malformed sequence to U+FFFD, a
+# delimiter, and never folds an ASCII byte into it
+HOSTILE_BYTES = [
+    b"abc\xffdef ghi jkl mno",  # abc | def: three trigrams, not two
+    b"\xe2Abc def ghi ",  # a lone lead byte starts the text: leading ""
+    b"\xc3(x y z",
+    b"x\xe2\x82y z w",  # a truncated sequence between two words
+    b"\xed\xa0\x80a b c",  # an encoded surrogate
+    b"\xff\xfe\xfd",
+    b"a\xff",
+    b"\x00a b c\x00",
+    "\U0001f600 emoji x y z".encode(),
+    "zero\u200bwidth a b c".encode(),
+    "tab\there\nnew line x\r\n".encode(),
+    "café au lait ok".encode(),
+    b"",
+    b"!!! ...",
+    b"  a b c ",
+    b"!a b",
+    b"one two",
+    None,
+]
+
+
+def test_trigram_kernel_equals_spark_on_hostile_bytes(spark):
+    """The driver kernel's sets equal ``staged_shingles_frame``'s on
+    NULL, empty, delimiter-only, leading/trailing-delimiter, non-ASCII,
+    emoji, zero-width-space, control-character and invalid UTF-8 rows."""
+    values = ", ".join(
+        f"({i}, CAST(X'{t.hex()}' AS STRING))" if t is not None
+        else f"({i}, CAST(NULL AS STRING))"
+        for i, t in enumerate(HOSTILE_BYTES)
+    )
+    df = spark.sql(f"SELECT * FROM VALUES {values} AS t(i, t)")
+    rows = staged_shingles_frame(df, "t", alias="s", keep=("i",)).collect()
+    want = [set(r.s or ()) for r in sorted(rows, key=lambda r: r.i)]
+    assert _kernel_shingles(HOSTILE_BYTES) == want
+    assert len(want[0]) == 3 and want[1] == {" Abc def", "Abc def ghi"}
+
+
+def test_trigram_kernel_exact_past_packed_key_range():
+    """From 2**21 distinct tokens on, the packed code (a*V + b)*V + c
+    overflows int64: the kernel re-ranks the token pairs first and stays
+    exact. Spark-free: checked against the pure-Python reference, one
+    document at a time; neighbouring documents share five tokens, so
+    terms are shared across rows too."""
+    import numpy as np
+    import pyarrow as pa
+
+    n_tokens = 2**21 + 40_000
+    words = np.char.add("t", np.arange(n_tokens).astype(str))
+    cuts = np.linspace(0, n_tokens, 65).astype(int)
+    texts = [" ".join(words[lo : hi + 5]) + " x" for lo, hi in zip(cuts, cuts[1:])]
+    texts.append(texts[3])  # a repeated document
+    del words
+    sets = trigram_sets(pa.array(texts))
+    assert sets.pairs is not None  # the re-ranked path ran
+    assert (len(sets.vocab) + 1) ** 3 > 2**63
+    rows = [sets.terms[sets.ptr[r] : sets.ptr[r + 1]] for r in range(len(texts))]
+    for r, text in enumerate(texts):
+        got = sets.strings(rows[r])
+        assert len(got) == len(set(got)) and set(got) == shingle_set(text), r
+    # one id per trigram across rows: the five shared tokens make three
+    # shared trigrams, and the repeated document has the same ids
+    for a, b in zip(rows[:63], rows[1:64]):
+        assert len(np.intersect1d(a, b)) == 3
+    assert np.array_equal(rows[3], rows[-1])
 
 
 def test_ngrams_attr_sql_positional_edge_cases(spark):
@@ -94,7 +181,9 @@ def test_ngrams_attr_sql_positional_edge_cases(spark):
 )
 def test_property_java_split(spark, texts):
     assert _spark_tokens(spark, texts) == [java_split(t) for t in texts]
-    assert _spark_shingles(spark, texts) == [shingle_set(t) for t in texts]
+    want = [shingle_set(t) for t in texts]
+    assert _spark_shingles(spark, texts) == want
+    assert _kernel_shingles(texts) == want
 
 
 def test_sql_twins_quote_hostile_args(spark):

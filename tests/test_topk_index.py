@@ -15,6 +15,7 @@ from similarity_search_with_hadoop_mapreduce_spark.operators import similarity a
 from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
 from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 from tests.reference_sim import jaccard_similarity, mr_similarity
+from tests.test_fixtures import SF
 
 KS = (0, 1, 3, 10, 50)
 
@@ -41,6 +42,21 @@ def _spark_plan(monkeypatch, *args, **kwargs):
 
 def _indexed(*args, **kwargs):
     df = S.top_k_similar(*args, **kwargs)
+    assert "LocalTableScan" in explain_string(df)
+    return df
+
+
+def _scores_spark_plan(monkeypatch, *args, **kwargs):
+    """similarity_to_query's Spark plan: the index gate forced off."""
+    with monkeypatch.context() as m:
+        m.setattr(S, "_corpus_index", lambda documents: None)
+        df = S.similarity_to_query(*args, **kwargs)
+    assert "InMemoryTableScan" in explain_string(df)  # the resident sets
+    return df
+
+
+def _scores_indexed(*args, **kwargs):
+    df = S.similarity_to_query(*args, **kwargs)
     assert "LocalTableScan" in explain_string(df)
     return df
 
@@ -105,23 +121,31 @@ def corpora(draw):
         HealthCheck.too_slow, HealthCheck.function_scoped_fixture
     ],
 )
-@given(corpora(), st.sampled_from(KS), st.integers(0, 2))
+@given(corpora(), st.sampled_from(KS), st.integers(-1, 2))
 def test_index_equals_spark_plan_and_reference(spark, monkeypatch, case, k, extra):
-    """Parity (with ``n`` = the count, or ``total_documents`` above it)
-    and jaccard: the index answers exactly what the Spark plan answers,
-    rows and order, and what the reference computes."""
+    """Parity and jaccard, with ``total_documents`` unset, the count, or
+    above it: ``top_k_similar`` and ``similarity_to_query`` answer from the
+    index exactly what their Spark plans answer (top-k: rows and order;
+    every score: the same rows, and the same schema) and what the
+    reference computes."""
     corpus, q = case
     id_type = "string" if isinstance(q, str) else "bigint"
     docs = _corpus(spark, corpus, id_type)
     text = {d: t or "" for d, t in corpus.items()}  # NULL text: no shingles
-    n = len(corpus) + extra if extra else None
+    total = None if extra < 0 else len(corpus) + extra
     for mode in ("parity", "jaccard"):
-        total = n if mode == "parity" else None
         want = _rows(_spark_plan(monkeypatch, docs, q, k=k, mode=mode,
                                  total_documents=total))
         got = _rows(_indexed(docs, q, k=k, mode=mode, total_documents=total))
         assert got == want, (mode, k)
         assert got == _reference(text, q, k, mode, total), (mode, k)
+        plan = _scores_spark_plan(monkeypatch, docs, q, mode=mode,
+                                  total_documents=total)
+        scores = _scores_indexed(docs, q, mode=mode, total_documents=total)
+        assert scores.schema == plan.schema
+        got = sorted(_rows(scores))
+        assert got == sorted(_rows(plan)), mode
+        assert got == _reference(text, q, len(corpus), mode, total), mode
 
 
 TIES = {
@@ -373,7 +397,7 @@ def test_warm_request_runs_no_job(spark):
     plans a local relation and collects it without a Spark job."""
     from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF, "documents")
     S.top_k_similar(docs, 0, k=10).collect()
     sc = spark.sparkContext
     sc.setJobGroup("topk-warm", "warm top-k request")
@@ -383,6 +407,28 @@ def test_warm_request_runs_no_job(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 10
     assert list(sc.statusTracker().getJobIdsForGroup("topk-warm")) == []
+
+
+def test_index_build_is_the_only_job(spark):
+    """On an indexable corpus, ``top_k_similar`` and then
+    ``similarity_to_query`` in both modes run one Spark job between them,
+    the index build's scan, and persist nothing: no shingle sets are made
+    and no RDD is cached."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")  # no index yet
+    sc = spark.sparkContext
+    cached = sc._jsc.sc().getPersistentRDDs().size()
+    sc.setJobGroup("index-build", "first requests on a corpus")
+    try:
+        top = _rows(S.top_k_similar(docs, 0, k=10))
+        parity = _rows(S.similarity_to_query(docs, 0))
+        jaccard = _rows(S.similarity_to_query(docs, 3, mode="jaccard"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("index-build")) == 1
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
+    assert "shingle_sets" not in T._resident_store[docs].values
+    assert len(top) == 10 and jaccard
+    assert top == sorted(parity, key=lambda r: (-r[2], r[0]))[:10]
 
 
 def test_concurrent_first_requests_build_once(spark, monkeypatch):
