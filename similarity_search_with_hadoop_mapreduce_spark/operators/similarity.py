@@ -65,7 +65,7 @@ memory spill to local disk instead of failing, so a corpus larger than
 the cluster's memory still gets one shingling pass, with the spilled
 part read back from disk per request.
 
-Query ids are data, not code: every operator below writes its query ids
+Query ids are data, not code: every Spark plan below writes its query ids
 as the rows of a small local relation (:func:`_query_keys`) and joins it
 to the resident sets, instead of filtering on a literal id. What keeps
 the code shared is where the id sits: a value in a local-relation row is
@@ -83,21 +83,23 @@ The trade-off: the query-side lookup is a join, not a filter, so it
 loses the cache's min/max batch pruning on ``doc_id`` and scans every
 resident batch.
 
-Resident index: :func:`similarity_to_query` and :func:`top_k_similar`
-do not plan a Spark job per request. The first request on a corpus
-object collects its ``(doc_id, text)`` once through Arrow (one scan
-job) and builds a driver-resident CSR index of its trigram sets
-(:class:`_CorpusIndex`) with the exact driver-side twin of the Spark
-shingler (``functions.text.trigram_sets``) — the reference's Job-1
-posting lists, built once instead of per query, with no shingling,
-cache or shuffle job. A request then computes its answer at call time
-in numpy (``len1`` and ``s`` are bincounts over the query terms'
-posting lists) with the Spark plan's IEEE doubles, and returns it as a
-local relation of literal rows (:func:`_answer_frame`), whose
-``collect()`` runs no job and compiles no code. The Spark plans run only
+Resident index: no operator here plans a Spark job per request. The
+first request on a corpus object collects its ``(doc_id, text)`` once
+through Arrow (one scan job) and builds a driver-resident CSR index of
+its trigram sets (:class:`_CorpusIndex`) with the exact driver-side twin
+of the Spark shingler (``functions.text.trigram_sets``) — the
+reference's Job-1 posting lists, built once instead of per query, with
+no shingling, cache or shuffle job. A request then computes its answer
+at call time in numpy (``|D∩Q|`` and parity's ``s`` are bincounts over
+the query terms' posting lists) with the Spark plan's IEEE doubles, and
+returns it as a local relation of literal rows (:func:`_local_relation`),
+whose ``collect()`` runs no job and compiles no code. The Spark plans run only
 for a corpus the index cannot hold exactly (see :func:`_build_index`),
-so the corpus alone decides the path; ``similarity_multi_query`` and the
-registry's stage entries keep scoring from the sets.
+and for a multi-query battery whose answer passes
+``_LITERAL_ROW_LIMIT`` rows, past which parsing the literal rows takes
+longer than the Spark plan; only the registry's stage entries, and its
+forced twins of the multi-query plans, score from the sets on every
+corpus.
 
 Semantics (SURVEY.md §2.3): ``mode="parity"`` reproduces quirks Q1-Q7
 exactly — the score is ``s / ((len1 + |Q|) - s)`` where ``len1 = |D∩Q|``
@@ -112,6 +114,7 @@ from __future__ import annotations
 import bisect
 import numbers
 import os
+from itertools import repeat
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -413,12 +416,24 @@ def _scores_plan(
     )
 
 
-def similarity_multi_query(
-    documents: DataFrame,
-    query_ids,
-    broadcast_term_limit: int = 2_000_000,
-    stats: dict | None = None,
-) -> DataFrame:
+# the Spark plan of similarity_multi_query broadcasts the union of its
+# battery's query sets up to this many terms in total (the sum of the
+# set sizes), and shuffles the corpus terms above it
+_BROADCAST_TERM_LIMIT = 2_000_000
+
+# the index answers a multi-query battery of up to this many (document,
+# query) rows as literal rows; a larger answer runs the Spark plan.
+# Measured warm on a 20k-document corpus, 4 cores, build + collect: one
+# driver thread parses the literal rows at about 0.2 ms of wall a row,
+# and the Spark plan takes about 1.2 s plus 0.07 ms a row over the
+# cores, so the index's wall passes the plan's between 7k and 15k rows
+# (at 4.5k rows: 1.2-1.3 s against 1.7-2.1 s). Its CPU stays below the
+# plan's to about 200k rows, but its wall, and the SQL text held on the
+# driver, keep growing with the rows.
+_LITERAL_ROW_LIMIT = 5_000
+
+
+def similarity_multi_query(documents: DataFrame, query_ids) -> DataFrame:
     """Score every document against a *batch* of query documents in one
     pass — the engine generalization of the reference's one-query driver
     (``BookQuery.java:194-208`` hard-codes a single query file; serving a
@@ -429,7 +444,91 @@ def similarity_multi_query(
     excluded; ``containment = |D∩Q|/|Q|`` is the reference's effective
     score with nothing pruned (SURVEY §2.3 Q2), ``jaccard`` the textbook
     ratio. No df-pruning quirks: those are single-query semantics (the
-    ``count == n`` prune counts the one query doc, quirk Q5).
+    ``count == n`` prune counts the one query doc, quirk Q5). Output is
+    unordered; a repeated id scores once.
+
+    Serving: the battery is scored at call time from the corpus's
+    resident index (:class:`_CorpusIndex`), one overlap count per
+    distinct query (:meth:`_CorpusIndex.overlaps`), and returned as a
+    local relation of literal rows (:func:`_local_relation`), which costs
+    SQL parsing per row. The Spark plan (:func:`_multi_query_plan`) runs
+    for a corpus the index cannot hold exactly (:func:`_build_index`),
+    and for a battery whose answer passes ``_LITERAL_ROW_LIMIT`` rows,
+    which the index counts before it builds any row
+    (:func:`_counted_overlaps`). There, a probe — ``sum(q_len)`` over the
+    battery's rows of the resident sets, a join of the key rows against
+    every cached batch, kept for the last battery in one resident slot
+    of the corpus — counts the battery's terms, and above
+    ``_BROADCAST_TERM_LIMIT`` the shuffled plan replaces the broadcast
+    one; the physical plan shows the choice (``ShuffledHashJoin``).
+
+    Every query id must be of the corpus's id type (:func:`_checked_ids`);
+    one that names no document scores nothing.
+    """
+    # a tuple of checked ids: consumed twice (keys + memo key)
+    query_ids = tuple(_checked_ids(documents, query_ids))
+    index = _corpus_index(documents)
+    counted = None if index is None else _counted_overlaps(index, query_ids)
+    if counted is None:
+        # one slot, (query_ids, n_terms) of the last battery probed: a
+        # battery sent again skips the probe, and a stream of fresh ones
+        # holds one entry, not one per battery
+        slot = resident(documents, "multi_query_probe", lambda: [None])
+        probe = slot[0]  # one read: another thread may replace the slot
+        if probe is None or probe[0] != query_ids:
+            docs = _shingle_sets(documents)
+            qset = _query_side(docs, list(dict.fromkeys(query_ids)))
+            probe = slot[0] = (query_ids, qset.agg(F.sum("q_len")).first()[0] or 0)
+        return _multi_query_plan(
+            documents, query_ids, shuffled=probe[1] > _BROADCAST_TERM_LIMIT
+        )
+    import numpy as np
+
+    sizes = np.diff(index.doc_ptr)
+    rows = []
+    for q, row, cand, inter in counted:
+        q_len = sizes[row]
+        rows += zip(
+            index.doc_ids(cand),
+            repeat(q),
+            inter.tolist(),
+            (inter / q_len).tolist(),
+            (inter / (sizes[cand] + q_len - inter)).tolist(),
+        )
+    return _local_relation(
+        documents.sparkSession,
+        f"CAST(doc_id AS {index.id_type}) AS doc_id,"
+        " CAST(qid AS STRING) AS query_id,"
+        # the Spark plan's count is NOT NULL
+        " coalesce(CAST(shared AS BIGINT), 0L) AS shared,"
+        " CAST(containment AS DOUBLE) AS containment,"
+        " CAST(jaccard AS DOUBLE) AS jaccard",
+        ("doc_id", "qid", "shared", "containment", "jaccard"),
+        rows,
+    )
+
+
+def _counted_overlaps(index, query_ids) -> list | None:
+    """``[(q, row, cand, inter)]``: :meth:`_CorpusIndex.overlaps` of each
+    distinct id of the battery that names a document, or ``None`` as soon
+    as their answer rows, one per ``cand``, pass ``_LITERAL_ROW_LIMIT``:
+    counting stops there, so a large battery costs a few counts."""
+    counted, total = [], 0
+    for q in dict.fromkeys(query_ids):
+        row = index.row(q)
+        if row < 0:
+            continue
+        cand, inter = index.overlaps(row)
+        total += len(cand)
+        if total > _LITERAL_ROW_LIMIT:
+            return None
+        counted.append((q, row, cand, inter))
+    return counted
+
+
+def _multi_query_plan(documents: DataFrame, query_ids, shuffled: bool) -> DataFrame:
+    """:func:`similarity_multi_query`'s Spark plan over the resident
+    sets, for checked ids.
 
     Scale topology (100 TB corpus, thousands of queries):
 
@@ -443,39 +542,18 @@ def similarity_multi_query(
       keyed on high-cardinality pairs (no skew key exists — a term shared
       by every doc contributes rows spread over all doc ids).
 
-    Broadcast guard: the plan above ships the union of all query terms to
-    every executor, which stops being viable when the query battery's
+    ``shuffled``: the broadcast plan ships the union of all query terms
+    to every executor, which stops being viable when the battery's
     vocabulary no longer fits executor memory (tens of thousands of
-    queries). A cheap probe — ``sum(q_len)`` over the query rows only, a
-    point-lookup aggregate, never a corpus scan, kept for the last
-    battery in one resident slot of the corpus — counts the term upper
-    bound; above ``broadcast_term_limit`` the operator switches to the
-    shuffled plan: corpus shingles explode fully and shuffle-join the
-    exploded query terms on ``term`` (both sides hash-partitioned; AQE's
-    runtime bloom filter can still prune corpus rows early).
-    Result-identical to the broadcast plan (pytest-pinned with a forced
-    threshold); ``stats['multi_query_plan']`` records the choice.
-
-    Every query id must be of the corpus's id type (:func:`_checked_ids`);
-    one that names no document scores nothing.
-    """
-    # a tuple of checked ids: consumed twice (keys + memo key)
-    query_ids = tuple(_checked_ids(documents, query_ids))
+    queries). The shuffled plan explodes the corpus shingles fully and
+    shuffle-joins the exploded query terms on ``term`` (both sides
+    hash-partitioned; AQE's runtime bloom filter can still prune corpus
+    rows early). The two plans answer the same rows."""
     docs = _shingle_sets(documents)
     # one key row per distinct id, as isin matched each query doc once
     qset = _query_side(docs, list(dict.fromkeys(query_ids)))
     qterms = qset.select("qid", "q_len", F.explode("q_set").alias("term"))
-    # one slot, (query_ids, n_terms) of the last battery probed: a
-    # battery sent again skips the probe, and a stream of fresh ones
-    # holds one entry, not one per battery
-    slot = resident(documents, "multi_query_probe", lambda: [None])
-    probe = slot[0]  # one read: another thread may replace the slot
-    if probe is None or probe[0] != query_ids:
-        probe = slot[0] = (query_ids, qset.agg(F.sum("q_len")).first()[0] or 0)
-    n_terms = probe[1]
-    if n_terms <= broadcast_term_limit:
-        if stats is not None:
-            stats["multi_query_plan"] = "broadcast"
+    if not shuffled:
         all_terms = qset.agg(
             F.array_distinct(F.flatten(F.collect_list("q_set"))).alias("all_q")
         )
@@ -486,8 +564,6 @@ def similarity_multi_query(
         )
         qterms = F.broadcast(qterms)
     else:
-        if stats is not None:
-            stats["multi_query_plan"] = "shuffled"
         kept = docs.select(
             "doc_id",
             F.size("shingle_set").alias("sz_d"),
@@ -556,6 +632,30 @@ class _CorpusIndex:
         i = bisect.bisect_left(self.ids, q)  # ids: a sorted list or array
         return i if i < len(self.ids) and self.ids[i] == q else -1
 
+    def _gather(self, row: int):
+        """``(df, postings)`` of the query document at ``row``: the df of
+        each of its terms, and every posting of those terms, concatenated
+        (the j-th posting of term t is ``term_docs[term_ptr[t] + j]``)."""
+        import numpy as np
+
+        terms = self.doc_terms[self.doc_ptr[row] : self.doc_ptr[row + 1]]
+        lengths = self.df[terms]
+        ends = np.cumsum(lengths)
+        shift = np.repeat(self.term_ptr[terms] - (ends - lengths), lengths)
+        return lengths, self.term_docs[shift + np.arange(len(shift))]
+
+    def overlaps(self, row: int):
+        """``(cand, inter)``: every row other than ``row`` that shares a
+        term with the query document at ``row``, ascending, and its
+        ``|D∩Q|``."""
+        import numpy as np
+
+        _, postings = self._gather(row)
+        inter = np.bincount(postings, minlength=len(self.doc_ptr) - 1)
+        inter[row] = 0
+        cand = np.flatnonzero(inter)
+        return cand, inter[cand]
+
     def scores(self, row: int, mode: str, n: int | None):
         """Every document that scores against the query document at
         ``row``, as ``(rows, scores)`` in ascending row (``doc_id``)
@@ -564,30 +664,21 @@ class _CorpusIndex:
         own row."""
         import numpy as np
 
-        lo, hi = self.doc_ptr[row], self.doc_ptr[row + 1]
-        terms = self.doc_terms[lo:hi]
-        q_len = hi - lo
+        q_len = self.doc_ptr[row + 1] - self.doc_ptr[row]
+        if mode == "jaccard":
+            cand, inter = self.overlaps(row)
+            sizes = np.diff(self.doc_ptr)
+            return cand, inter / (sizes[cand] + q_len - inter)
         n_rows = len(self.doc_ptr) - 1
-        # every posting of the query's terms, concatenated: the j-th
-        # posting of term t is term_docs[term_ptr[t] + j]
-        lengths = self.df[terms]
-        ends = np.cumsum(lengths)
-        shift = np.repeat(self.term_ptr[terms] - (ends - lengths), lengths)
-        postings = self.term_docs[shift + np.arange(len(shift))]
+        lengths, postings = self._gather(row)
         inter = np.bincount(postings, minlength=n_rows)  # len1 = |D∩Q|
-        if mode == "parity":
-            # s: the shared terms that survive the df ∉ {1, n} prune
-            kept = (lengths != 1) & (lengths != (n_rows if n is None else n))
-            s = np.bincount(postings[np.repeat(kept, lengths)], minlength=n_rows)
-            s[row] = 0  # U2: the query's own row
-            cand = np.flatnonzero(s)
-            s, len1 = s[cand], inter[cand]
-            return cand, np.where(s == len1 + q_len, 1.0, s / (len1 + q_len - s))
-        sizes = np.diff(self.doc_ptr)
-        inter[row] = 0
-        cand = np.flatnonzero(inter)
-        inter = inter[cand]
-        return cand, inter / (sizes[cand] + q_len - inter)
+        # s: the shared terms that survive the df ∉ {1, n} prune
+        kept = (lengths != 1) & (lengths != (n_rows if n is None else n))
+        s = np.bincount(postings[np.repeat(kept, lengths)], minlength=n_rows)
+        s[row] = 0  # U2: the query's own row
+        cand = np.flatnonzero(s)
+        s, len1 = s[cand], inter[cand]
+        return cand, np.where(s == len1 + q_len, 1.0, s / (len1 + q_len - s))
 
     def top_k(self, row: int, k: int, mode: str, n: int | None):
         """The top ``k`` ``(doc_ids, scores)`` of :meth:`scores`, by score

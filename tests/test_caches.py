@@ -239,8 +239,8 @@ def _fresh_copy(spark, docs):
 
 def test_resident_shingle_sets_reused_and_exact(spark, monkeypatch):
     """Repeated scoring on one corpus frame through the Spark plans (the
-    single-query one forced by reporting no index, as for a corpus the
-    index cannot hold) reads one persisted shingle frame (an
+    single- and multi-query ones, forced by reporting no index, as for a
+    corpus the index cannot hold) reads one persisted shingle frame (an
     InMemoryTableScan, not a re-tokenizing scan) and answers exactly what
     a never-cached copy of the corpus answers."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
@@ -482,15 +482,16 @@ def test_resident_finalizer_tolerates_stopped_session():
 
 
 def test_multi_query_probe_memo_holds_the_last_battery(spark, monkeypatch):
-    """similarity_multi_query's broadcast-guard probe is remembered for
-    the last battery only: the same battery sent again runs no probe,
-    and a stream of fresh batteries leaves one memo entry, not one per
-    battery."""
+    """similarity_multi_query's broadcast-guard probe (its Spark plan's,
+    forced by reporting no index) is remembered for the last battery
+    only: the same battery sent again runs no probe, and a stream of
+    fresh batteries leaves one memo entry, not one per battery."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
     from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
 
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
     docs = spark.createDataFrame(
         [(i, f"probe word{i} alpha beta gamma {i}") for i in range(8)],
         "doc_id long, text string",
@@ -572,20 +573,28 @@ def _compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def test_warm_requests_compile_no_new_code(spark):
+def test_warm_requests_compile_no_new_code(spark, monkeypatch):
     """The query id is bound as data, so requests for different ids run
     one plan and one set of generated classes: by the third id, Spark's
-    codegen cache answers every stage and nothing is compiled."""
+    codegen cache answers every stage and nothing is compiled. The
+    ``"multi"`` leg runs the multi-query Spark plan, forced by reporting
+    no index; ``"multi_indexed"`` is its answer from the index."""
     from similarity_search_with_hadoop_mapreduce_spark.operators import (
         similarity as S,
     )
     from similarity_search_with_hadoop_mapreduce_spark.sources.tables import load_table
 
+    def multi_plan(d, q):
+        with monkeypatch.context() as m:
+            m.setattr(S, "_corpus_index", lambda documents: None)
+            return S.similarity_multi_query(d, [q, q + 7])
+
     docs = load_table(spark, SF, "documents")
     ops = {
         "parity": lambda d, q: S.top_k_similar(d, q, k=10),
         "jaccard": lambda d, q: S.similarity_to_query(d, q, mode="jaccard"),
-        "multi": lambda d, q: S.similarity_multi_query(d, [q, q + 7]),
+        "multi": multi_plan,
+        "multi_indexed": lambda d, q: S.similarity_multi_query(d, [q, q + 7]),
     }
     ids = (3, 11, 19)
     answers = {}
@@ -595,17 +604,21 @@ def test_warm_requests_compile_no_new_code(spark):
             answers[name, q] = sorted(op(docs, q).collect())
             assert answers[name, q]  # a non-trivial answer
         assert _compiles(spark) == before, name  # the third id compiled nothing
+    for q in ids:
+        assert answers["multi", q] == answers["multi_indexed", q], q
     fresh = _fresh_copy(spark, docs)
     for (name, q), rows in answers.items():
         assert rows == sorted(ops[name](fresh, q).collect()), (name, q)
 
 
-def test_query_id_binding_edge_cases(spark, tmp_path):
+def test_query_id_binding_edge_cases(spark, tmp_path, monkeypatch):
     """Ids reach the plan as literal rows of the corpus's doc_id type:
     bigint ids beyond the int range, and string ids holding a space or
     '%', score as the reference does; a repeated id scores once; an id
     absent from the corpus, like an empty id list, matches no query
-    document and yields an empty result."""
+    document and yields an empty result. A multi-query battery answers
+    alike from the index and from both Spark plans (forced by reporting
+    no index, and the broadcast limit)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -618,6 +631,18 @@ def test_query_id_binding_edge_cases(spark, tmp_path):
     )
     from tests.reference_sim import jaccard_similarity, mr_similarity
 
+    def multi_query(frame, battery):
+        """The battery's sorted rows, equal from the index and from the
+        broadcast and shuffled Spark plans."""
+        rows = sorted(S.similarity_multi_query(frame, battery).collect())
+        for limit in (S._BROADCAST_TERM_LIMIT, -1):
+            with monkeypatch.context() as m:
+                m.setattr(S, "_corpus_index", lambda documents: None)
+                m.setattr(S, "_BROADCAST_TERM_LIMIT", limit)
+                plan = S.similarity_multi_query(frame, battery).collect()
+            assert sorted(plan) == rows, (battery, limit)
+        return rows
+
     def check(frame, corpus, q):
         got = {r.doc_id: r.score for r in S.similarity_to_query(frame, q).collect()}
         want = mr_similarity(corpus, q)
@@ -628,19 +653,17 @@ def test_query_id_binding_edge_cases(spark, tmp_path):
             for r in S.similarity_to_query(frame, q, mode="jaccard").collect()
         }
         assert got == pytest.approx(jaccard_similarity(corpus, q), rel=1e-12)
-        multi = S.similarity_multi_query(frame, [q]).collect()
+        multi = multi_query(frame, [q])
         assert {r.doc_id for r in multi} == set(got)
         assert {r.query_id for r in multi} == {str(q)}
         # a repeated id scores once, as a one-off id does
-        assert sorted(S.similarity_multi_query(frame, [q, q]).collect()) == sorted(
-            multi
-        )
+        assert multi_query(frame, [q, q]) == multi
 
     def assert_empty(frame, q):
         assert S.similarity_to_query(frame, q).collect() == []
         assert S.similarity_to_query(frame, q, mode="jaccard").collect() == []
         assert S.top_k_similar(frame, q, k=3).collect() == []
-        assert S.similarity_multi_query(frame, [q]).collect() == []
+        assert multi_query(frame, [q]) == []
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -666,7 +689,7 @@ def test_query_id_binding_edge_cases(spark, tmp_path):
     check(docs, corpus, base + 3)
     for absent in (base + 99, 0, -1):
         assert_empty(docs, absent)
-    assert S.similarity_multi_query(docs, []).collect() == []
+    assert multi_query(docs, []) == []
 
     # string ids from file names (load_corpus_dir)
     names = ["query", "my doc", "100%", "p+q", "other"]

@@ -198,12 +198,14 @@ def test_property_parity_random_corpora(spark, corpus):
         assert 0.0 < v <= 1.0
 
 
-def test_multi_query_consistent_with_single_query_jaccard(spark):
+def test_multi_query_consistent_with_single_query_jaccard(spark, monkeypatch):
     """similarity_multi_query's jaccard column must equal the flagship's
     jaccard mode per query (same |D∩Q| / |D∪Q|, no pruning quirks), and
-    its containment column must equal |D∩Q| / |Q| from the harness."""
-    from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
-        similarity_multi_query,
+    its containment column must equal |D∩Q| / |Q| from the harness: the
+    answer from the index, and from both Spark plans (forced by
+    reporting no index, and the broadcast limit)."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
     )
 
     corpus = {
@@ -213,10 +215,19 @@ def test_multi_query_consistent_with_single_query_jaccard(spark):
         "d3": "the quick brown fox jumps over the lazy dog exactly",
     }
     df = _corpus_df(spark, corpus)
-    multi = {
-        (r.doc_id, r.query_id): (r.containment, r.jaccard)
-        for r in similarity_multi_query(df, ["q", "d1"]).collect()
-    }
+
+    def answer():
+        return {
+            (r.doc_id, r.query_id): (r.containment, r.jaccard)
+            for r in S.similarity_multi_query(df, ["q", "d1"]).collect()
+        }
+
+    multi = answer()
+    for limit in (S._BROADCAST_TERM_LIMIT, -1):
+        with monkeypatch.context() as m:
+            m.setattr(S, "_corpus_index", lambda documents: None)
+            m.setattr(S, "_BROADCAST_TERM_LIMIT", limit)
+            assert answer() == multi, limit
     for qid in ("q", "d1"):
         single = _spark_scores(spark, corpus, query_id=qid, mode="jaccard")
         multi_q = {d: j for (d, q), (_, j) in multi.items() if q == qid}
@@ -227,13 +238,15 @@ def test_multi_query_consistent_with_single_query_jaccard(spark):
             assert math.isclose(cont, inter / len(qset), rel_tol=1e-12)
 
 
-def test_multi_query_shuffled_fallback_equals_broadcast_plan(spark):
-    """Above the broadcast-term limit the operator switches to the
-    shuffled-join plan; a forced-low threshold pins exact result equality
-    of the two physical plans on the same batch."""
-    from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
-        similarity_multi_query,
+def test_multi_query_shuffled_fallback_equals_broadcast_plan(spark, monkeypatch):
+    """Above the broadcast-term limit the operator's Spark plan switches
+    to the shuffled join; a forced-low limit pins exact result equality
+    of the two physical plans on the same batch, and of both with the
+    index's answer. The Spark plan is forced by reporting no index."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
     )
+    from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
 
     corpus = {
         "q": "the quick brown fox jumps over the lazy dog",
@@ -248,18 +261,15 @@ def test_multi_query_shuffled_fallback_equals_broadcast_plan(spark):
         r.doc_id, r.query_id, r.shared,
         round(r.containment, 12), round(r.jaccard, 12),
     )
-    stats_b, stats_s = {}, {}
-    broad = sorted(
-        map(key, similarity_multi_query(df, ["q", "q2"], stats=stats_b).collect())
-    )
-    shuf = sorted(
-        map(
-            key,
-            similarity_multi_query(
-                df, ["q", "q2"], broadcast_term_limit=1, stats=stats_s
-            ).collect(),
-        )
-    )
-    assert stats_b["multi_query_plan"] == "broadcast"
-    assert stats_s["multi_query_plan"] == "shuffled"
+    indexed = sorted(map(key, S.similarity_multi_query(df, ["q", "q2"]).collect()))
+    with monkeypatch.context() as m:
+        m.setattr(S, "_corpus_index", lambda documents: None)
+        broad_df = S.similarity_multi_query(df, ["q", "q2"])
+        m.setattr(S, "_BROADCAST_TERM_LIMIT", 1)
+        shuf_df = S.similarity_multi_query(df, ["q", "q2"])
+    assert "ShuffledHashJoin" not in explain_string(broad_df)
+    assert "ShuffledHashJoin" in explain_string(shuf_df)
+    broad = sorted(map(key, broad_df.collect()))
+    shuf = sorted(map(key, shuf_df.collect()))
     assert broad == shuf and broad
+    assert indexed == broad

@@ -90,12 +90,16 @@ def test_minhash_lsh_star_mode_single_subtree(spark):
     assert set(stats) == {"observation", "overflow_mode"}
 
 
-def test_multi_query_one_pair_shuffle_and_broadcast_query_side(spark):
-    from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
-        similarity_multi_query,
+def test_multi_query_one_pair_shuffle_and_broadcast_query_side(spark, monkeypatch):
+    """The multi-query Spark plan's shape, forced by reporting no index
+    (an indexable corpus is answered from the index)."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
     )
 
-    df = similarity_multi_query(_docs(spark), [0, 1, 2])
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
+    df = S.similarity_multi_query(_docs(spark), [0, 1, 2])
+    assert "ShuffledHashJoin" not in explain_string(df)  # the broadcast plan
     # the union-of-query-terms scalar agg + the final pair count; the
     # corpus side itself never shuffles before aggregation
     assert shuffle_exchange_count(df) == 2
@@ -535,23 +539,23 @@ def test_corpus_ops_entries_pass_scale_audit(spark):
     assert offenders == {}, offenders
 
 
-def test_multi_query_shuffled_branch_hash_joins_no_corpus_sort(spark):
-    """r8's one real 10x-rehearsal bug, pinned (r9): above the broadcast
-    term limit the pair join must build the hash side on the tiny query
-    table (shuffle_hash hint, similarity.py) — a sort-merge join would
-    SORT the exploded corpus stream per partition (measured 2.9 -> 0.7 s
-    at the 10x corpus when fixed). A Spark upgrade or AQE change that
-    silently drops the hint back to sort-merge fails here."""
-    from similarity_search_with_hadoop_mapreduce_spark.operators.similarity import (
-        similarity_multi_query,
+def test_multi_query_shuffled_branch_hash_joins_no_corpus_sort(spark, monkeypatch):
+    """A 10x-rehearsal bug, pinned: above the broadcast term limit the
+    pair join must build the hash side on the tiny query table
+    (shuffle_hash hint, similarity.py) — a sort-merge join would SORT the
+    exploded corpus stream per partition (measured 2.9 -> 0.7 s at the
+    10x corpus when fixed). A Spark upgrade or AQE change that silently
+    drops the hint back to sort-merge fails here. The Spark plan is
+    forced by reporting no index, the shuffled one by a zero limit."""
+    from similarity_search_with_hadoop_mapreduce_spark.operators import (
+        similarity as S,
     )
 
-    stats = {}
-    df = similarity_multi_query(
-        _docs(spark), [0, 1, 2], broadcast_term_limit=0, stats=stats
-    )
-    assert stats["multi_query_plan"] == "shuffled"
+    monkeypatch.setattr(S, "_corpus_index", lambda documents: None)
+    monkeypatch.setattr(S, "_BROADCAST_TERM_LIMIT", 0)
+    df = S.similarity_multi_query(_docs(spark), [0, 1, 2])
     plan = explain_string(df)
+    # the shuffled plan: the query terms are hash-joined, not broadcast
     assert "ShuffledHashJoin" in plan
     # no sort-merge anywhere in the shuffled branch: the only Sort a
     # SMJ would introduce sits directly on the wide corpus term stream

@@ -1,9 +1,10 @@
-"""top_k_similar's resident index against the Spark plan it replaces and
-against the pure-Python reference (tests/reference_sim.py).
+"""The similarity operators' resident index against the Spark plans it
+replaces and against the pure-Python reference (tests/reference_sim.py).
 
-The Spark plan is forced by patching ``similarity._corpus_index`` to
-report no index, the way the operator falls back when a corpus cannot
-be indexed; there is no user-facing switch."""
+A Spark plan is forced by patching ``similarity._corpus_index`` to
+report no index, the way the operators fall back when a corpus cannot
+be indexed, and the multi-query plan's choice by patching
+``similarity._BROADCAST_TERM_LIMIT``; there is no user-facing switch."""
 
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ from hypothesis import strategies as st
 from similarity_search_with_hadoop_mapreduce_spark.operators import similarity as S
 from similarity_search_with_hadoop_mapreduce_spark.plans import explain_string
 from similarity_search_with_hadoop_mapreduce_spark.sources import tables as T
-from tests.reference_sim import jaccard_similarity, mr_similarity
+from tests.reference_sim import jaccard_similarity, mr_similarity, shingle_set
 from tests.test_fixtures import SF
 
 KS = (0, 1, 3, 10, 50)
@@ -59,6 +60,67 @@ def _scores_indexed(*args, **kwargs):
     df = S.similarity_to_query(*args, **kwargs)
     assert "LocalTableScan" in explain_string(df)
     return df
+
+
+def _multi_rows(df):
+    return sorted(
+        (r.doc_id, r.query_id, r.shared, r.containment, r.jaccard)
+        for r in df.collect()
+    )
+
+
+def _multi_spark_plan(monkeypatch, docs, battery, shuffled: bool):
+    """similarity_multi_query's Spark plan: the index gate forced off,
+    and the broadcast limit set below or above any battery's terms."""
+    with monkeypatch.context() as m:
+        m.setattr(S, "_corpus_index", lambda documents: None)
+        m.setattr(S, "_BROADCAST_TERM_LIMIT", -1 if shuffled else 2**62)
+        df = S.similarity_multi_query(docs, battery)
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    # (a battery with no id in the id type's range has no key rows, and
+    # Spark optimizes its plan into an empty local relation)
+    if any(S._in_range(id_type, q) for q in battery):
+        plan = explain_string(df)
+        assert "InMemoryTableScan" in plan  # the resident sets
+        assert ("ShuffledHashJoin" in plan) == shuffled
+    return df
+
+
+def _multi_indexed(docs, battery):
+    df = S.similarity_multi_query(docs, battery)
+    assert "LocalTableScan" in explain_string(df)
+    return df
+
+
+def _multi_reference(corpus, battery):
+    """``(doc_id, query_id, shared, containment, jaccard)`` of every
+    document sharing a trigram with a query of ``battery``, sorted."""
+    rows = []
+    for q in dict.fromkeys(battery):
+        if q not in corpus:
+            continue
+        qset = shingle_set(corpus[q])
+        for d, text in corpus.items():
+            dset = shingle_set(text)
+            shared = len(dset & qset)
+            if d != q and shared:
+                rows.append(
+                    (d, str(q), shared, shared / len(qset), shared / len(dset | qset))
+                )
+    return sorted(rows)
+
+
+def _check_multi(monkeypatch, docs, corpus, battery):
+    """The index, both Spark plans and the reference answer ``battery``
+    alike, with one schema; returns the answer."""
+    got = _multi_indexed(docs, battery)
+    want = _multi_reference(corpus, battery)
+    assert _multi_rows(got) == want
+    for shuffled in (False, True):
+        plan = _multi_spark_plan(monkeypatch, docs, battery, shuffled)
+        assert plan.schema == got.schema
+        assert _multi_rows(plan) == want, shuffled
+    return want
 
 
 def _reference(corpus, q, k, mode, n=None):
@@ -146,6 +208,28 @@ def test_index_equals_spark_plan_and_reference(spark, monkeypatch, case, k, extr
         got = sorted(_rows(scores))
         assert got == sorted(_rows(plan)), mode
         assert got == _reference(text, q, len(corpus), mode, total), mode
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow, HealthCheck.function_scoped_fixture
+    ],
+)
+@given(corpora(), st.lists(st.integers(0, 7), max_size=4))
+def test_multi_query_index_equals_spark_plans_and_reference(
+    spark, monkeypatch, case, picks
+):
+    """A battery of present, absent and repeated ids: ``similarity_multi_query``
+    answers from the index exactly what its broadcast and shuffled Spark
+    plans answer, with their schema, and what the reference computes."""
+    corpus, q = case
+    ids = list(corpus) + [q]  # q may be absent
+    battery = [ids[i % len(ids)] for i in picks]
+    docs = _corpus(spark, corpus, "string" if isinstance(q, str) else "bigint")
+    text = {d: t or "" for d, t in corpus.items()}  # NULL text: no shingles
+    _check_multi(monkeypatch, docs, text, battery)
 
 
 TIES = {
@@ -270,9 +354,13 @@ def test_out_of_range_ids_answer_no_rows(spark, monkeypatch):
     for id_type, bits in INT_TYPES:
         half = 2 ** (bits - 1)
         docs = _corpus(spark, BIGINT_CORPUS, id_type)
-        multi = sorted(S.similarity_multi_query(docs, [0]).collect())
+        out = [-half - 1, half, 2**63, 10**40]
+        # multi-query: the index, both Spark plans and the reference
+        multi = _check_multi(monkeypatch, docs, BIGINT_CORPUS, [0])
         assert multi
-        for q in (-half - 1, half, 2**63, 10**40):
+        assert _check_multi(monkeypatch, docs, BIGINT_CORPUS, out) == []
+        assert _check_multi(monkeypatch, docs, BIGINT_CORPUS, out + [0]) == multi
+        for q in out:
             assert S._corpus_index(docs).row(q) == -1
             for mode in ("parity", "jaccard"):
                 assert _rows(_indexed(docs, q, k=10, mode=mode)) == []
@@ -280,8 +368,6 @@ def test_out_of_range_ids_answer_no_rows(spark, monkeypatch):
                     m.setattr(S, "_corpus_index", lambda documents: None)
                     assert _rows(S.top_k_similar(docs, q, k=10, mode=mode)) == []
                 assert S.similarity_to_query(docs, q, mode=mode).collect() == []
-            assert S.similarity_multi_query(docs, [q]).collect() == []
-            assert sorted(S.similarity_multi_query(docs, [q, 0]).collect()) == multi
 
 
 def test_invalid_k_raises_before_spark(spark):
@@ -483,8 +569,8 @@ def test_hostile_string_ids(spark, monkeypatch):
             got = _rows(_indexed(docs, q, k=10, mode=mode))
             assert got and got == _reference(corpus, q, 10, mode), (q, mode)
             assert got == _rows(_spark_plan(monkeypatch, docs, q, k=10, mode=mode))
-    multi = S.similarity_multi_query(docs, HOSTILE_IDS).collect()
-    assert {r.query_id for r in multi} == set(HOSTILE_IDS)
+    multi = _check_multi(monkeypatch, docs, corpus, HOSTILE_IDS)
+    assert {query_id for _, query_id, *_ in multi} == set(HOSTILE_IDS)
 
 
 @pytest.mark.parametrize("id_type, bits", INT_TYPES)
@@ -576,3 +662,116 @@ def test_answer_frame_py4j_commands_constant_in_k(spark, monkeypatch):
         counts[k] = len(sent)
         assert len(df.collect()) == k
     assert counts[1] == counts[50] <= 6, counts
+
+
+def test_multi_query_edge_batteries(spark, monkeypatch):
+    """Bigint and string corpora, batteries of absent, out-of-range,
+    repeated and hostile ids, and the empty battery: the index, both
+    Spark plans and the reference answer alike."""
+    base = 2**40
+    big = {base + d: t for d, t in BIGINT_CORPUS.items()}
+    hostile = {
+        q: f"one two three four five w{i % 3} six seven eight"
+        for i, q in enumerate(HOSTILE_IDS)
+    }
+    cases = (
+        ("bigint", big, [base, base, base + 3, 2**63, -(2**63) - 1, 0, base + 1]),
+        ("bigint", big, [base + 99, 2**63]),
+        ("string", hostile, HOSTILE_IDS + ["a'b", "nope", "", "my%20doc"]),
+    )
+    for id_type, corpus, battery in cases:
+        docs = _corpus(spark, corpus, id_type)
+        want = _check_multi(monkeypatch, docs, corpus, battery)
+        assert bool(want) == any(q in corpus for q in battery)
+        assert _check_multi(monkeypatch, docs, corpus, []) == []
+
+
+def test_multi_query_answer_schema(spark, monkeypatch):
+    """The index's multi-query answer has the Spark plans' schema,
+    nullability included (``shared`` is a count, NOT NULL), on every id
+    type, for a full and an empty battery."""
+    from pyspark.sql.types import (
+        ByteType, DoubleType, IntegerType, LongType, ShortType, StringType,
+        StructField, StructType,
+    )
+
+    def schema(id_type):
+        return StructType([
+            StructField("doc_id", id_type, True),
+            StructField("query_id", StringType(), True),
+            StructField("shared", LongType(), False),
+            StructField("containment", DoubleType(), True),
+            StructField("jaccard", DoubleType(), True),
+        ])
+
+    types = {"tinyint": ByteType(), "smallint": ShortType(), "int": IntegerType(),
+             "bigint": LongType()}
+    cases = [(_corpus(spark, TIES, t), [0, 5], types[t]) for t in types]
+    strings = {str(d): t for d, t in TIES.items()}
+    cases.append((_corpus(spark, strings), ["0", "5"], StringType()))
+    for docs, battery, id_type in cases:
+        for b in ([], battery):
+            assert _multi_indexed(docs, b).schema == schema(id_type)
+        for shuffled in (False, True):
+            plan = _multi_spark_plan(monkeypatch, docs, battery, shuffled)
+            assert plan.schema == schema(id_type)
+
+
+def test_multi_query_first_request_is_the_index_build(spark, monkeypatch):
+    """On a fresh indexable corpus, a first ``similarity_multi_query``
+    runs one Spark job, the index build's scan, and persists nothing: no
+    shingle sets, no probe, no cached RDD. Its answer is the Spark
+    plans'."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")  # no index yet
+    sc = spark.sparkContext
+    cached = sc._jsc.sc().getPersistentRDDs().size()
+    sc.setJobGroup("multi-first", "first multi-query request on a corpus")
+    try:
+        df = _multi_indexed(docs, [0, 3, 5, 3])
+        got = _multi_rows(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("multi-first")) == 1
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
+    values = T._resident_store[docs].values
+    assert "shingle_sets" not in values and "multi_query_probe" not in values
+    assert {r[1] for r in got} == {"0", "3", "5"}
+    for shuffled in (False, True):
+        plan = _multi_spark_plan(monkeypatch, docs, [0, 3, 5], shuffled)
+        assert _multi_rows(plan) == got
+
+
+def test_multi_query_large_answer_runs_the_spark_plan(spark, monkeypatch):
+    """A battery whose answer passes ``_LITERAL_ROW_LIMIT`` rows runs the
+    Spark plan on an indexable corpus, and the index stops counting once
+    it knows: answer rows are never all built as literals. At the limit
+    the index answers; one row above it, the Spark plan does, with the
+    same rows."""
+    corpus = {i: f"one two three four w{i} x{i}" for i in range(120)}
+    docs = _corpus(spark, corpus, "bigint")
+    battery = list(range(90))  # every pair shares "one two three"
+    rows = len(battery) * (len(corpus) - 1)
+    assert rows > S._LITERAL_ROW_LIMIT
+    counts = []
+    overlaps = S._CorpusIndex.overlaps
+
+    def counted(self, row):
+        counts.append(row)
+        return overlaps(self, row)
+
+    with monkeypatch.context() as m:
+        m.setattr(S._CorpusIndex, "overlaps", counted)
+        big = S.similarity_multi_query(docs, battery)
+    assert len(counts) == S._LITERAL_ROW_LIMIT // (len(corpus) - 1) + 1
+    assert "InMemoryTableScan" in explain_string(big)  # the resident sets
+    want = _multi_reference(corpus, battery)
+    assert len(want) == rows and _multi_rows(big) == want
+    small = battery[:3]
+    with monkeypatch.context() as m:
+        m.setattr(S, "_LITERAL_ROW_LIMIT", 3 * (len(corpus) - 1))
+        at = _multi_indexed(docs, small)
+        m.setattr(S, "_LITERAL_ROW_LIMIT", 3 * (len(corpus) - 1) - 1)
+        above = S.similarity_multi_query(docs, small)
+    assert "InMemoryTableScan" in explain_string(above)
+    assert above.schema == at.schema
+    assert _multi_rows(above) == _multi_rows(at) == _multi_reference(corpus, small)
